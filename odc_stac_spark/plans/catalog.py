@@ -2,17 +2,23 @@
 
 ``plans.load.plan_load`` takes a driver-resident item list — fine for the
 reference's scenarios (≤10⁴ items, _stac_load.py:351-352) but not for a
-catalog of 10⁸ items. Here every planning aggregation from SURVEY §2.4
-runs as a DataFrame job over the ``parse_items`` output (itself a
-DataFrame transform over a STAC-geoparquet-style catalog), and only the
-tiny election results are collected (SURVEY §7.3 "100 TB scale deltas"):
+catalog of 10⁸ items. Here planning is ONE grouping-sets aggregation over
+the ``parse_items`` output (itself a DataFrame transform over a
+STAC-geoparquet-style catalog): one scan, and only the small per-set rows
+are collected (SURVEY §7.3 "100 TB scale deltas"). The elections then run
+on the driver over those rows, in one walk like the reference's
+(_stac_load.py:88-477):
 
-- A7 resolution/CRS election  → groupBy + count, top-1 collected
-- A8 bbox union               → min/max aggregate, 1 row collected
-- A1/A3/A5 temporal grouping  → distinct group keys + first-member ts,
-                                #groups rows collected (bounded by time
-                                range, not item count)
-- band meta (S3)              → first() per band, #bands rows collected
+- band meta (S3)              → set (asset_name): first() per band
+- A7 resolution/CRS election  → set (g_crs, gsd): count per grid kind,
+                                voted count desc, gsd asc, crs asc
+- A8 bbox union               → same set: affine min/max per grid kind;
+                                only a catalog holding foreign-CRS grids
+                                runs a second job for their reprojected
+                                footprints
+- A1/A3/A5 temporal grouping  → set (k): first member per group key,
+                                #groups rows (bounded by time range, not
+                                item count), sorted NULLs first
 
 The item stream itself never leaves the cluster:
 ``sources_from_parsed`` maps parsed rows straight onto the
@@ -27,8 +33,10 @@ from typing import Dict, Optional, Sequence, Tuple
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..model import GeoBox, GeoboxTiles, RasterBandMetadata, RasterLoadParams
+from ..session import literal_df
 from .load import DEFAULT_CHUNK, LoadPlan, load_from_sources, resolve_load_cfg
 
 
@@ -151,6 +159,39 @@ def _callable_key_col(fn, has_item_idx: bool) -> F.Column:
     return _key(F.col("id"), F.col("ts"), F.col("properties"), idx_col)
 
 
+#: ``grouping_id()`` of each planning set over the grouping columns
+#: (asset_name, g_crs, gsd, k): a bit per column, most significant first,
+#: set when the set aggregates that column away
+_BANDS, _GRIDS, _GROUPS = 0b0111, 0b1001, 0b1110
+
+
+def _plan_rows(base: DataFrame, key: F.Column, member: F.Column):
+    """The one planning scan → (band rows, grid rows, group rows): per-band
+    metadata, per-(crs, gsd) count and affine bbox, and per-group-key
+    first member, as one ``groupingSets`` aggregation."""
+    rows = (
+        base.withColumn("k", key)
+        .withColumn("m", member)
+        .groupingSets(
+            [["asset_name"], ["g_crs", "gsd"], ["k"]], "asset_name", "g_crs", "gsd", "k"
+        )
+        .agg(
+            F.first("data_type", ignorenulls=True).alias("data_type"),
+            F.first("nodata", ignorenulls=True).alias("nodata"),
+            F.first("unit", ignorenulls=True).alias("unit"),
+            F.count(F.lit(1)).alias("n"),
+            F.min("bb_xmin").alias("x0"),
+            F.min("bb_ymin").alias("y0"),
+            F.max("bb_xmax").alias("x1"),
+            F.max("bb_ymax").alias("y1"),
+            F.min("m").alias("first_m"),
+            F.grouping_id().alias("gid"),
+        )
+        .collect()
+    )
+    return tuple([r for r in rows if r.gid == g] for g in (_BANDS, _GRIDS, _GROUPS))
+
+
 def plan_load_df(
     spark: SparkSession,
     parsed: DataFrame,
@@ -165,7 +206,30 @@ def plan_load_df(
     preserve_original_order: bool = False,
     geopolygon=None,
 ) -> LoadPlan:
-    """Stages 1-6 of the load lifecycle with all aggregations distributed."""
+    """Stages 1-6 of the load lifecycle from one distributed scan."""
+    plan, _ = _plan_load_df(
+        spark, parsed, bands, geobox, bbox, resolution, crs, groupby, chunks,
+        cfg, preserve_original_order, geopolygon,
+    )
+    return plan
+
+
+def _plan_load_df(
+    spark: SparkSession,
+    parsed: DataFrame,
+    bands: Optional[Sequence[str]] = None,
+    geobox: Optional[GeoBox] = None,
+    bbox: Optional[Tuple[float, float, float, float]] = None,
+    resolution: Optional[float] = None,
+    crs: Optional[str] = None,
+    groupby: str = "time",
+    chunks: Tuple[int, int] = (DEFAULT_CHUNK, DEFAULT_CHUNK),
+    cfg: Optional[Dict[str, RasterLoadParams]] = None,
+    preserve_original_order: bool = False,
+    geopolygon=None,
+) -> Tuple[LoadPlan, bool]:
+    """``plan_load_df``, plus whether every source grid the scan saw is in
+    the output CRS (then no source needs a reprojected footprint)."""
     if geobox is not None and any(
         v is not None for v in (bbox, resolution, crs, geopolygon)
     ):
@@ -178,34 +242,32 @@ def plan_load_df(
     if bands is not None:
         base = base.where(F.col("asset_name").isin(list(bands)))
 
+    # the representative ts per group follows the precedence basis —
+    # (ts, id) or input index
+    key = _group_key_col(groupby, has_item_idx="item_idx" in base.columns)
+    if preserve_original_order:
+        _require_item_idx(base)
+        member = F.struct("item_idx", "ts")
+    else:
+        member = F.struct("ts", "id")
+    band_rows, grid_rows, group_rows = _plan_rows(base, key, member)
+
     # solar_day derives longitude from the grid centroid — only valid for
     # geographic coordinates. A projected catalog would silently produce
     # garbage day offsets (meters/15 "hours"), so validate loudly.
-    if groupby == "solar_day":
-        bad = base.where(F.col("g_crs") != "EPSG:4326").limit(1).count()
-        if bad:
-            raise ValueError(
-                "groupby='solar_day' on the catalog path requires EPSG:4326 "
-                "source grids (longitude comes from the grid centroid); "
-                "reproject the footprints or use the list path with "
-                "explicit Item.lon"
-            )
-
-    # band list + per-band metadata: #bands rows
-    meta_rows = (
-        base.groupBy("asset_name")
-        .agg(
-            F.first("data_type", ignorenulls=True).alias("data_type"),
-            F.first("nodata", ignorenulls=True).alias("nodata"),
-            F.first("unit", ignorenulls=True).alias("unit"),
+    if groupby == "solar_day" and any(r.g_crs != "EPSG:4326" for r in grid_rows):
+        raise ValueError(
+            "groupby='solar_day' on the catalog path requires EPSG:4326 "
+            "source grids (longitude comes from the grid centroid); "
+            "reproject the footprints or use the list path with "
+            "explicit Item.lon"
         )
-        .collect()
-    )
-    if not meta_rows:
+
+    if not band_rows:
         raise ValueError("no raster sources in catalog (after band filter)")
     meta = {
         r.asset_name: RasterBandMetadata(r.data_type or "float32", r.nodata, r.unit or "1")
-        for r in meta_rows
+        for r in band_rows
     }
     use_bands = list(bands) if bands is not None else sorted(meta)
     unknown = [b for b in use_bands if b not in meta]
@@ -217,15 +279,10 @@ def plan_load_df(
             # A7 JOINT (crs, gsd) majority vote (reference _most_common_gbox
             # _mdtools.py:726-749; advisor finding: voting gsd over all
             # CRSes can elect a meters resolution for a degrees grid)
-            vote = base
-            if crs is not None:
-                vote = vote.where(F.col("g_crs") == crs)
-            r = (
-                vote.groupBy("g_crs", "gsd")
-                .count()
-                .orderBy(F.desc("count"), F.asc("gsd"), F.asc("g_crs"))
-                .first()
-            )
+            votes = [r for r in grid_rows if crs is None or r.g_crs == crs]
+            if not votes:
+                raise ValueError(f"no source grid in crs={crs!r}: pass resolution=")
+            r = min(votes, key=lambda r: (-r.n, r.gsd, r.g_crs))
             if crs is None:
                 crs = r.g_crs
             if resolution is None:
@@ -238,34 +295,28 @@ def plan_load_df(
             poly_bb, poly_crs = _geopolygon_bbox(geopolygon)
             bbox = _bbox_to_crs(poly_bb, poly_crs, crs)
         if bbox is None:
-            # A8 bbox union, 1 row — foreign-CRS grids contribute their
-            # reprojected footprints (list-path parity)
-            bb = _with_footprints(base, crs).agg(
-                F.min("fp_xmin").alias("x0"),
-                F.min("fp_ymin").alias("y0"),
-                F.max("fp_xmax").alias("x1"),
-                F.max("fp_ymax").alias("y1"),
-            ).first()
-            bbox = (bb.x0, bb.y0, bb.x1, bb.y1)
+            # A8 bbox union: output-CRS grids from their affine bboxes;
+            # foreign-CRS grids contribute reprojected footprints
+            # (list-path parity), which only they pay a job for
+            boxes = [(r.x0, r.y0, r.x1, r.y1) for r in grid_rows if r.g_crs == crs]
+            if any(r.g_crs != crs for r in grid_rows):
+                fb = _with_footprints(base.where(F.col("g_crs") != crs), crs).agg(
+                    F.min("fp_xmin"), F.min("fp_ymin"), F.max("fp_xmax"), F.max("fp_ymax")
+                ).first()
+                boxes.append(tuple(fb))
+            bbox = (
+                min(b[0] for b in boxes),
+                min(b[1] for b in boxes),
+                max(b[2] for b in boxes),
+                max(b[3] for b in boxes),
+            )
         geobox = GeoBox.from_bbox(bbox, resolution, crs)
 
-    # temporal grouping: #groups rows (A1/A3/A5); the representative ts
-    # per group follows the precedence basis — (ts, id) or input index
-    key = _group_key_col(groupby, has_item_idx="item_idx" in base.columns)
-    if preserve_original_order:
-        _require_item_idx(base)
-        member = F.struct("item_idx", "ts")
-    else:
-        member = F.struct("ts", "id")
-    groups = (
-        base.select(key.alias("k"), member.alias("m"))
-        .groupBy("k")
-        .agg(F.min("m").alias("first_m"))
-        .orderBy("k")
-        .collect()
-    )
-    group_keys = [r.k for r in groups]
-    group_ts = [r.first_m.ts for r in groups]
+    # temporal grouping: #groups rows (A1/A3/A5), NULL key first like
+    # Spark's ascending sort
+    group_rows.sort(key=lambda r: (r.k is not None, r.k))
+    group_keys = [r.k for r in group_rows]
+    group_ts = [r.first_m.ts for r in group_rows]
 
     # P4: ring geometry (when given) rides along in the output CRS so the
     # distributed tile binning can prune beyond the bounding box
@@ -281,7 +332,7 @@ def plan_load_df(
         except (NotImplementedError, ValueError):
             aoi = None  # no transform for this CRS pair → bbox semantics
 
-    return LoadPlan(
+    plan = LoadPlan(
         gbox=geobox,
         tiles=GeoboxTiles(geobox, chunks),
         bands=use_bands,
@@ -291,6 +342,7 @@ def plan_load_df(
         groupby=groupby,
         aoi=aoi,
     )
+    return plan, all(r.g_crs == geobox.crs for r in grid_rows)
 
 
 def sources_from_parsed(
@@ -298,22 +350,39 @@ def sources_from_parsed(
 ) -> DataFrame:
     """parsed rows → load_from_sources input columns; the only non-map
     operation is a broadcast join against the #groups-sized key→t map."""
+    return _sources_from_parsed(spark, parsed, plan, groupby, reproject=True)
+
+
+def _sources_from_parsed(
+    spark: SparkSession, parsed: DataFrame, plan: LoadPlan, groupby: str, reproject: bool
+) -> DataFrame:
+    """``sources_from_parsed``; ``reproject=False`` when every source grid
+    is known to be in the output CRS, so the footprints are the affine
+    bboxes and the per-grid footprint join is skipped."""
     base = _with_geom_cols(parsed).where(F.col("asset_name").isin(plan.bands))
     # tile binning (J1) needs the footprint bbox in the OUTPUT CRS:
     # same-CRS rows use the affine bbox; foreign-CRS rows get the
     # densified-boundary reproject (per distinct grid, broadcast back —
     # list-path parity, reference safe_geometry model.py:271-299)
-    base = _with_footprints(base, plan.gbox.crs)
-    rows = [(k, t) for t, k in enumerate(plan.group_keys)]
-    if all(k is None for k in plan.group_keys):
-        # schema inference can't type an all-NULL key column
-        key_map = spark.createDataFrame(rows, "_plan_k string, t bigint")
+    if reproject:
+        base = _with_footprints(base, plan.gbox.crs)
     else:
-        key_map = spark.createDataFrame(rows, ["_plan_k", "t"])
-    t = F.col("g_transform")
+        base = base.select(
+            "*", *[F.col(f"bb_{c}").alias(f"fp_{c}") for c in ("xmin", "ymin", "xmax", "ymax")]
+        )
     keyed = base.withColumn(
         "k", _group_key_col(groupby, has_item_idx="item_idx" in base.columns)
     )
+    # the key map is typed by the key column itself, so an all-NULL key
+    # map (property groupby where no item has the property) still joins
+    key_map = literal_df(
+        spark,
+        [(k, t) for t, k in enumerate(plan.group_keys)],
+        StructType(
+            [StructField("_plan_k", keyed.schema["k"].dataType), StructField("t", LongType())]
+        ),
+    )
+    t = F.col("g_transform")
     return (
         # eqNullSafe: a property-groupby's missing-property group has a
         # NULL key, which a plain equi-join would silently drop
@@ -373,15 +442,21 @@ def load_from_catalog(
     on the driver)."""
     if preserve_original_order:
         _require_item_idx(parsed)
+    # a plan this call builds itself also tells whether any source grid is
+    # foreign to the output CRS; a caller-supplied plan may come from other
+    # rows, so its sources always get reprojected footprints
+    own_crs_only = False
     if plan is None:
-        plan = plan_load_df(
+        plan, own_crs_only = _plan_load_df(
             spark,
             parsed,
             groupby=groupby,
             preserve_original_order=preserve_original_order,
             **plan_kwargs,
         )
-    sources = sources_from_parsed(spark, parsed, plan, groupby=groupby)
+    sources = _sources_from_parsed(
+        spark, parsed, plan, groupby, reproject=not own_crs_only
+    )
     return (
         load_from_sources(sources, plan, preserve_original_order=preserve_original_order),
         plan,

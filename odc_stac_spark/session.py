@@ -10,13 +10,19 @@ ones that matter identically on a 1000-executor cluster:
   the test data; this keeps Spark/DuckDB/pandas agreeing bit-for-bit.
 - shuffle partitions sized by env (32 locally; on a real cluster this is
   left to AQE's coalescing from a high initial number).
+
+``literal_df`` turns a small driver-side table into a DataFrame whose plan
+stays in the JVM.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -46,3 +52,28 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     return builder.getOrCreate()
+
+
+#: driver-side tables up to this many rows / bytes of literal values are
+#: planned as JVM literals (see :func:`literal_df`)
+LITERAL_MAX_ROWS = 1024
+LITERAL_MAX_BYTES = 4 << 20
+
+
+def literal_df(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -> DataFrame:
+    """A small driver-side table as a DataFrame with a JVM-only plan.
+
+    ``createDataFrame(list)`` plans a Python-RDD scan, so every action over
+    it pays a Python worker round trip per partition. Here the rows become
+    an ``inline`` of literal structs cast to ``schema`` (an all-NULL column
+    keeps its type). Past ``LITERAL_MAX_ROWS`` rows or ``LITERAL_MAX_BYTES``
+    of values the plan itself would grow too large, so those tables keep
+    ``createDataFrame`` in one partition."""
+    n_bytes = sum(len(str(v)) for r in rows for v in r)
+    if not rows or len(rows) > LITERAL_MAX_ROWS or n_bytes > LITERAL_MAX_BYTES:
+        return spark.createDataFrame(list(rows), schema).coalesce(1)
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, schema.fields)])
+        for r in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs)))

@@ -44,6 +44,7 @@ from ..model import (
     RasterCollectionMetadata,
     RasterSource,
 )
+from ..session import literal_df
 
 # ---- schema for raw STAC items (S1 scan) ---------------------------------
 
@@ -274,24 +275,14 @@ def stac_dicts_to_items(spark: SparkSession, docs: Iterable[dict]) -> DataFrame:
     SAME column pipeline as the at-scale JSON path (one code path)."""
     import json as _json
 
-    strs = [_json.dumps(d) for d in docs]
-    # JVM-side literal relation instead of createDataFrame(list): the list
-    # path materializes a PYTHON-RDD-backed scan (pickled rows), so EVERY
-    # action re-pays a Python-worker round trip per partition — and the
-    # old coalesce(1) serialized those round trips into one task
+    # a JVM literal relation, not createDataFrame(list): the Python-RDD
+    # scan of the latter re-pays a Python worker round trip on every action
     # (measured: ~4-6 s per action for a 2-document parse on a loaded
-    # sandbox; explode(array(literals)) folds to a JVM LocalRelation and
-    # the same action runs in ~0.5 s). Driver-side dict lists are small
-    # by construction (the at-scale path is read_stac_json); the guard
-    # keeps a pathological huge list off the literal plan.
-    if strs and len(strs) <= 1024:
-        raw = spark.range(0, 1, 1, 1).select(
-            F.explode(F.array(*[F.lit(s) for s in strs])).alias("value")
-        )
-    else:
-        raw = spark.createDataFrame(
-            [(s,) for s in strs], schema="value string"
-        ).coalesce(1)
+    # machine, ~0.5 s as literals). Driver-side dict lists are small by
+    # construction; the at-scale path is read_stac_json.
+    raw = literal_df(
+        spark, [(_json.dumps(d),) for d in docs], StructType([StructField("value", StringType())])
+    )
     return stac_json_to_items(raw)
 
 # media types treated as raster data (reference RASTER_FILE_EXTENSIONS /
@@ -319,28 +310,25 @@ def items_df(
     )
 
 
-def is_raster_data_col(asset: F.Column) -> F.Column:
-    """S4 heuristic as a boolean expression (reference _mdtools.py:182-238):
-    media type image/* or raster container formats; roles must not be
-    thumbnail/overview/metadata; no media type → file extension."""
-    media = F.lower(F.coalesce(asset["type"], F.lit("")))
-    roles = F.coalesce(asset["roles"], F.array())
-    href = F.lower(F.coalesce(asset["href"], F.lit("")))
-    bad_role = F.arrays_overlap(roles, F.array(*[F.lit(r) for r in _NON_DATA_ROLES]))
-    is_media_raster = (
-        media.startswith("image/")
-        | media.contains("geotiff")
-        | media.contains("netcdf")
-        | media.contains("hdf")
-        | media.contains("zarr")
-    )
-    ext = F.element_at(F.split(F.split(href, r"\?").getItem(0), r"\."), -1)
-    is_ext_raster = ext.isin(*_RASTER_EXTS)
-    has_data_role = F.array_contains(roles, "data")
-    return ~bad_role & (
-        is_media_raster
-        | has_data_role
-        | ((media == "") & is_ext_raster)
+def is_raster_data_sql(asset: str) -> str:
+    """S4 heuristic as a SQL boolean over the asset struct named ``asset``
+    (reference _mdtools.py:182-238): media type image/* or raster
+    container formats; roles must not be thumbnail/overview/metadata; no
+    media type → file extension. SQL text, so each use is one parsed
+    expression instead of dozens of py4j Column calls."""
+    media = f"lower(coalesce({asset}.type, ''))"
+    roles = f"coalesce({asset}.roles, array())"
+    href = f"lower(coalesce({asset}.href, ''))"
+    ext = f"element_at(split(split({href}, '[?]')[0], '[.]'), -1)"
+    non_data = ", ".join(f"'{r}'" for r in _NON_DATA_ROLES)
+    exts = ", ".join(f"'{e}'" for e in _RASTER_EXTS)
+    return (
+        f"(NOT arrays_overlap({roles}, array({non_data})) AND ("
+        f"startswith({media}, 'image/') OR contains({media}, 'geotiff')"
+        f" OR contains({media}, 'netcdf') OR contains({media}, 'hdf')"
+        f" OR contains({media}, 'zarr')"
+        f" OR array_contains({roles}, 'data')"
+        f" OR ({media} = '' AND {ext} IN ({exts}))))"
     )
 
 
@@ -414,12 +402,26 @@ def assets_df(items: DataFrame, cfg: Optional[dict] = None) -> DataFrame:
     retry :536-541): when the item declares the projection extension,
     assets without proj data are not raster data — unless that filter
     leaves the item with ZERO data bands, in which case it is waived for
-    the whole item (per-item window, no driver round-trip)."""
+    the whole item. The waiver is an ``exists`` over the item's own asset
+    map, evaluated on the item row before the explode: map-only, no
+    shuffle, no driver round-trip."""
     has_proj_col = (
         F.coalesce(F.col("has_proj"), F.lit(False))
         if "has_proj" in items.columns
         else F.lit(False)
     )
+    ce = _CfgExprs(cfg) if cfg else None
+    if ce is not None:
+        # ignore_proj: treat the item as not declaring the projection
+        # extension (reference check_proj, _mdtools.py:498)
+        has_proj_col = has_proj_col & ~ce.ignore_proj()
+
+    def strict(asset: str) -> str:
+        return (
+            f"({is_raster_data_sql(asset)} AND (NOT has_proj"
+            f" OR ({asset}.proj_shape IS NOT NULL AND {asset}.proj_transform IS NOT NULL)))"
+        )
+
     props_col = (
         F.col("properties")
         if "properties" in items.columns
@@ -428,41 +430,30 @@ def assets_df(items: DataFrame, cfg: Optional[dict] = None) -> DataFrame:
     # item_idx is strictly opt-in: defaulting it to a constant would let
     # preserve_original_order "sort" by shuffle arrival order downstream
     idx_cols = [F.col("item_idx")] if "item_idx" in items.columns else []
+    item_cols = ["id", "collection", "odc_product", "datetime", "start_datetime", "end_datetime"]
     ex = items.select(
-        "id",
-        "collection",
-        "odc_product",
-        "datetime",
-        "start_datetime",
-        "end_datetime",
+        *item_cols,
         props_col.alias("properties"),
         *idx_cols,
         has_proj_col.alias("has_proj"),
+        "assets",
+    ).select(
+        *item_cols,
+        "properties",
+        *idx_cols,
+        "has_proj",
+        F.expr(f"exists(map_values(assets), a -> {strict('a')})").alias("any_strict"),
         F.explode("assets").alias("asset_name", "asset"),
     )
-    ce = _CfgExprs(cfg) if cfg else None
-    if ce is not None:
-        # ignore_proj: treat the item as not declaring the projection
-        # extension (reference check_proj, _mdtools.py:498)
-        ex = ex.withColumn(
-            "has_proj", F.col("has_proj") & ~ce.ignore_proj()
-        )
-    loose = is_raster_data_col(F.col("asset"))
-    has_proj_data = (
-        F.col("asset.proj_shape").isNotNull()
-        & F.col("asset.proj_transform").isNotNull()
+    is_raster = F.expr(
+        f"CASE WHEN any_strict THEN {strict('asset')} ELSE {is_raster_data_sql('asset')} END"
     )
-    strict = loose & (~F.col("has_proj") | has_proj_data)
-    from pyspark.sql import Window
-
-    any_strict = F.max(strict.cast("int")).over(Window.partitionBy("id")) == 1
-    is_raster = F.when(any_strict, strict).otherwise(loose)
     if ce is not None:
         # assets named in band_cfg are data bands unconditionally —
         # before any media-type or proj filtering (reference _keep,
         # _mdtools.py:505-511)
         is_raster = ce.configured_asset() | is_raster
-    return ex.withColumn("is_raster", is_raster)
+    return ex.withColumn("is_raster", is_raster).drop("any_strict")
 
 
 def raster_assets_df(items: DataFrame, cfg: Optional[dict] = None) -> DataFrame:

@@ -17,7 +17,8 @@ from odc_stac_spark.plans.catalog import (
     plan_load_df,
     sources_from_parsed,
 )
-from odc_stac_spark.plans.load import Item, assemble_numpy, load
+from odc_stac_spark.functions.geom import Polygon
+from odc_stac_spark.plans.load import Item, assemble_numpy, load, plan_load
 from odc_stac_spark.sources.stac_items import items_df, parse_items
 
 COG = "image/tiff; application=geotiff; profile=cloud-optimized"
@@ -163,43 +164,21 @@ def _utm_asset(name, seed, origin, shape=(100, 150), res=100.0):
     return a
 
 
-def test_cross_crs_catalog_equals_list_path(spark, tmp_path):
-    """A catalog mixing UTM and WGS84 grids: the majority CRS is elected,
-    foreign sources contribute reprojected footprints to the bbox union
-    and bin onto the right tiles (densified-boundary transform per
-    DISTINCT grid, broadcast back) — pixels equal the list path, which
-    reprojects footprints driver-side."""
-    t0 = T0
+def _cross_crs_catalog(spark, tmp_path):
+    """A catalog mixing two UTM grids and one WGS84 grid over the same
+    area, and the equivalent list-path items."""
     utm_origins = [(400000.0, 8350000.0), (405000.0, 8348000.0)]
     docs = []
+    items = []
     for i, o in enumerate(utm_origins):
         d = catalog_item(i, o)
         d["assets"] = {"red": _utm_asset("red", i, o)}
         docs.append(d)
-    # WGS84 item overlapping the same area (~26.1E..26.25E, 15.05S..14.95S)
-    g = catalog_item(2, (26.1, -14.95))
-    a = synth_asset("red", 2, (26.1, -14.95), shape=(100, 150), res=0.001)
-    a["proj_transform"] = [0.001, 0.0, 26.1, 0.0, -0.001, -14.95]
-    a["proj_epsg"] = 4326
-    a["gsd"] = 0.001
-    g["assets"] = {"red": a}
-    docs.append(g)
-    raw = items_df(spark, docs)
-    path = str(tmp_path / "xcrs.parquet")
-    raw.write.parquet(path)
-    parsed = parse_items(spark, spark.read.parquet(path))
-
-    tiles_df, plan = load_from_catalog(spark, parsed, groupby="time", chunks=(64, 64))
-    assert plan.gbox.crs == f"EPSG:{EPSG}"  # majority vote: 2 UTM vs 1 geo
-    got = assemble_numpy(tiles_df, plan)
-
-    items = []
-    for i, o in enumerate(utm_origins):
         gb = GeoBox((100, 150), (100.0, 0.0, o[0], 0.0, -100.0, o[1]), f"EPSG:{EPSG}")
         items.append(
             Item(
                 id=f"cat-{i:03d}",
-                datetime=t0 + __import__("datetime").timedelta(hours=i),
+                datetime=T0 + timedelta(hours=i),
                 bands={
                     "red": RasterSource(
                         f"synth://red{i}?seed={i}&nodata_every=4",
@@ -209,11 +188,19 @@ def test_cross_crs_catalog_equals_list_path(spark, tmp_path):
                 },
             )
         )
+    # WGS84 item overlapping the same area (~26.1E..26.25E, 15.05S..14.95S)
+    g = catalog_item(2, (26.1, -14.95))
+    a = synth_asset("red", 2, (26.1, -14.95), shape=(100, 150), res=0.001)
+    a["proj_transform"] = [0.001, 0.0, 26.1, 0.0, -0.001, -14.95]
+    a["proj_epsg"] = 4326
+    a["gsd"] = 0.001
+    g["assets"] = {"red": a}
+    docs.append(g)
     geo_gb = GeoBox((100, 150), (0.001, 0.0, 26.1, 0.0, -0.001, -14.95), "EPSG:4326")
     items.append(
         Item(
             id="cat-002",
-            datetime=t0 + __import__("datetime").timedelta(hours=2),
+            datetime=T0 + timedelta(hours=2),
             bands={
                 "red": RasterSource(
                     "synth://red2?seed=2&nodata_every=4",
@@ -223,12 +210,33 @@ def test_cross_crs_catalog_equals_list_path(spark, tmp_path):
             },
         )
     )
+    raw = items_df(spark, docs)
+    path = str(tmp_path / "xcrs.parquet")
+    raw.write.parquet(path)
+    return parse_items(spark, spark.read.parquet(path)), items
+
+
+def test_cross_crs_catalog_equals_list_path(spark, tmp_path):
+    """A catalog mixing UTM and WGS84 grids: the majority CRS is elected,
+    foreign sources contribute reprojected footprints to the bbox union
+    and bin onto the right tiles (densified-boundary transform per
+    DISTINCT grid, broadcast back) — pixels equal the list path, which
+    reprojects footprints driver-side. A caller-supplied plan gets the
+    same reprojected footprints."""
+    parsed, items = _cross_crs_catalog(spark, tmp_path)
+    tiles_df, plan = load_from_catalog(spark, parsed, groupby="time", chunks=(64, 64))
+    assert plan.gbox.crs == f"EPSG:{EPSG}"  # majority vote: 2 UTM vs 1 geo
+    got = assemble_numpy(tiles_df, plan)
+
     tiles2, plan2 = load(spark, items, groupby="time", chunks=(64, 64))
     assert plan.gbox == plan2.gbox
     want = assemble_numpy(tiles2, plan2)
     np.testing.assert_array_equal(got["red"], want["red"])
     # the foreign item actually contributed pixels (t=2 slice not all nodata)
     assert (got["red"][2] != -1).any()
+
+    tiles3, _ = load_from_catalog(spark, parsed, groupby="time", plan=plan)
+    np.testing.assert_array_equal(assemble_numpy(tiles3, plan)["red"], got["red"])
 
 
 def test_preserve_original_order_catalog(spark, tmp_path):
@@ -288,8 +296,6 @@ def test_sources_frame_never_collects_items(spark, parsed_catalog):
 def test_catalog_geopolygon_equals_list_path(spark, parsed_catalog):
     """P4 on the 100 TB path: geopolygon= drives the output grid AND
     prunes exploded tiles distributedly; pixels equal the list path."""
-    from odc_stac_spark.functions.geom import Polygon
-
     tri = Polygon(
         [[(100.0, 0.0), (1500.0, 100.0), (200.0, 1100.0)]], crs=f"EPSG:{EPSG}"
     )
@@ -353,3 +359,154 @@ def test_groupby_callable_catalog_equals_list_path(spark, tmp_path):
     assert set(got) == set(want)
     for b in got:
         np.testing.assert_array_equal(got[b], want[b])
+
+
+def _jobs_in(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_plan_is_one_scan_on_single_crs_catalog(spark, parsed_catalog):
+    """Planning a single-CRS catalog is ONE collect over the parsed rows:
+    band metadata, the grid vote, the bbox and the group keys all come
+    from one grouping-sets aggregation. Under AQE the shuffle-map stage
+    runs as a job of its own, hence up to two jobs."""
+    parsed, _ = parsed_catalog
+    plan, n_jobs = _jobs_in(
+        spark, "plan-single-crs", lambda: plan_load_df(spark, parsed, groupby="time")
+    )
+    assert plan.gbox.bbox() == (0.0, -200.0, 1600.0, 1200.0)
+    assert 1 <= n_jobs <= 2
+
+
+def test_cross_crs_plan_unions_reprojected_footprints(spark, tmp_path):
+    """The other side of the one-scan threshold: foreign-CRS grids make
+    the planner run its footprint job, and their reprojected footprints
+    widen the bbox exactly as on the list path."""
+    parsed, items = _cross_crs_catalog(spark, tmp_path)
+    plan, n_jobs = _jobs_in(
+        spark, "plan-cross-crs", lambda: plan_load_df(spark, parsed, groupby="time")
+    )
+    assert n_jobs > 2
+    assert plan.gbox == plan_load(items, groupby="time", chunks=plan.tiles.tile_shape).gbox
+    utm_only = plan_load(items[:2], groupby="time", chunks=plan.tiles.tile_shape).gbox
+    assert plan.gbox != utm_only
+
+
+GEO = "EPSG:4326"
+# (grid origin, datetime, platform): the solar-day offsets (+0 h at 10E,
+# +10 h at 150E) merge items 0-2 into one local day and move item 3 to
+# the next; item 2 has no platform (the NULL property group)
+GEO_ITEMS = [
+    ((10.0, 5.0), datetime(2020, 6, 6, 22, 0), "sat-a"),
+    ((10.2, 5.1), datetime(2020, 6, 6, 23, 0), "sat-b"),
+    ((150.0, -30.0), datetime(2020, 6, 6, 13, 0), None),
+    ((150.3, -30.2), datetime(2020, 6, 6, 15, 0), "sat-a"),
+]
+
+
+def _geo_asset(name, seed, origin):
+    a = synth_asset(name, seed, origin, shape=(50, 60), res=0.01)
+    a["proj_epsg"] = 4326
+    return a
+
+
+@pytest.fixture(scope="module")
+def geo_catalog(spark, tmp_path_factory):
+    """A WGS84 catalog (parquet at rest) and its list-path items."""
+    docs, items = [], []
+    for i, (o, ts, platform) in enumerate(GEO_ITEMS):
+        props = {} if platform is None else {"platform": platform}
+        d = catalog_item(i, o, ts=ts)
+        d["assets"] = {b: _geo_asset(b, 10 * i + j, o) for j, b in enumerate(("nir", "red"))}
+        d["properties"] = props
+        docs.append(d)
+        gbox = GeoBox((50, 60), (0.01, 0.0, o[0], 0.0, -0.01, o[1]), GEO)
+        items.append(
+            Item(
+                id=f"cat-{i:03d}",
+                datetime=ts,
+                bands={
+                    b: RasterSource(
+                        d["assets"][b]["href"], geobox=gbox, meta=RasterBandMetadata("int32", -1.0)
+                    )
+                    for b in ("nir", "red")
+                },
+                lon=o[0] + 0.3,  # grid centroid, as the catalog derives it
+                props=props,
+            )
+        )
+    path = str(tmp_path_factory.mktemp("geo") / "geo.parquet")
+    items_df(spark, docs).write.parquet(path)
+    return parse_items(spark, spark.read.parquet(path)), items
+
+
+def _platform_day(item, idx):
+    return f"{item.props.get('platform')}-{item.datetime.day}"
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        dict(groupby="time"),
+        dict(groupby="solar_day"),
+        dict(groupby="platform"),
+        dict(groupby=_platform_day),
+        dict(groupby="time", crs=GEO),
+        dict(groupby="time", crs="EPSG:3857", resolution=5000.0),
+        dict(groupby="time", bands=["red"]),
+        dict(
+            groupby="time",
+            geopolygon=Polygon([[(10.1, 5.0), (150.2, -30.1), (12.0, -20.0)]], crs=GEO),
+        ),
+    ],
+    ids=["time", "solar_day", "property", "callable", "crs", "crs_foreign", "bands", "geopolygon"],
+)
+def test_catalog_plan_equals_list_plan(spark, geo_catalog, kw):
+    """plan_load_df's one-scan elections give the list path's plan: grid,
+    bands, band config, group keys (NULL first) and group timestamps."""
+    parsed, items = geo_catalog
+    got = plan_load_df(spark, parsed, chunks=(256, 256), **kw)
+    want = plan_load(items, chunks=(256, 256), **kw)
+    assert got.gbox == want.gbox
+    assert got.bands == want.bands
+    assert got.cfg == want.cfg
+    assert got.group_keys == want.group_keys
+    assert got.group_ts == want.group_ts
+    assert (got.aoi is None) == (want.aoi is None)
+
+
+def test_geo_plan_groups(spark, geo_catalog):
+    """The parity cases above really group: solar days merge items across
+    UTC dates, and the missing-property group sorts first."""
+    parsed, _ = geo_catalog
+    solar = plan_load_df(spark, parsed, groupby="solar_day")
+    assert [str(k) for k in solar.group_keys] == ["2020-06-06", "2020-06-07"]
+    assert solar.group_ts == [datetime(2020, 6, 6, 13, 0), datetime(2020, 6, 6, 15, 0)]
+    prop = plan_load_df(spark, parsed, groupby="platform")
+    assert prop.group_keys == [None, "sat-a", "sat-b"]
+
+
+@pytest.mark.parametrize(
+    "kw, match",
+    [
+        (dict(bands=["swir"]), "no raster sources"),
+        (dict(bands=["red", "swir"]), "unknown bands"),
+        (dict(crs="EPSG:3857"), "no source grid"),
+    ],
+)
+def test_catalog_plan_errors(spark, parsed_catalog, kw, match):
+    """No sources left after the band filter, bands the catalog does not
+    hold, and a crs= with no grid to elect a resolution from fail loudly
+    (solar_day on a projected catalog: see
+    test_solar_day_rejects_projected_catalog)."""
+    parsed, _ = parsed_catalog
+    with pytest.raises(ValueError, match=match):
+        plan_load_df(spark, parsed, groupby="time", **kw)

@@ -14,6 +14,7 @@ from odc_stac_spark.sources.stac_items import (
     items_df,
     parse_items,
     raster_assets_df,
+    stac_dicts_to_items,
     to_load_items,
 )
 
@@ -331,3 +332,104 @@ def test_cfg_aliases_outrank_eo_bands(spark):
     s2 = md["sentinel-2-l2a"]
     assert s2.aliases["blue"][0] == ("B05", 1)  # cfg wins over eo common_name
     assert s2.aliases["custom"] == [("B02", 1)]
+
+
+PROJ_EXT = "https://stac-extensions.github.io/projection/v1.1.0/schema.json"
+
+
+def _json_item(iid, collection, proj_ext, proj_assets):
+    """A raw STAC item document with data assets B01 and B02; the assets
+    named in ``proj_assets`` carry proj:shape/transform/epsg."""
+    assets = {}
+    for name in ("B01", "B02"):
+        a = {"href": f"https://example.com/{iid}/{name}.tif", "type": COG, "roles": ["data"]}
+        if name in proj_assets:
+            a["proj:shape"] = [100, 100]
+            a["proj:transform"] = [10.0, 0.0, 0.0, 0.0, -10.0, 0.0]
+            a["proj:epsg"] = 32735
+        assets[name] = a
+    return {
+        "type": "Feature",
+        "stac_version": "1.0.0",
+        "stac_extensions": [PROJ_EXT] if proj_ext else [],
+        "id": iid,
+        "collection": collection,
+        "geometry": None,
+        "properties": {"datetime": "2020-06-06T08:30:00Z"},
+        "assets": assets,
+        "links": [],
+    }
+
+
+def test_check_proj_strict_waiver_and_no_extension(spark):
+    """check_proj per item (reference _mdtools.py:199-205, waiver
+    :536-539): a proj item keeps only assets with proj data; a proj item
+    where NO asset has proj data keeps them all (the filter would leave it
+    empty); an item without the extension is never proj-filtered. The
+    list path (to_load_items) sees the same bands; ignore_proj lifts the
+    filter for its collection only."""
+    docs = [
+        _json_item("strict", "c1", True, {"B01"}),
+        _json_item("waived", "c1", True, set()),
+        _json_item("plain", "c2", False, {"B01"}),
+    ]
+    items = stac_dicts_to_items(spark, docs)
+    flags = {
+        (r.id, r.asset_name): r.is_raster
+        for r in assets_df(items).select("id", "asset_name", "is_raster").collect()
+    }
+    assert flags == {
+        ("strict", "B01"): True,
+        ("strict", "B02"): False,
+        ("waived", "B01"): True,
+        ("waived", "B02"): True,
+        ("plain", "B01"): True,
+        ("plain", "B02"): True,
+    }
+    listed = {it.id: it.bands for it in to_load_items(parse_items(spark, items))}
+    assert {k: sorted(v) for k, v in listed.items()} == {
+        "strict": ["B01"],
+        "waived": ["B01", "B02"],
+        "plain": ["B01", "B02"],
+    }
+    # proj data is honored only under the extension
+    assert listed["strict"]["B01"].geobox is not None
+    assert listed["plain"]["B01"].geobox is None
+
+    cfg = {"c1": {"ignore_proj": True}, "c2": {"ignore_proj": False}}
+    kept = {
+        (r.id, r.asset_name)
+        for r in parse_items(spark, items, cfg=cfg).select("id", "asset_name").collect()
+    }
+    assert ("strict", "B02") in kept
+    assert len(kept) == 6
+
+
+@pytest.mark.parametrize(
+    "media, roles, href, want",
+    [
+        ("image/png", None, "x.png", True),
+        ("application/x-geotiff", None, "x.bin", True),
+        ("application/netcdf", None, "x.bin", True),
+        ("application/x-hdf5", None, "x.bin", True),
+        ("application/vnd+zarr", None, "x.bin", True),
+        ("application/json", ["data"], "x.json", True),
+        ("application/json", None, "x.json", False),
+        (None, None, "https://h/a/B04.TIF?sig=1.2", True),
+        (None, None, "https://h/a/B04.json", False),
+        (None, ["overview"], "x.tif", False),
+        ("image/jpeg", ["thumbnail", "data"], "x.jpg", False),
+    ],
+)
+def test_raster_heuristic_branches(spark, media, roles, href, want):
+    """S4 media/role/extension rules (reference _mdtools.py:182-238), one
+    asset per case, on an item without the projection extension."""
+    it = s2_item(0)
+    it["assets"] = {
+        "a": {
+            "href": href, "type": media, "roles": roles, "gsd": None,
+            "proj_shape": None, "proj_transform": None, "proj_epsg": None,
+            "eo_bands": None, "raster_bands": None,
+        }
+    }
+    assert assets_df(items_df(spark, [it])).first().is_raster is want
