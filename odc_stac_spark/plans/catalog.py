@@ -2,23 +2,22 @@
 
 ``plans.load.plan_load`` takes a driver-resident item list — fine for the
 reference's scenarios (≤10⁴ items, _stac_load.py:351-352) but not for a
-catalog of 10⁸ items. Here planning is ONE grouping-sets aggregation over
-the ``parse_items`` output (itself a DataFrame transform over a
+catalog of 10⁸ items. Here the catalog only supplies the planner's
+*census* of its sources, from ONE grouping-sets aggregation over the
+``parse_items`` output (itself a DataFrame transform over a
 STAC-geoparquet-style catalog): one scan, and only the small per-set rows
-are collected (SURVEY §7.3 "100 TB scale deltas"). The elections then run
-on the driver over those rows, in one walk like the reference's
-(_stac_load.py:88-477):
+are collected (SURVEY §7.3 "100 TB scale deltas"):
 
-- band meta (S3)              → set (asset_name): first() per band
-- A7 resolution/CRS election  → set (g_crs, gsd): count per grid kind,
-                                voted count desc, gsd asc, crs asc
-- A8 bbox union               → same set: affine min/max per grid kind;
-                                only a catalog holding foreign-CRS grids
-                                runs a second job for their reprojected
-                                footprints
-- A1/A3/A5 temporal grouping  → set (k): first member per group key,
-                                #groups rows (bounded by time range, not
-                                item count), sorted NULLs first
+- band metadata (S3)   → set (asset_name): first() per band
+- grid kinds (A7/A8)   → set (g_crs, gsd): count and affine bbox per kind;
+                         ``foreign(crs)`` is a second job, run only when a
+                         grid outside the output CRS exists
+- groups (A1/A3/A5)    → set (k): first member per group key, #groups
+                         rows (bounded by time range, not item count)
+
+Every election — the (crs, gsd) vote, the bbox union, the argument
+ladder, the group order, the AOI ring and the band config — runs in
+``plans.load._finish_plan``, the same code as the list path.
 
 The item stream itself never leaves the cluster:
 ``sources_from_parsed`` maps parsed rows straight onto the
@@ -28,16 +27,16 @@ The item stream itself never leaves the cluster:
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Sequence, Tuple
+from typing import Optional, Sequence, Tuple
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
 
-from ..model import GeoBox, GeoboxTiles, RasterBandMetadata, RasterLoadParams
+from ..model import GeoBox, RasterBandMetadata
 from ..session import literal_df
-from .load import DEFAULT_CHUNK, LoadPlan, load_from_sources, resolve_load_cfg
+from .load import LoadPlan, _finish_plan, load_from_sources
 
 
 def _with_geom_cols(parsed: DataFrame) -> DataFrame:
@@ -100,10 +99,12 @@ def _with_footprints(df: DataFrame, dst_crs: str) -> DataFrame:
 
 
 def _group_key_col(groupby: str, has_item_idx: bool = False) -> F.Column:
-    """A1 group key as an expression (id-groupby needs no key: the catalog
-    path orders within groups by (ts, item_id), see sources_from_parsed)."""
+    """A1 group key as an expression."""
     if callable(groupby):
         return _callable_key_col(groupby, has_item_idx)
+    if groupby == "id":
+        # one group per item: its input index when the catalog carries one
+        return F.col("item_idx") if has_item_idx else F.col("id")
     if groupby == "time":
         return F.col("ts")
     if groupby == "solar_day":
@@ -119,7 +120,7 @@ def _group_key_col(groupby: str, has_item_idx: bool = False) -> F.Column:
         # _groupby_property, _stac_load.py:515-535)
         return F.element_at(F.col("properties"), F.lit(groupby))
     raise ValueError(
-        f"groupby={groupby!r}: catalog path supports time|solar_day|<property>|callable"
+        f"groupby={groupby!r}: catalog path supports id|time|solar_day|<property>|callable"
     )
 
 
@@ -196,48 +197,22 @@ def plan_load_df(
     spark: SparkSession,
     parsed: DataFrame,
     bands: Optional[Sequence[str]] = None,
-    geobox: Optional[GeoBox] = None,
-    bbox: Optional[Tuple[float, float, float, float]] = None,
-    resolution: Optional[float] = None,
-    crs: Optional[str] = None,
     groupby: str = "time",
-    chunks: Tuple[int, int] = (DEFAULT_CHUNK, DEFAULT_CHUNK),
-    cfg: Optional[Dict[str, RasterLoadParams]] = None,
     preserve_original_order: bool = False,
-    geopolygon=None,
+    **plan_kwargs,
 ) -> LoadPlan:
-    """Stages 1-6 of the load lifecycle from one distributed scan."""
-    plan, _ = _plan_load_df(
-        spark, parsed, bands, geobox, bbox, resolution, crs, groupby, chunks,
-        cfg, preserve_original_order, geopolygon,
-    )
-    return plan
+    """Stages 1-6 of the load lifecycle from one distributed scan; every
+    other keyword is ``plans.load.plan_load``'s."""
+    return _plan_load_df(
+        spark, parsed, bands, groupby, preserve_original_order, **plan_kwargs
+    )[0]
 
 
 def _plan_load_df(
-    spark: SparkSession,
-    parsed: DataFrame,
-    bands: Optional[Sequence[str]] = None,
-    geobox: Optional[GeoBox] = None,
-    bbox: Optional[Tuple[float, float, float, float]] = None,
-    resolution: Optional[float] = None,
-    crs: Optional[str] = None,
-    groupby: str = "time",
-    chunks: Tuple[int, int] = (DEFAULT_CHUNK, DEFAULT_CHUNK),
-    cfg: Optional[Dict[str, RasterLoadParams]] = None,
-    preserve_original_order: bool = False,
-    geopolygon=None,
+    spark, parsed, bands=None, groupby="time", preserve_original_order=False, **plan_kwargs
 ) -> Tuple[LoadPlan, bool]:
     """``plan_load_df``, plus whether every source grid the scan saw is in
     the output CRS (then no source needs a reprojected footprint)."""
-    if geobox is not None and any(
-        v is not None for v in (bbox, resolution, crs, geopolygon)
-    ):
-        raise ValueError(
-            "geobox= is mutually exclusive with bbox=/resolution=/crs=/geopolygon="
-        )
-    if geopolygon is not None and bbox is not None:
-        raise ValueError("geopolygon= is mutually exclusive with bbox=")
     base = _with_geom_cols(parsed)
     if bands is not None:
         base = base.where(F.col("asset_name").isin(list(bands)))
@@ -262,87 +237,29 @@ def _plan_load_df(
             "reproject the footprints or use the list path with "
             "explicit Item.lon"
         )
-
     if not band_rows:
         raise ValueError("no raster sources in catalog (after band filter)")
+
+    grids = [(r.g_crs, float(r.gsd), r.n, (r.x0, r.y0, r.x1, r.y1)) for r in grid_rows]
+
+    def foreign(crs: str):
+        # only a catalog holding grids outside crs pays a job for their
+        # reprojected footprints
+        if all(g[0] == crs for g in grids):
+            return None
+        return tuple(
+            _with_footprints(base.where(F.col("g_crs") != crs), crs)
+            .agg(F.min("fp_xmin"), F.min("fp_ymin"), F.max("fp_xmax"), F.max("fp_ymax"))
+            .first()
+        )
+
     meta = {
         r.asset_name: RasterBandMetadata(r.data_type or "float32", r.nodata, r.unit or "1")
-        for r in band_rows
+        for r in sorted(band_rows, key=lambda r: r.asset_name)
     }
-    use_bands = list(bands) if bands is not None else sorted(meta)
-    unknown = [b for b in use_bands if b not in meta]
-    if unknown:
-        raise ValueError(f"unknown bands: {unknown}")
-
-    if geobox is None:
-        if crs is None or resolution is None:
-            # A7 JOINT (crs, gsd) majority vote (reference _most_common_gbox
-            # _mdtools.py:726-749; advisor finding: voting gsd over all
-            # CRSes can elect a meters resolution for a degrees grid)
-            votes = [r for r in grid_rows if crs is None or r.g_crs == crs]
-            if not votes:
-                raise ValueError(f"no source grid in crs={crs!r}: pass resolution=")
-            r = min(votes, key=lambda r: (-r.n, r.gsd, r.g_crs))
-            if crs is None:
-                crs = r.g_crs
-            if resolution is None:
-                resolution = float(r.gsd)
-        if bbox is None and geopolygon is not None:
-            # AOI bbox in the elected output CRS (list-path parity:
-            # output_geobox's geopolygon query, plans/load.py)
-            from .load import _bbox_to_crs, _geopolygon_bbox
-
-            poly_bb, poly_crs = _geopolygon_bbox(geopolygon)
-            bbox = _bbox_to_crs(poly_bb, poly_crs, crs)
-        if bbox is None:
-            # A8 bbox union: output-CRS grids from their affine bboxes;
-            # foreign-CRS grids contribute reprojected footprints
-            # (list-path parity), which only they pay a job for
-            boxes = [(r.x0, r.y0, r.x1, r.y1) for r in grid_rows if r.g_crs == crs]
-            if any(r.g_crs != crs for r in grid_rows):
-                fb = _with_footprints(base.where(F.col("g_crs") != crs), crs).agg(
-                    F.min("fp_xmin"), F.min("fp_ymin"), F.max("fp_xmax"), F.max("fp_ymax")
-                ).first()
-                boxes.append(tuple(fb))
-            bbox = (
-                min(b[0] for b in boxes),
-                min(b[1] for b in boxes),
-                max(b[2] for b in boxes),
-                max(b[3] for b in boxes),
-            )
-        geobox = GeoBox.from_bbox(bbox, resolution, crs)
-
-    # temporal grouping: #groups rows (A1/A3/A5), NULL key first like
-    # Spark's ascending sort
-    group_rows.sort(key=lambda r: (r.k is not None, r.k))
-    group_keys = [r.k for r in group_rows]
-    group_ts = [r.first_m.ts for r in group_rows]
-
-    # P4: ring geometry (when given) rides along in the output CRS so the
-    # distributed tile binning can prune beyond the bounding box
-    aoi = None
-    if geopolygon is not None:
-        from ..functions.geom import Polygon, normalize_geometry
-
-        try:
-            if isinstance(geopolygon, (Polygon, dict)) or (
-                getattr(geopolygon, "__geo_interface__", None) is not None
-            ):
-                aoi = normalize_geometry(geopolygon).to_crs(geobox.crs)
-        except (NotImplementedError, ValueError):
-            aoi = None  # no transform for this CRS pair → bbox semantics
-
-    plan = LoadPlan(
-        gbox=geobox,
-        tiles=GeoboxTiles(geobox, chunks),
-        bands=use_bands,
-        cfg=resolve_load_cfg(use_bands, {b: meta[b] for b in use_bands}, cfg),
-        group_keys=group_keys,
-        group_ts=group_ts,
-        groupby=groupby,
-        aoi=aoi,
-    )
-    return plan, all(r.g_crs == geobox.crs for r in grid_rows)
+    groups = [(r.k, r.first_m.ts) for r in group_rows]
+    plan = _finish_plan(grids, foreign, meta, lambda _: groups, bands, groupby, **plan_kwargs)
+    return plan, all(g[0] == plan.gbox.crs for g in grids)
 
 
 def sources_from_parsed(
@@ -439,7 +356,7 @@ def load_from_catalog(
     **plan_kwargs,
 ) -> Tuple[DataFrame, LoadPlan]:
     """catalog → plan → tiles, DataFrame-only (the item table never lives
-    on the driver)."""
+    on the driver); ``plan_kwargs`` are ``plans.load.plan_load``'s."""
     if preserve_original_order:
         _require_item_idx(parsed)
     # a plan this call builds itself also tells whether any source grid is

@@ -40,7 +40,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -280,18 +280,34 @@ def _bbox_to_crs(bbox, src_crs: str, dst_crs: str):
     )
 
 
-def _elect_crs_res(geoms: Sequence[GeoBox]) -> Tuple[str, float]:
-    """Joint (crs, gsd) majority vote, tie → finest gsd (reference
-    _most_common_gbox, _mdtools.py:726-749 — voting crs and resolution
-    jointly so a meters gsd can never be elected for a degrees grid)."""
-    from collections import Counter
+def _bbox_union(boxes) -> Tuple[float, float, float, float]:
+    xmin, ymin, xmax, ymax = zip(*boxes)
+    return (min(xmin), min(ymin), max(xmax), max(ymax))
 
-    votes = Counter((g.crs, g.gsd) for g in geoms)
-    top = max(votes.values())
-    crs, gsd = min(
-        (k for k, c in votes.items() if c == top), key=lambda k: (k[1], k[0])
-    )
-    return crs, gsd
+
+def _item_census(items: Sequence[Item], bands: Optional[Sequence[str]] = None):
+    """One pass over a driver item list → the planner's census of its
+    sources (see :func:`_finish_plan`): grid kinds, ``foreign`` and the
+    band metadata in first-seen order. Only ``bands`` (default all)
+    contribute grids."""
+    meta: Dict[str, RasterBandMetadata] = {}
+    kinds: Dict[Tuple[str, float], Tuple[int, Tuple]] = {}
+    geoms: List[GeoBox] = []
+    for it in items:
+        for b, src in it.bands.items():
+            meta.setdefault(b, src.meta or RasterBandMetadata())
+            g = src.geobox
+            if g is None or (bands is not None and b not in bands):
+                continue
+            geoms.append(g)
+            n, bb = kinds.get((g.crs, g.gsd), (0, g.bbox()))
+            kinds[(g.crs, g.gsd)] = (n + 1, _bbox_union([bb, g.bbox()]))
+
+    def foreign(crs: str):
+        bbs = [_footprint_in(g, crs) for g in geoms if g.crs != crs]
+        return _bbox_union(bbs) if bbs else None
+
+    return [(c, r, n, bb) for (c, r), (n, bb) in kinds.items()], foreign, meta
 
 
 def output_geobox(
@@ -320,9 +336,24 @@ def output_geobox(
       ``crs=`` (required); ``geopolygon`` carries its own CRS;
       any two of these together raise;
     - missing crs/resolution are elected from the items by joint
-      (crs, gsd) majority vote;
+      (crs, gsd) majority vote, limited to ``crs=`` when given;
     - ``anchor=`` / ``align=`` snap the grid (edge/center/fractions).
     """
+    grids, foreign, _ = _item_census(items, bands)
+    return _output_geobox(
+        grids, foreign, crs=crs, resolution=resolution, anchor=anchor, align=align,
+        geobox=geobox, like=like, geopolygon=geopolygon, bbox=bbox, lon=lon, lat=lat,
+        x=x, y=y,
+    )
+
+
+def _output_geobox(
+    grids, foreign, *, crs=None, resolution=None, anchor=None, align=None, geobox=None,
+    like=None, geopolygon=None, bbox=None, lon=None, lat=None, x=None, y=None,
+) -> Optional[GeoBox]:
+    """:func:`output_geobox` over a census: the argument ladder, then the
+    election from the grid kinds (``foreign`` is only called for a bbox
+    union)."""
     params = {
         k
         for k, v in dict(
@@ -379,43 +410,36 @@ def output_geobox(
         y0, y1 = sorted(y)
         query = ((x0, y0, x1, y1), crs)
 
-    geoms = [
-        src.geobox
-        for it in items
-        for b, src in it.bands.items()
-        if (bands is None or b in bands) and src.geobox is not None
-    ]
     if crs is None or resolution is None:
-        if not geoms:
-            if query is not None and crs is None:
-                crs = query[1]
-            if crs is None or resolution is None:
-                return None
-        else:
-            e_crs, e_res = _elect_crs_res(geoms)
-            if crs is None:
-                crs = e_crs or (query[1] if query else None)
-            if resolution is None:
-                resolution = e_res
+        # A7: JOINT (crs, gsd) majority vote, tie → finest gsd (reference
+        # _most_common_gbox, _mdtools.py:726-749 — so a meters gsd is never
+        # elected for a degrees grid), over the grids in crs= when given
+        votes = [g for g in grids if crs is None or g[0] == crs]
+        if votes:
+            e_crs, e_gsd, _, _ = min(votes, key=lambda g: (-g[2], g[1], g[0]))
+            crs = e_crs if crs is None else crs
+            resolution = float(e_gsd) if resolution is None else resolution
+        elif grids:
+            raise ValueError(f"no source grid in crs={crs!r}: pass resolution=")
+        elif crs is None and query is not None:
+            crs = query[1]
         if crs is None or resolution is None:
             return None
 
     anchor_frac = _norm_anchor(anchor, align, resolution)
-
     if query is not None:
         bb = _bbox_to_crs(query[0], query[1], crs)
         return _snapped_geobox(bb, resolution, crs, anchor_frac)
 
-    if not geoms:
+    # A8 bbox union: grids in the output CRS by their affine bboxes, the
+    # others by their reprojected footprints
+    boxes = [g[3] for g in grids if g[0] == crs]
+    fb = foreign(crs)
+    if fb is not None:
+        boxes.append(fb)
+    if not boxes:
         return None
-    bbs = [_footprint_in(g, crs) for g in geoms]
-    union = (
-        min(b[0] for b in bbs),
-        min(b[1] for b in bbs),
-        max(b[2] for b in bbs),
-        max(b[3] for b in bbs),
-    )
-    return _snapped_geobox(union, resolution, crs, anchor_frac)
+    return _snapped_geobox(_bbox_union(boxes), resolution, crs, anchor_frac)
 
 
 def _mid_longitude(gbox: GeoBox) -> float:
@@ -490,79 +514,72 @@ def plan_load(
     temporal grouping (A1-A5), tiling (F13)."""
     if not items:
         raise ValueError("no items")
+    grids, foreign, meta = _item_census(items, bands)
 
-    # band resolution: requested or union across items (P1/P2 tolerance)
-    all_bands: List[str] = []
-    meta: Dict[str, RasterBandMetadata] = {}
-    for it in items:
-        for b, src in it.bands.items():
-            if b not in meta:
-                all_bands.append(b)
-                meta[b] = src.meta or RasterBandMetadata()
-    use_bands = list(bands) if bands is not None else all_bands
+    def groups(gbox: GeoBox):
+        # each group's representative is its first member by (time, id) or
+        # original index (_stac_load.py:538-566)
+        mid_lon = _mid_longitude(gbox) if groupby == "solar_day" else 0.0
+        first: Dict[object, Tuple] = {}
+        for i, it in enumerate(items):
+            k = _group_key(it, groupby, i, mid_lon)
+            order = (i,) if preserve_original_order else (it.datetime, it.id)
+            if k not in first or order < first[k][0]:
+                first[k] = (order, it.datetime)
+        return [(k, ts) for k, (_, ts) in first.items()]
+
+    return _finish_plan(
+        grids, foreign, meta, groups, bands, groupby, chunks, cfg, resampling, dtype, audit,
+        geobox=geobox, bbox=bbox, resolution=resolution, crs=crs, like=like,
+        geopolygon=geopolygon, lon=lon, lat=lat, x=x, y=y, anchor=anchor, align=align,
+    )
+
+
+def _finish_plan(
+    grids, foreign, meta: Dict[str, RasterBandMetadata], groups, bands, groupby,
+    chunks=(DEFAULT_CHUNK, DEFAULT_CHUNK), cfg=None, resampling=None, dtype=None, audit=False,
+    **grid_kw,
+) -> LoadPlan:
+    """The elections both load paths share. Each path supplies only a
+    census of its sources:
+
+    - ``grids``: one ``(crs, gsd, count, affine bbox)`` per grid kind;
+    - ``foreign(crs)``: the footprint union, in ``crs``, of the grids not
+      in ``crs`` (None when there are none);
+    - ``meta``: band metadata, in the default band order;
+    - ``groups(gbox)``: one ``(key, first ts)`` pair per group.
+
+    Everything else — band resolution (P1), the output grid (P3/A7/A8,
+    ``grid_kw`` as for :func:`output_geobox`), group order (A1), the AOI
+    ring (P4) and the per-band load config — is decided here."""
+    use_bands = list(bands) if bands is not None else list(meta)
     unknown = [b for b in use_bands if b not in meta]
     if unknown:
         raise ValueError(f"unknown bands: {unknown}")
-
-    geobox = output_geobox(
-        items,
-        bands=use_bands,
-        crs=crs,
-        resolution=resolution,
-        anchor=anchor,
-        align=align,
-        geobox=geobox,
-        like=like,
-        geopolygon=geopolygon,
-        bbox=bbox,
-        lon=lon,
-        lat=lat,
-        x=x,
-        y=y,
-    )
-    if geobox is None:
+    gbox = _output_geobox(grids, foreign, **grid_kw)
+    if gbox is None:
         raise ValueError("cannot resolve output geobox: no source geoboxes")
+    # missing key first (Spark's ascending NULL order); keys of mixed types
+    # (a callable's) sort by type name first
+    keyed = sorted(groups(gbox), key=lambda kt: (kt[0] is not None, str(type(kt[0])), kt[0]))
+    # P4: a geopolygon= with real ring geometry rides along in the output
+    # CRS so tile binning can prune beyond its bounding box
+    from ..functions.geom import Polygon, normalize_geometry
 
-    # temporal grouping: sort groups by key; items within a group ordered
-    # by (time, id) or original index (_stac_load.py:538-566)
-    mid_lon = _mid_longitude(geobox) if groupby == "solar_day" else 0.0
-    keyed = [(_group_key(it, groupby, i, mid_lon), i, it) for i, it in enumerate(items)]
-    group_map: Dict[object, List[int]] = {}
-    for k, i, _ in keyed:
-        group_map.setdefault(k, []).append(i)
-    group_keys = sorted(group_map.keys(), key=lambda k: (str(type(k)), k))
-    group_ts = []
-    for k in group_keys:
-        members = group_map[k]
-        first = min(
-            members,
-            key=lambda i: (i,) if preserve_original_order else (items[i].datetime, items[i].id),
-        )
-        group_ts.append(items[first].datetime)
-
-    # P4: when geopolygon carries real ring geometry keep it (in the
-    # output CRS) so tile binning can prune beyond the bounding box
-    aoi = None
-    if geopolygon is not None:
-        from ..functions.geom import Polygon, normalize_geometry
-
+    aoi, poly = None, grid_kw.get("geopolygon")
+    if isinstance(poly, (Polygon, dict)) or getattr(poly, "__geo_interface__", None) is not None:
         try:
-            if isinstance(geopolygon, Polygon) or isinstance(geopolygon, dict) or (
-                getattr(geopolygon, "__geo_interface__", None) is not None
-            ):
-                aoi = normalize_geometry(geopolygon).to_crs(geobox.crs)
+            aoi = normalize_geometry(poly).to_crs(gbox.crs)
         except (NotImplementedError, ValueError):
-            aoi = None  # no transform for this CRS pair → bbox semantics
-
-    load_cfg = resolve_load_cfg(use_bands, {b: meta[b] for b in use_bands}, cfg)
-    load_cfg = _apply_cfg_overrides(load_cfg, resampling=resampling, dtype=dtype)
+            pass  # no transform for this CRS pair → bbox semantics
+    load_cfg = resolve_load_cfg(use_bands, meta, cfg)
     return LoadPlan(
-        gbox=geobox,
-        tiles=GeoboxTiles(geobox, chunks),
+        gbox=gbox,
+        tiles=GeoboxTiles(gbox, chunks),
         bands=use_bands,
-        cfg=load_cfg,
-        group_keys=group_keys,
-        group_ts=group_ts,
+        cfg=_apply_cfg_overrides(load_cfg, resampling=resampling, dtype=dtype),
+        group_keys=[k for k, _ in keyed],
+        group_ts=[ts for _, ts in keyed],
         groupby=groupby,
         audit=audit,
         aoi=aoi,

@@ -24,10 +24,6 @@ from ..sources.tables import load_table
 from . import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # -- A1: group-by key computation (groupby="time" analog: hour buckets) ----
 @register(
     "a1_groupby_time",
@@ -44,7 +40,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tags=("metadata", "agg"),
 )
 def a1_groupby_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.unix_micros(F.date_trunc("hour", "ts")).alias("group_key_us")
@@ -71,7 +67,7 @@ def a1_groupby_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a1b_groupby_property(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.catalog import _group_key_col
 
-    ev = _t(spark, sf_dir, "events").withColumn(
+    ev = load_table(spark, sf_dir, "events").withColumn(
         "properties", F.from_json("props", "map<string,string>")
     )
     return ev.groupBy(_group_key_col("k").alias("group_key")).agg(
@@ -98,7 +94,7 @@ def a1b_groupby_property(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "agg"),
 )
 def a2_solar_day(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     lon = (F.col("user_id") % 360) - 180
     # Spark CAST(double AS INT) truncates toward zero == Python int()
     offset_h = (lon / 15.0).cast("int")
@@ -129,7 +125,7 @@ def a2_solar_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "scalar"),
 )
 def a3_nominal_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     dt = F.when(F.col("event_type") != "error", F.col("ts"))
     start = F.when(F.col("user_id") % 2 == 0, F.timestamp_add("HOUR", F.lit(1), F.col("ts")))
     end = F.timestamp_add("HOUR", F.lit(2), F.col("ts"))
@@ -155,7 +151,7 @@ def a3_nominal_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "agg"),
 )
 def a4_group_sort_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # sort_array on struct sorts lexicographically by (ts, event_id) — the
     # reference's (time, id) ordering; event_id is unique so order is total.
     ordered = F.array_sort(F.collect_list(F.struct("ts", "event_id", "event_type")))
@@ -191,7 +187,7 @@ def a4_group_sort_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "agg"),
 )
 def a6_mosaic_first_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").where(F.col("value") >= 50)
+    ev = load_table(spark, sf_dir, "events").where(F.col("value") >= 50)
     return (
         ev.groupBy("user_id", "event_type")
         .agg(
@@ -222,7 +218,7 @@ def a6_mosaic_first_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "agg"),
 )
 def a7_mode_election(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     counts = p.groupBy("p_type", "p_brand").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("p_type").orderBy(F.desc("cnt"), F.asc("p_brand"))
     return (
@@ -247,7 +243,7 @@ def a7_mode_election(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "agg"),
 )
 def a8_bbox_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.round(F.min("value"), 2).alias("xmin"),
         F.round(F.max("value"), 2).alias("xmax"),
@@ -272,7 +268,7 @@ def a8_bbox_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "agg"),
 )
 def a9_grid_election(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     counts = p.groupBy("p_type", "p_size").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("p_type").orderBy(F.desc("cnt"), F.asc("p_size"))
     return (
@@ -309,7 +305,7 @@ _ITEMSIZE_CASE_SQL = """
     tags=("metadata", "agg"),
 )
 def a10_dtype_election(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     dtype = (
         F.when(F.col("p_size") % 5 == 0, "uint8")
         .when(F.col("p_size") % 5 == 1, "uint16")
@@ -359,7 +355,7 @@ def a10_dtype_election(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "join", "spatial"),
 )
 def j1_tyx_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     lo = F.floor(F.col("o_custkey") / 10.0)
     hi = F.floor((F.col("o_custkey") + 3) / 10.0)
     exploded = o.select(
@@ -393,7 +389,7 @@ def j1_tyx_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "scalar"),
 )
 def f14_deterministic_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     h = F.md5(F.concat_ws("\n", F.lit("orders"), F.col("o_orderkey").cast("string")))
     return o.select(
         "o_orderkey",
@@ -425,7 +421,7 @@ def f14_deterministic_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "agg"),
 )
 def s3_schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.groupBy("source").agg(
         F.min_by("lang", "doc_id").alias("first_lang"),
         F.countDistinct("lang").alias("n_langs"),
@@ -564,7 +560,7 @@ def s1_stac_json_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("metadata", "agg", "grid"),
 )
 def p3_grid_snap_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     res = F.lit(25.0)
     u = ev.groupBy("event_type").agg(
         F.min("value").alias("xmin"),

@@ -29,10 +29,6 @@ from ..sources.tables import load_table
 from . import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # TPC-H Q1 style pricing summary: the canonical "wide aggregate" — full
 # scan + 4-group groupBy. Partial (map-side) aggregation makes this
@@ -58,7 +54,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tags=("relational", "agg"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -102,11 +98,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join", "topk"),
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").where(
+    c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") > F.lit("1997-01-01").cast("timestamp")
     )
     return (
@@ -150,15 +146,15 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join", "agg"),
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").where(
+    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -188,8 +184,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join"),
 )
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
@@ -204,8 +200,8 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join"),
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
@@ -222,8 +218,8 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "setop"),
 )
 def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("n_nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("n_nationkey"))
     return c.intersect(s)
 
 
@@ -238,8 +234,8 @@ def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "setop"),
 )
 def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("n_nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("n_nationkey"))
     return c.subtract(s)  # EXCEPT (set semantics), not EXCEPT ALL
 
 
@@ -257,7 +253,7 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "window"),
 )
 def window_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         o.withColumn("rn", F.row_number().over(w))
@@ -281,10 +277,10 @@ def window_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "agg"),
 )
 def rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     joined = (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -308,7 +304,7 @@ def rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "agg"),
 )
 def cube_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.cube("p_brand", "p_size").agg(
         F.count(F.lit(1)).alias("n_parts"),
         F.round(F.avg("p_retailprice"), 4).alias("avg_price"),
@@ -327,7 +323,7 @@ def cube_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "topk"),
 )
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(25)
@@ -348,7 +344,7 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "agg"),
 )
 def distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.count(F.lit(1)).alias("n_orders"),

@@ -31,10 +31,6 @@ from ..sources.tables import load_table
 from . import register, scoped_persist
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 #: sf_dir → {n_nationkey: n_name} for the q7 pair nations. The resolution
 #: is a driver-side job over a spec-bounded 25-row dimension; memoizing it
 #: per sf_dir drops a whole Spark job from every q7 construction (the
@@ -48,7 +44,7 @@ def _q7_pair_keys(spark: SparkSession, sf_dir: str) -> dict:
     got = _Q7_PAIR_CACHE.get(sf_dir)
     if got is None:
         rows = (
-            _t(spark, sf_dir, "nation")
+            load_table(spark, sf_dir, "nation")
             .where(F.col("n_name").isin("NATION_1", "NATION_2"))
             .select("n_nationkey", "n_name")
             .collect()
@@ -72,7 +68,7 @@ def _q7_pair_keys(spark: SparkSession, sf_dir: str) -> dict:
     tags=("relational", "subquery"),
 )
 def q2_cheapest_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     # Decorrelation by hand mirrors what Catalyst does for the SQL form:
     # one aggregate over part, broadcast back onto part.
     mins = p.groupBy(F.col("p_type").alias("mt")).agg(
@@ -123,10 +119,10 @@ def q7_nation_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the isin filters pushed into the customer/supplier scans.
     # NOTE: the pair-key resolution below runs an eager driver-side job at
     # DataFrame-construction time (2 rows max out of a 25-row dim).
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
     key2name = _q7_pair_keys(spark, sf_dir)
     keys = sorted(key2name)
     if len(keys) < 2:
@@ -190,18 +186,18 @@ def q7_nation_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join", "agg"),
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    nc = _t(spark, sf_dir, "nation").select(
+    p = load_table(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    nc = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("nc_key"), F.col("n_regionkey").alias("nc_region")
     )
-    ns = _t(spark, sf_dir, "nation").select(
+    ns = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("ns_key"), F.col("n_name").alias("supp_nation")
     )
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(p, li.l_partkey == p.p_partkey)
@@ -243,13 +239,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join", "agg"),
 )
 def q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").like("red%"))
-    s = _t(spark, sf_dir, "supplier")
-    ns = _t(spark, sf_dir, "nation").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("red%"))
+    s = load_table(spark, sf_dir, "supplier")
+    ns = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("ns_key"), F.col("n_name").alias("nation")
     )
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
@@ -279,7 +275,7 @@ def q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "subquery", "agg"),
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # persist: partval feeds both the threshold aggregate and the output —
     # without it the lineitem scan + aggregation runs twice (verified: the
     # unpersisted plan shows two independent exchanges).
@@ -315,11 +311,11 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "agg"),
 )
 def q12_priority_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -348,8 +344,8 @@ def q12_priority_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join", "agg"),
 )
 def q13_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderpriority") != "1-URGENT")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderpriority") != "1-URGENT")
     per_cust = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy(c.c_custkey)
@@ -378,11 +374,11 @@ def q13_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "subquery", "topk"),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
             "total_revenue"
@@ -413,8 +409,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "agg"),
 )
 def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(1, 9, 19, 29, 39, 49)
     )
     return (
@@ -440,8 +436,8 @@ def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "subquery", "agg"),
 )
 def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#13")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#13")
     avgq = li.groupBy(F.col("l_partkey").alias("ap")).agg(
         F.round(0.2 * F.avg("l_quantity"), 6).alias("qty_thresh")
     )
@@ -470,8 +466,8 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join"),
 )
 def q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     cond = (
         (F.col("p_brand") == "Brand#12")
         & F.col("p_size").between(1, 5)
@@ -527,9 +523,9 @@ def q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "subquery", "join"),
 )
 def q20_heavy_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").like("red%"))
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("red%"))
     in_window = li.where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -579,8 +575,8 @@ def q20_heavy_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join", "subquery"),
 )
 def q21_exclusive_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
     l1 = li.where(F.col("l_returnflag") == "R").alias("l1")
     l2 = li.alias("l2")
     l3 = li.where(F.col("l_returnflag") == "R").alias("l3")
@@ -624,8 +620,8 @@ def q21_exclusive_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "subquery", "join"),
 )
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     avgbal = c.where(F.col("c_acctbal") > 0).agg(F.avg("c_acctbal").alias("avg_bal"))
     return (
         c.crossJoin(broadcast(avgbal))

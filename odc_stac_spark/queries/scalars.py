@@ -15,10 +15,6 @@ from ..sources.tables import load_table
 from . import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # -- F1: band-key string parse ('asset.idx' ↔ (asset, idx)) ----------------
 @register(
     "f1_norm_key",
@@ -34,7 +30,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tags=("scalar",),
 )
 def f1_norm_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     key = F.concat_ws(".", F.col("p_brand"), (F.col("p_size") % 3 + 1).cast("string"))
     return p.select(
         "p_partkey",
@@ -63,7 +59,7 @@ def f1_norm_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scalar",),
 )
 def f3_nodata_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     x = (
         F.when(F.col("event_id") % 7 == 0, F.lit(float("nan")))
         .when(F.col("event_id") % 11 == 0, F.lit(-999.0))
@@ -99,7 +95,7 @@ def f3_nodata_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scalar", "spatial"),
 )
 def f12_affine_grid_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     x = 400000.0 + (F.col("event_id") % 10000) * 1.7
     y = 9000000.0 - (F.col("event_id") % 7000) * 2.3
     px = F.floor((x - 400000.0) / 10.0)
@@ -129,7 +125,7 @@ def f12_affine_grid_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scalar",),
 )
 def f13_chunk_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").withColumn("total", F.col("p_size") + 10)
+    p = load_table(spark, sf_dir, "part").withColumn("total", F.col("p_size") + 10)
     return (
         p.select(
             "p_partkey",
@@ -165,8 +161,8 @@ def f13_chunk_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join"),
 )
 def q4_late_ship_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     late = li.join(o, li.l_orderkey == o.o_orderkey).where(
         F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 30)
     )
@@ -193,7 +189,7 @@ def q4_late_ship_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "agg"),
 )
 def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.where(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -227,10 +223,10 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join", "topk"),
 )
 def q10_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -263,11 +259,11 @@ def q10_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "agg"),
 )
 def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(p, li.l_partkey == p.p_partkey)
@@ -297,8 +293,8 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "join", "agg"),
 )
 def q18_large_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("total_qty"))
@@ -325,7 +321,7 @@ def q18_large_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "window"),
 )
 def w_lag_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         "event_id",
@@ -348,7 +344,7 @@ def w_lag_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "agg", "sql"),
 )
 def gs_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,

@@ -466,12 +466,25 @@ def _platform_day(item, idx):
             groupby="time",
             geopolygon=Polygon([[(10.1, 5.0), (150.2, -30.1), (12.0, -20.0)]], crs=GEO),
         ),
+        dict(groupby="time", anchor="center"),
+        dict(groupby="time", align=0.004),
+        dict(groupby="time", lon=(10.05, 10.5), lat=(4.6, 5.08)),
+        dict(groupby="time", x=(150.1, 150.55), y=(-30.4, -29.93), crs=GEO),
+        dict(groupby="time", bbox=(10.05, 4.6, 150.5, 5.08)),
+        dict(groupby="time", like=GeoBox((40, 70), (0.01, 0.0, 10.0, 0.0, -0.01, 5.0), GEO)),
+        dict(groupby="time", dtype="float64", resampling="bilinear"),
+        dict(groupby="time", audit=True),
     ],
-    ids=["time", "solar_day", "property", "callable", "crs", "crs_foreign", "bands", "geopolygon"],
+    ids=[
+        "time", "solar_day", "property", "callable", "crs", "crs_foreign", "bands",
+        "geopolygon", "anchor", "align", "lonlat", "xy", "bbox", "like", "dtype_resampling",
+        "audit",
+    ],
 )
 def test_catalog_plan_equals_list_plan(spark, geo_catalog, kw):
-    """plan_load_df's one-scan elections give the list path's plan: grid,
-    bands, band config, group keys (NULL first) and group timestamps."""
+    """plan_load_df's one-scan census gives the list path's plan: grid,
+    bands, band config, group keys (NULL first), group timestamps, AOI
+    and audit flag."""
     parsed, items = geo_catalog
     got = plan_load_df(spark, parsed, chunks=(256, 256), **kw)
     want = plan_load(items, chunks=(256, 256), **kw)
@@ -481,6 +494,38 @@ def test_catalog_plan_equals_list_plan(spark, geo_catalog, kw):
     assert got.group_keys == want.group_keys
     assert got.group_ts == want.group_ts
     assert (got.aoi is None) == (want.aoi is None)
+    assert got.audit == want.audit
+
+
+def test_catalog_bbox_is_lonlat_query(spark, parsed_catalog):
+    """bbox= is an EPSG:4326 query on the catalog path too: on a UTM
+    catalog it is reprojected to the elected UTM grid, as on the list
+    path."""
+    parsed, origins = parsed_catalog
+    kw = dict(groupby="time", chunks=(256, 256), bbox=(26.99, -14.92, 27.0, -14.91))
+    got = plan_load_df(spark, parsed, **kw)
+    want = plan_load(equivalent_items(3, origins), **kw)
+    assert got.gbox == want.gbox
+    assert got.gbox.crs == f"EPSG:{EPSG}"
+    assert got.gbox.bbox()[0] > 490000.0  # metres east, not degrees
+
+
+def test_catalog_groupby_id_one_group_per_item(spark, geo_catalog, parsed_catalog):
+    """groupby="id" keys each catalog item on its own (by ``id`` here, no
+    item_idx column): one group per item with the list path's group
+    timestamps, and the same pixels."""
+    parsed, items = geo_catalog
+    got = plan_load_df(spark, parsed, groupby="id")
+    assert len(got.group_keys) == 4
+    assert got.group_ts == plan_load(items, groupby="id").group_ts
+
+    parsed, origins = parsed_catalog
+    tiles_df, plan = load_from_catalog(spark, parsed, groupby="id", chunks=(64, 64))
+    tiles2, plan2 = load(spark, equivalent_items(3, origins), groupby="id", chunks=(64, 64))
+    assert plan.group_ts == plan2.group_ts
+    got_px, want_px = assemble_numpy(tiles_df, plan), assemble_numpy(tiles2, plan2)
+    for b in want_px:
+        np.testing.assert_array_equal(got_px[b], want_px[b])
 
 
 def test_geo_plan_groups(spark, geo_catalog):

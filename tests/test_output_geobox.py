@@ -142,6 +142,18 @@ def test_auto_election_majority_joint():
     assert g.resolution == (10.0, -10.0)
 
 
+def test_crs_vote_limited_to_crs():
+    # crs= with no source grid in that CRS has no resolution to elect;
+    # with one, only the grids in crs= vote (the UTM majority's 10 m gsd
+    # must not become a 10 degree resolution)
+    with pytest.raises(ValueError, match="no source grid in crs="):
+        output_geobox(ITEMS, crs="EPSG:3857")
+    assert output_geobox(ITEMS, crs="EPSG:3857", resolution=100.0).crs == "EPSG:3857"
+    items = ITEMS + [mk_item(2, crs="EPSG:4326", res=0.001, origin=(27.0, -14.9))]
+    g = output_geobox(items, crs="EPSG:4326")
+    assert g.resolution == (0.001, -0.001)
+
+
 def test_no_spatial_info_returns_none():
     it = Item(
         id="x",
