@@ -1,11 +1,12 @@
 """Higher-order training-data pipeline operators.
 
-- **dedup clustering**: near-dup pairs → connected components via
-  iterative min-label propagation (the step after LSH in a real dedup
-  pipeline: pick one survivor per duplicate cluster). Genuinely iterative
-  DataFrame algorithm — loop on the driver, joins in the cluster,
-  persist+localCheckpoint each round to cut lineage. The DuckDB oracle is
-  a recursive CTE computing the same min-reachable-id labels.
+- **dedup clustering**: near-dup pairs → connected components labeled
+  with their minimum doc_id (the step after LSH in a real dedup
+  pipeline: pick one survivor per duplicate cluster). Small graphs are
+  labeled on the driver; large ones by large-star/small-star contraction,
+  a driver loop of cluster joins with lineage cut by localCheckpoint each
+  round. The DuckDB oracle is a recursive CTE computing the same
+  min-reachable-id labels.
 - **stratified sampling**: deterministic md5-hash gate per document with
   per-language rates — reproducible sampling (no rand()), exactly what a
   data mixer uses; hash arithmetic matches DuckDB bit-for-bit.
@@ -17,7 +18,9 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import StructField, StructType
 
+from ..session import literal_df
 from ..sources.tables import load_table
 from .dedup import JACCARD_THRESHOLD, _hash32, _SHINGLES_SQL, dedup_ngram_jaccard
 from . import register, scoped_persist
@@ -61,60 +64,59 @@ def _pairs_sql() -> str:
     )
     SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a
     """,
-    doc="dedup clustering: connected components over near-dup pairs via "
-    "iterative min-label propagation (survivor selection after LSH).",
+    doc="dedup clustering: connected components over near-dup pairs "
+    "(survivor selection after LSH), labeled with each component's "
+    "minimum doc_id by cc_star_contraction.",
     tags=("dedup", "iterative"),
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
+    return cc_star_contraction(_symmetric_edges(dedup_ngram_jaccard(spark, sf_dir)))
+
+
+def _symmetric_edges(pairs: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b)`` pairs as the distinct directed ``(src, dst)``
+    edges in both directions that :func:`cc_star_contraction` takes."""
+    pairs = pairs.select("doc_a", "doc_b")
+    return (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
-        .persist()
     )
-    labels = (
-        edges.select(F.col("src").alias("doc_id")).distinct().withColumn("component", F.col("doc_id"))
-    ).persist()
-    # min-label propagation to fixpoint; components here are tiny (dup
-    # clusters), so few rounds. localCheckpoint truncates lineage so the
-    # plan doesn't grow with iterations (the Spark-idiomatic Pregel loop).
-    for _ in range(20):
-        neigh = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("component").alias("neigh_min"))
-        )
-        # r16 optimization: the change flag is computed IN the same pass
-        # that produces the new labels and rides through the checkpoint,
-        # so convergence detection is a shuffle-free scan-agg of the
-        # already-materialized rows — the old shape re-joined new vs old
-        # labels every round (one extra shuffle join job per round).
-        nxt = F.least(
-            F.col("component"), F.coalesce(F.col("neigh_min"), F.col("component"))
-        )
-        new_labels = (
-            labels.join(neigh, labels.doc_id == neigh.src, "left")
-            .select(
-                "doc_id",
-                nxt.alias("component"),
-                (nxt != F.col("component")).cast("int").alias("chg"),
-            )
-            # eager=False (r17): the checkpoint materializes under the
-            # convergence agg's job below — one job per round, not two
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.agg(F.sum("chg")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels.select("doc_id", "component")
-        if changed == 0:
-            break
-    # labels is a lazy localCheckpoint that the last round's convergence
-    # agg already materialized, so the edge cache is no longer needed by
-    # the returned plan — release it here instead of leaking it into the
-    # shared session (ADVICE r11).
-    edges.unpersist()
-    return labels.select("doc_id", "component")
+
+
+#: graphs of at most this many directed edges (~1 MiB of int64 pairs) are
+#: labeled on the driver by :func:`cc_star_contraction`
+DRIVER_CC_MAX_EDGES = 1 << 16
+
+
+def _driver_cc(E: DataFrame) -> DataFrame:
+    """Component labels of a small edge list, computed on the driver: one
+    collect, then a union-find that always hangs the larger root under
+    the smaller, so every root is its component's minimum id — the star
+    contraction's fixpoint. Returned as a literal relation sorted by
+    doc_id."""
+    t = E.schema["u"].dataType
+    parent = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in E.collect():
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return literal_df(
+        E.sparkSession,
+        [(x, find(x)) for x in sorted(parent)],
+        StructType([StructField("doc_id", t), StructField("component", t)]),
+    )
 
 
 def cc_star_contraction(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
@@ -135,13 +137,25 @@ def cc_star_contraction(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
     At the fixpoint the edge set IS the answer: a star forest where every
     node neighbors its component minimum. Each phase is one groupBy(min)
     + one self-join on the (deduped) edge list — all JVM-side, lineage
-    cut per round with an eager localCheckpoint.
+    cut per round with a localCheckpoint.
+
+    A graph of at most ``DRIVER_CC_MAX_EDGES`` directed edges skips the
+    loop: its edges are collected once and labeled by a driver union-find
+    (:func:`_driver_cc`) — the edge count and one collect instead of a
+    handful of shuffle rounds, with the same labels.
 
     `edges` must be directed-symmetric distinct (u, v) pairs, u != v.
     Returns (doc_id, component) for every endpoint. Raises (never returns
     partial labels) if the fixpoint is not reached within ``max_rounds``
     — the alternation needs ~log2(diameter) rounds, so the default 32
     covers any physically possible graph.
+
+    Failure semantics: below the bound the labels are a literal relation
+    held by the driver, so losing an executor once this returns costs
+    nothing. Above it the labels read the last round's
+    ``localCheckpoint`` blocks, which live only in executor storage: a
+    query that loses one of them after the loop fails instead of
+    recomputing it.
     """
     # materialize the input FIRST: E is referenced ~6× per round (mins,
     # the star joins, the convergence diff) — without this, an expensive
@@ -163,6 +177,8 @@ def cc_star_contraction(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
     # Exact, not probabilistic: the one-sided check only runs (and only
     # suffices) when the cardinalities are equal.
     n_edges = E.count()
+    if n_edges <= DRIVER_CC_MAX_EDGES:
+        return _driver_cc(E)
     for _ in range(max_rounds):
         # m(u) = min over the closed neighborhood (u itself included)
         mins = E.groupBy("u").agg(
@@ -249,24 +265,19 @@ def cc_star_contraction(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
     SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a
     """,
     doc="connected components over the near-dup pair graph via "
-    "large-star/small-star contraction (Kiveris et al. 2014): the "
-    "100 TB-safe CC — round count grows with log(component diameter) "
-    "instead of the diameter itself, so a pathological transitive "
-    "near-dup chain cannot turn the driver loop into thousands of "
-    "shuffle rounds the way plain min-label propagation "
-    "(dedup_connected_components) can. Identical labels by "
-    "construction — both converge to min-reachable-id — so the same "
-    "recursive-CTE oracle gates both.",
+    "cc_star_contraction: driver union-find up to DRIVER_CC_MAX_EDGES "
+    "directed edges, large-star/small-star contraction (Kiveris et al. "
+    "2014) above it — the 100 TB-safe CC, whose round count grows with "
+    "log(component diameter) instead of the diameter itself, so a "
+    "pathological transitive near-dup chain cannot turn the driver loop "
+    "into thousands of shuffle rounds the way plain min-label "
+    "propagation can. The same computation as "
+    "dedup_connected_components, gated by the same recursive-CTE "
+    "oracle.",
     tags=("dedup", "iterative", "scale"),
 )
 def dedup_cc_star_contraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-    )
-    return cc_star_contraction(edges)
+    return dedup_connected_components(spark, sf_dir)
 
 
 @register(
@@ -1217,13 +1228,7 @@ def dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = base.where(F.col("doc_id") == F.col("rep_id")).select("doc_id", "text")
     # shingle arrays computed AFTER the collapse — map-side, reps only
     sharr = scoped_persist(shingle_arrays(reps))
-    pairs = _lsh_verified_pairs(sharr).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-    )
-    comp = cc_star_contraction(edges).select(
+    comp = cc_star_contraction(_symmetric_edges(_lsh_verified_pairs(sharr))).select(
         F.col("doc_id").alias("rep_id"), "component"
     )
     out = base.select("doc_id", "source", "rep_id").join(comp, "rep_id", "left")

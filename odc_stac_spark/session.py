@@ -11,8 +11,13 @@ ones that matter identically on a 1000-executor cluster:
 - shuffle partitions sized by env (32 locally; on a real cluster this is
   left to AQE's coalescing from a high initial number).
 
-``literal_df`` turns a small driver-side table into a DataFrame whose plan
-stays in the JVM.
+- ``spark.executorEnv.PYTHONPATH`` holds the directory this package sits
+  in, so Python workers import ``odc_stac_spark`` whatever the driver's
+  cwd or ``PYTHONPATH`` (a worker does not inherit the driver's
+  ``sys.path``).
+
+``literal_df`` turns a driver-side table into a one-partition DataFrame
+built through Arrow: a JVM ``LocalTableScan`` that no Python worker reads.
 """
 
 from __future__ import annotations
@@ -20,9 +25,13 @@ from __future__ import annotations
 import os
 from typing import Sequence
 
-import pyspark.sql.functions as F
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+#: the directory holding the ``odc_stac_spark`` package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -50,30 +59,27 @@ def get_spark(
         # vectorized parquet reader rejects; read as int64 nanos and convert
         # in sources.tables (same ns→µs truncation DuckDB applies).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python workers merge this into their own PYTHONPATH
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()
 
 
-#: driver-side tables up to this many rows / bytes of literal values are
-#: planned as JVM literals (see :func:`literal_df`)
-LITERAL_MAX_ROWS = 1024
-LITERAL_MAX_BYTES = 4 << 20
-
-
 def literal_df(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -> DataFrame:
-    """A small driver-side table as a DataFrame with a JVM-only plan.
+    """A driver-side table as a one-partition DataFrame with a JVM-only plan.
 
     ``createDataFrame(list)`` plans a Python-RDD scan, so every action over
     it pays a Python worker round trip per partition. Here the rows become
-    an ``inline`` of literal structs cast to ``schema`` (an all-NULL column
-    keeps its type). Past ``LITERAL_MAX_ROWS`` rows or ``LITERAL_MAX_BYTES``
-    of values the plan itself would grow too large, so those tables keep
-    ``createDataFrame`` in one partition."""
-    n_bytes = sum(len(str(v)) for r in rows for v in r)
-    if not rows or len(rows) > LITERAL_MAX_ROWS or n_bytes > LITERAL_MAX_BYTES:
-        return spark.createDataFrame(list(rows), schema).coalesce(1)
-    structs = [
-        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, schema.fields)])
-        for r in rows
-    ]
-    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs)))
+    a ``pyarrow.Table`` typed by ``schema`` (an all-NULL column keeps its
+    type), which Spark turns into a ``LocalRelation`` on the driver. Values
+    go through Spark's own ``toInternal`` first, so a naive ``datetime``
+    means the same instant it does in ``F.lit``. One partition: a
+    ``LocalTableScan`` otherwise splits a few rows over every core."""
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for values, field, arrow_field in zip(cols, schema.fields, arrow):
+        if field.dataType.needConversion():
+            values = [field.dataType.toInternal(v) for v in values]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema).coalesce(1)

@@ -6,8 +6,9 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from odc_stac_spark.queries import load_all
+from odc_stac_spark.queries import llm_pipeline, load_all
 from odc_stac_spark.queries.llm_pipeline import cc_star_contraction
+from .test_catalog_path import _jobs_in
 
 REGISTRY = load_all()
 
@@ -17,47 +18,72 @@ def _sym_edges(spark, pairs):
     return df.union(df.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
 
-def test_cc_star_path_graph_diameter_independent(spark):
+def _both_sides(monkeypatch, labels):
+    """``labels()`` as a {doc_id: component} dict, computed once on each
+    side of the driver-CC edge bound (driver union-find at the default
+    bound, star contraction with the bound at 0); both must agree."""
+    driver = {r["doc_id"]: r["component"] for r in labels().collect()}
+    with monkeypatch.context() as m:
+        m.setattr(llm_pipeline, "DRIVER_CC_MAX_EDGES", 0)
+        star = {r["doc_id"]: r["component"] for r in labels().collect()}
+    assert driver == star
+    return driver
+
+
+def test_cc_star_path_graph_diameter_independent(spark, monkeypatch):
     """A 64-hop chain: plain min-label propagation needs 64 rounds; star
     contraction must converge in ~log2(64) rounds AND label every node
     with the chain minimum."""
     edges = _sym_edges(spark, [(i, i + 1) for i in range(64)])
-    out = {r["doc_id"]: r["component"] for r in cc_star_contraction(edges).collect()}
+    out = _both_sides(monkeypatch, lambda: cc_star_contraction(edges))
     assert len(out) == 65
     assert set(out.values()) == {0}
 
 
-def test_cc_star_multi_component(spark):
+def test_cc_small_graph_runs_count_and_collect(spark, monkeypatch):
+    """Below the edge bound the 64-hop chain costs the edge count and one
+    collect, and its labels are a sorted one-partition literal relation
+    typed like the input; star contraction spends more jobs on it. Under
+    AQE the count is a map-stage job plus a result job (the map-stage job
+    is not always tagged with the job group, hence at most, not exactly,
+    three)."""
+    pairs = [(i, i + 1) for i in range(64)]
+    edges = spark.createDataFrame(pairs + [(b, a) for a, b in pairs], "src long, dst long")
+    labels, jobs = _jobs_in(spark, "cc_small", lambda: cc_star_contraction(edges))
+    assert jobs <= 3
+    assert "LocalTableScan" in labels._jdf.queryExecution().executedPlan().toString()
+    assert labels.rdd.getNumPartitions() == 1
+    assert labels.collect() == [(i, 0) for i in range(65)]
+    assert labels.dtypes == [("doc_id", "bigint"), ("component", "bigint")]
+    monkeypatch.setattr(llm_pipeline, "DRIVER_CC_MAX_EDGES", 0)
+    _, star_jobs = _jobs_in(spark, "cc_star", lambda: cc_star_contraction(edges))
+    assert star_jobs > 3
+
+
+def test_cc_star_multi_component(spark, monkeypatch):
     """Three components of different shapes (chain, triangle+pendant,
     isolated edge) — each node labels with its component minimum."""
     pairs = [(10, 11), (11, 12), (12, 13)]          # chain, min 10
     pairs += [(20, 21), (21, 22), (20, 22), (22, 23)]  # triangle+pendant, min 20
     pairs += [(30, 31)]                              # edge, min 30
-    out = {
-        r["doc_id"]: r["component"]
-        for r in cc_star_contraction(_sym_edges(spark, pairs)).collect()
-    }
+    edges = _sym_edges(spark, pairs)
+    out = _both_sides(monkeypatch, lambda: cc_star_contraction(edges))
     assert {k: v for k, v in out.items() if k < 20} == {i: 10 for i in (10, 11, 12, 13)}
     assert {k: v for k, v in out.items() if 20 <= k < 30} == {i: 20 for i in (20, 21, 22, 23)}
     assert {k: v for k, v in out.items() if k >= 30} == {30: 30, 31: 30}
 
 
-def test_cc_star_matches_label_propagation_on_corpus(spark, sf_dir):
-    """Both CC formulations converge to min-reachable-id labels on the
-    real near-dup pair graph — byte-identical assignments."""
-    prop = {
-        (r["doc_id"], r["component"])
-        for r in REGISTRY["dedup_connected_components"].spark_fn(spark, sf_dir).collect()
-    }
-    star = {
-        (r["doc_id"], r["component"])
-        for r in REGISTRY["dedup_cc_star_contraction"].spark_fn(spark, sf_dir).collect()
-    }
-    assert prop == star
-    assert len(prop) > 0
+def test_cc_star_matches_label_propagation_on_corpus(spark, sf_dir, monkeypatch):
+    """The driver union-find and star contraction converge to the same
+    min-reachable-id labels on the real near-dup pair graph, under both
+    registry names."""
+    for name in ("dedup_connected_components", "dedup_cc_star_contraction"):
+        out = _both_sides(monkeypatch, lambda: REGISTRY[name].spark_fn(spark, sf_dir))
+        assert len(out) > 0
+        assert all(c <= d for d, c in out.items())
 
 
-def test_cc_star_high_degree_hub(spark):
+def test_cc_star_high_degree_hub(spark, monkeypatch):
     """A star-of-stars (hub 0 linked to 5 sub-hubs, each with 10 leaves):
     exactly one component labeled 0, all 56 nodes present."""
     pairs = []
@@ -69,7 +95,8 @@ def test_cc_star_high_degree_hub(spark):
         for _ in range(10):
             pairs.append((hub, nid))
             nid += 1
-    out = {r["doc_id"]: r["component"] for r in cc_star_contraction(_sym_edges(spark, pairs)).collect()}
+    edges = _sym_edges(spark, pairs)
+    out = _both_sides(monkeypatch, lambda: cc_star_contraction(edges))
     assert len(out) == 56
     assert set(out.values()) == {0}
 

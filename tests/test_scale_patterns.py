@@ -209,10 +209,9 @@ def test_no_python_udfs_in_relational_queries(spark, sf_dir):
     sinks, iterative dedup clustering — all Arrow-batched, never
     row-at-a-time)."""
     python_by_design = {"raster", "multimodal", "streaming"}
-    skip = {"dedup_connected_components"}  # iterative applyInPandas-free but multi-job
     checked = 0
     for name, q in REGISTRY.items():
-        if name in skip or python_by_design & set(q.tags):
+        if python_by_design & set(q.tags):
             continue
         plan = _executed_plan(q.spark_fn(spark, sf_dir))
         assert "BatchEvalPython" not in plan, name

@@ -1,0 +1,110 @@
+"""``session``: the literal relation builder and the executor import path."""
+
+from __future__ import annotations
+
+import datetime
+import os
+import subprocess
+import sys
+import textwrap
+
+import pyspark.sql.functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from odc_stac_spark.session import literal_df
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+SCHEMA = StructType(
+    [
+        StructField("s", StringType()),
+        StructField("n", LongType()),
+        StructField("t", TimestampType()),
+        StructField("x", DoubleType()),
+    ]
+)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_literal_df_values_and_types(spark):
+    """Strings with quotes, backslashes and non-ASCII text, 64-bit longs,
+    naive and aware timestamps (the same instants ``F.lit`` gives) and an
+    all-NULL double column come back exactly, typed by the schema."""
+    naive = datetime.datetime(2021, 3, 4, 5, 6, 7, 891011)
+    aware = datetime.datetime(2021, 3, 4, 5, 6, 7, tzinfo=datetime.timezone(datetime.timedelta(hours=2)))
+    rows = [
+        ("it's \"quoted\" \\ é 中文 🚀", (1 << 62) + 1, naive, None),
+        ("", -(1 << 63), aware, None),
+        (None, None, None, None),
+    ]
+    df = literal_df(spark, rows, SCHEMA)
+    assert df.schema == SCHEMA
+    got = df.collect()
+    assert [tuple(r) for r in got[:1]] == [rows[0]]
+    assert tuple(got[2]) == rows[2]
+    assert got[1]["s"] == "" and got[1]["n"] == -(1 << 63) and got[1]["x"] is None
+    lit = spark.range(1).select(F.lit(naive).alias("a"), F.lit(aware).alias("b")).first()
+    assert (got[0]["t"], got[1]["t"]) == (lit["a"], lit["b"])
+    # NULL-only columns keep their type through an expression
+    assert df.select((F.col("x") + 1).alias("y")).dtypes == [("y", "double")]
+
+
+def test_literal_df_sizes_and_plan(spark):
+    """0 rows and more than 1024 rows both plan a one-partition
+    ``LocalTableScan``: no Python worker reads them."""
+    schema = StructType([StructField("a", LongType()), StructField("b", StringType())])
+    empty = literal_df(spark, [], schema)
+    assert empty.schema == schema
+    assert empty.collect() == []
+    rows = [(i, f"v{i}") for i in range(3000)]
+    big = literal_df(spark, rows, schema)
+    for df in (empty, big):
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "PythonRDD" not in plan, plan
+        assert df.rdd.getNumPartitions() == 1
+    assert [tuple(r) for r in big.collect()] == rows
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path):
+    """A driver started outside the repo with no PYTHONPATH still gets
+    ``odc_stac_spark`` into its Python workers."""
+    script = tmp_path / "worker_import.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {REPO!r})
+            from odc_stac_spark.session import get_spark
+
+            def fn(batches):
+                import odc_stac_spark
+                for pdf in batches:
+                    yield pdf.assign(ok=1)
+
+            spark = get_spark(master="local[1]", shuffle_partitions=1)
+            print("OK", spark.range(2).mapInPandas(fn, "id long, ok int").count())
+            spark.stop()
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(PYSPARK_PYTHON=sys.executable, SPARK_DRIVER_MEMORY="1g")
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "OK 2" in out.stdout, out.stderr[-3000:]
