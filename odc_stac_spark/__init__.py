@@ -6,8 +6,8 @@ this package re-expresses its data model and every operator Spark-first:
 
 - **metadata plane**: STAC items as nested DataFrames (see
   :mod:`odc_stac_spark.sources.stac_items`), planned with Catalyst.
-- **pixel plane**: a tiles DataFrame (band, t, iy, ix, data) produced by a
-  grid-index equi-join (tile explode) + ``applyInPandas`` mosaic
+- **pixel plane**: a tiles DataFrame (band, t, iy, ix, data) produced by
+  tile binning (grid-index ranges) + one ``mapInPandas`` mosaic executor
   (see :mod:`odc_stac_spark.plans.load` / :mod:`odc_stac_spark.operators.mosaic`).
 - **relational + LLM-pipeline surface**: dedup, similarity search, text
   analysis, streaming — all registered in :mod:`odc_stac_spark.queries`

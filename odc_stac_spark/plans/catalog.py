@@ -218,13 +218,13 @@ def _plan_load_df(
         base = base.where(F.col("asset_name").isin(list(bands)))
 
     # the representative ts per group follows the precedence basis —
-    # (ts, id) or input index
+    # (ts, id) with a missing ts last, or input index
     key = _group_key_col(groupby, has_item_idx="item_idx" in base.columns)
     if preserve_original_order:
         _require_item_idx(base)
         member = F.struct("item_idx", "ts")
     else:
-        member = F.struct("ts", "id")
+        member = F.struct(F.col("ts").isNull().alias("no_ts"), "ts", "id")
     band_rows, grid_rows, group_rows = _plan_rows(base, key, member)
 
     # solar_day derives longitude from the grid centroid — only valid for

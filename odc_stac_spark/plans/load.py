@@ -2,23 +2,26 @@
 
 Reference pipeline (odc/stac/_stac_load.py:88-477): parse → output-grid
 resolution → band resolution → temporal grouping → tile binning → per-tile
-mosaic tasks. Here every stage is a DataFrame transform, and the physical
-plan the reference hand-builds as a Dask graph (loader/_builder.py:99-155)
-falls out of ``explode`` + ``groupBy`` + ``applyInPandas``:
+mosaic tasks. Two binners turn sources into ONE tile-task table
+(``_TASK_DDL``: a row per (band, t, iy, ix) task holding its sources in
+precedence order, A4), and one executor runs it — the role of the
+reference's shared task-graph code (loader/_builder.py:99-155):
 
-    sources_df (from a list OR any DataFrame — load_from_sources)
-      → group keys (A1/A2: id | time | solar_day)            [expressions]
-      → tile explode (P6/J1: bbox → tile-index ranges)       [sequence+explode]
-      → groupBy(band, t, iy, ix).applyInPandas(tile task)    [S8+A6;
-          (time, id) precedence sorted inside the task — A4]
+    load(items)                   driver binning (J1), no shuffle
+    load_from_sources(DataFrame)  tile explode (J1) → one hash exchange
+                                  on the task key → sorted collect_list
+      → task table (band, t, iy, ix, sources)
+      → _run_tiles: mapInPandas over the task table             [S8+A6]
       → tiles DataFrame (band, t, iy, ix, …, data BINARY)
 
 Scale properties the reference had to build by hand and Spark gives us:
 
 - spatial partition pruning: tiles an item doesn't touch are never
   emitted (explode produces only intersecting indices — no theta join);
-- the tile task count is ``bands × groups × tiles`` and shuffles once, on
-  the task key — co-partitioned with the output write;
+- tile tasks are packed per core, not per tile: the catalog path's one
+  exchange has ``min(#tasks, defaultParallelism)`` partitions and the
+  list path's task table splits over the cores, so each Python worker
+  streams many tiles and pays its fixed cost once;
 - item/plan metadata ships to executors via closure broadcast (the Dask
   token-dedup trick, loader/_builder.py:117-132, for free);
 - at 100 TB the items table itself stays distributed: group keys, bbox
@@ -39,8 +42,10 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -604,6 +609,31 @@ _TILE_SCHEMA = StructType(
     ]
 )
 
+#: one tile source as the tile task reads it
+_SOURCE_DDL = (
+    "uri string, subdataset string, src_band int, g_ny int, g_nx int, g_sx double, "
+    "g_x0 double, g_sy double, g_y0 double, g_crs string, dtype string, nodata double"
+)
+#: the task table both binners build and :func:`_run_tiles` runs: one row
+#: per tile task, its ``sources`` already in precedence order (A4)
+_TASK_DDL = f"band string, t int, iy int, ix int, sources array<struct<{_SOURCE_DDL}>>"
+
+
+def _aoi_tiles(plan: LoadPlan):
+    """P4: the output tiles whose bbox meets the plan's AOI ring, or None
+    without a ring. Tiles inside the ring's bbox but outside the ring are
+    never tasked: for a large rotated/irregular AOI that drops a constant
+    fraction of all tile work. Bounded by the output tile grid, not by the
+    source count."""
+    if plan.aoi is None:
+        return None
+    tiles = plan.tiles
+    return {
+        (iy, ix)
+        for iy, ix in tiles.tiles_overlapping_bbox(plan.gbox.bbox())
+        if plan.aoi.intersects_bbox(tiles.tile_geobox(iy, ix).bbox())
+    }
+
 
 def _tile_result(
     band: str,
@@ -616,11 +646,10 @@ def _tile_result(
     cfg: Dict[str, RasterLoadParams],
     audit: bool,
 ) -> dict:
-    """S8 + A6: execute ONE tile task — windowed reads of every (ordered)
-    source that intersects the tile, first-valid mosaic, dtype/nodata
-    resolution. Shared by the shuffle-free packed path (``load``) and the
-    distributed groupBy path (``load_from_sources``). Sources must already
-    be in precedence order (A4)."""
+    """S8 + A6: execute ONE tile task — windowed reads of every source
+    that intersects the tile, first-valid mosaic, dtype/nodata resolution.
+    ``sources`` are ``_SOURCE_DDL`` records in precedence order (A4); the
+    only caller is :func:`_run_tiles`."""
     tgb = GeoboxTiles(gb, tile_shape).tile_geobox(iy, ix)
     c = cfg[band]
     reads = []
@@ -634,7 +663,7 @@ def _tile_result(
             nod = None
         src = RasterSource(
             uri=s["uri"],
-            subdataset=s.get("subdataset"),
+            subdataset=s["subdataset"],
             band=int(s["src_band"]),
             geobox=GeoBox(
                 (int(s["g_ny"]), int(s["g_nx"])),
@@ -684,6 +713,35 @@ def _tile_result(
     }
 
 
+def _run_tiles(tasks: DataFrame, plan: LoadPlan) -> DataFrame:
+    """S8 + A6, the one tile executor of both load paths: a ``_TASK_DDL``
+    table → tiles (``_TILE_SCHEMA``) through one ``mapInPandas``, so each
+    partition's tasks stream through one Python worker. Plan scalars ship
+    via closure broadcast."""
+    gb, tile_shape, cfg, audit = plan.gbox, plan.tiles.tile_shape, plan.cfg, plan.audit
+
+    def run_packed(batches):
+        # chunk output rows (8 tiles ≈ a few MB) so each Arrow batch
+        # amortizes its framing cost without holding a partition's whole
+        # pixel output in one pandas block
+        for pdf in batches:
+            rows = []
+            for r in pdf.itertuples():
+                rows.append(
+                    _tile_result(
+                        r.band, int(r.t), int(r.iy), int(r.ix), r.sources, gb, tile_shape,
+                        cfg, audit,
+                    )
+                )
+                if len(rows) >= 8:
+                    yield pd.DataFrame(rows)
+                    rows = []
+            if rows:
+                yield pd.DataFrame(rows)
+
+    return tasks.mapInPandas(run_packed, _TILE_SCHEMA)
+
+
 def load(
     spark: SparkSession,
     items: Sequence[Item],
@@ -698,12 +756,11 @@ def load(
 
     The list path bins items to tiles ON THE DRIVER (the item list is
     driver-resident by definition — the reference builds its whole Dask
-    task graph driver-side the same way, loader/_builder.py:99-155) and
-    ships pre-grouped tile tasks through a single-stage ``mapInPandas``:
-    zero shuffles, zero groupBy machinery — the only Spark stage is the
-    pixel work itself. Catalogs too big for a driver list go through
+    task graph driver-side the same way, loader/_builder.py:99-155) into
+    a ``_TASK_DDL`` table built through Arrow, which :func:`_run_tiles`
+    runs: zero shuffles, zero groupBy machinery — the only Spark stage is
+    the pixel work itself. Catalogs too big for a driver list go through
     ``load_from_sources``, which does the same binning distributed."""
-    import json
     import math
 
     if patch_url is not None:
@@ -722,19 +779,7 @@ def load(
     ty, tx = plan.tiles.tile_shape
     dsx, _, dx0, _, dsy, dy0 = gb.transform
     H, W = gb.shape
-
-    # P4: AOI polygon tile pruning — a tile whose bbox misses the ring
-    # geometry is never tasked (corner tiles inside the polygon's bbox but
-    # outside the polygon itself: for a large rotated/irregular AOI this
-    # drops a constant fraction of ALL tile work, the same reason the
-    # reference intersects item footprints with the query geometry)
-    aoi_reject = None
-    if plan.aoi is not None:
-        aoi_reject = {
-            (iy, ix)
-            for iy, ix in plan.tiles.tiles_overlapping_bbox(gb.bbox())
-            if not plan.aoi.intersects_bbox(plan.tiles.tile_geobox(iy, ix).bbox())
-        }
+    keep = _aoi_tiles(plan)
 
     # --- J1 driver-side: source bbox → intersecting tile indices (same
     # math as the SQL explode in load_from_sources), accumulating the
@@ -778,26 +823,11 @@ def load(
             }
             for iy in range(py0 // ty, (py1 - 1) // ty + 1):
                 for ix in range(px0 // tx, (px1 - 1) // tx + 1):
-                    if aoi_reject is not None and (iy, ix) in aoi_reject:
-                        continue
-                    tasks.setdefault((b, t, iy, ix), []).append((order, sdict))
+                    if keep is None or (iy, ix) in keep:
+                        tasks.setdefault((b, t, iy, ix), []).append((order, sdict))
     if not tasks:
         raise ValueError("no sources for requested bands")
 
-    task_rows = []
-    for (b, t, iy, ix), lst in sorted(tasks.items(), key=lambda kv: kv[0]):
-        lst.sort(key=lambda p: p[0])
-        task_rows.append(
-            {
-                "band": b,
-                "t": t,
-                "iy": iy,
-                "ix": ix,
-                # metadata payload is ~100 B/source — JSON keeps the task
-                # table a simple flat schema (no nested Arrow structs)
-                "sources_json": json.dumps([d for _, d in lst]),
-            }
-        )
     # deterministic hash-interleave: createDataFrame splits rows into
     # CONTIGUOUS chunks per partition, and contiguous tiles share cost
     # structure (edge tiles cheap, overlap-seam tiles read 2× sources) —
@@ -805,35 +835,18 @@ def load(
     # partitions so no straggler partition caps wall-clock (local bench:
     # the 84-task warp load's slowest partition drops ~2×). At catalog
     # scale load_from_sources shuffles on the task key instead.
-    task_rows.sort(
-        key=lambda r: zlib.crc32(f"{r['band']}|{r['t']}|{r['iy']}|{r['ix']}".encode())
-    )
-
-    cfg = plan.cfg
-    audit = plan.audit
-    tile_shape = (ty, tx)
-
-    def run_packed(batches):
-        # chunk output rows (8 tiles ≈ a few MB) so each Arrow batch
-        # amortizes its framing cost without holding a partition's whole
-        # pixel output in one pandas block
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                rows.append(
-                    _tile_result(
-                        r.band, int(r.t), int(r.iy), int(r.ix),
-                        json.loads(r.sources_json), gb, tile_shape, cfg, audit,
-                    )
-                )
-                if len(rows) >= 8:
-                    yield pd.DataFrame(rows)
-                    rows = []
-            if rows:
-                yield pd.DataFrame(rows)
-
-    tdf = spark.createDataFrame(pd.DataFrame(task_rows))
-    return tdf.mapInPandas(run_packed, _TILE_SCHEMA), plan
+    task_rows = [
+        dict(band=b, t=t, iy=iy, ix=ix, sources=[d for _, d in sorted(lst, key=lambda p: p[0])])
+        for (b, t, iy, ix), lst in sorted(
+            tasks.items(), key=lambda kv: (zlib.crc32("|".join(map(str, kv[0])).encode()), kv[0])
+        )
+    ]
+    # a pyarrow table: a LocalTableScan split over the cores whatever the
+    # session's Arrow setting (a pandas frame without it is a Python-RDD
+    # scan whose type check rejects an int nodata in a double field)
+    schema = StructType.fromDDL(_TASK_DDL)
+    table = pa.Table.from_pylist(task_rows, schema=to_arrow_schema(schema))
+    return _run_tiles(spark.createDataFrame(table, schema), plan), plan
 
 
 def _footprint_in(gbox: GeoBox, dst_crs: str):
@@ -869,10 +882,16 @@ def load_from_sources(
 ) -> DataFrame:
     """The 100 TB ingestion path: sources as a DataFrame (e.g. from
     sources/stac_items.parse_items over a STAC-geoparquet catalog) — the
-    item table never lives on the driver. ``load()`` is the list-input
-    convenience wrapper. Expected columns: item_idx, item_id, ts, t, band,
-    uri, src_band, g_ny, g_nx, g_sx, g_x0, g_sy, g_y0, g_crs, dtype,
-    nodata."""
+    item table never lives on the driver. ``load()`` bins a driver list
+    itself; both feed :func:`_run_tiles`. Expected columns: item_idx,
+    item_id, ts, t, band, uri, src_band, g_ny, g_nx, g_sx, g_x0, g_sy,
+    g_y0, g_crs, dtype, nodata; optional: fp_xmin, fp_ymin, fp_xmax,
+    fp_ymax (the source footprint in the output CRS, default the affine
+    bbox) and subdataset (netcdf/hdf5 variable address).
+
+    The exploded rows shuffle once, on the task key, into
+    ``min(#tasks, defaultParallelism)`` partitions; the aggregation that
+    collects each task's sources reuses that partitioning."""
     # --- J1: tile explode. Source bbox → tile index ranges, pure SQL math
     # (only intersecting tiles are generated: spatial partition pruning).
     gb = plan.gbox
@@ -911,66 +930,43 @@ def load_from_sources(
         .withColumn("ix", F.col("ix").cast("int"))
     )
 
-    # P4 AOI tile pruning, distributed form: the accept-set is a driver
-    # computation over the OUTPUT tile grid (bounded by nty*ntx, not by
-    # source count) pushed down as an integer-set filter on the exploded
-    # rows — tiles inside the AOI's bbox but outside the ring never task.
-    if plan.aoi is not None:
-        keep = [
-            iy * ntx + ix
-            for iy, ix in plan.tiles.tiles_overlapping_bbox(gb.bbox())
-            if plan.aoi.intersects_bbox(plan.tiles.tile_geobox(iy, ix).bbox())
-        ]
+    # P4 AOI tile pruning, pushed down as an integer-set filter
+    keep = _aoi_tiles(plan)
+    if keep is not None:
         src_tiles = src_tiles.where(
-            (F.col("iy") * F.lit(ntx) + F.col("ix")).isin(keep)
+            (F.col("iy") * F.lit(ntx) + F.col("ix")).isin(sorted(iy * ntx + ix for iy, ix in keep))
         )
 
-    # --- A4: precedence order within each tile cell: (time, id) asc, or
-    # original input order (preserve_original_order, _stac_load.py:552-557).
-    # Sorted INSIDE the tile task (groups are small) — Spark aggregation is
-    # unordered, so order must never depend on shuffle arrival; sorting in
-    # the task avoids a whole extra window pass over the exploded rows.
-    order_cols = ["item_idx"] if preserve_original_order else ["ts", "item_id"]
+    # --- A4: precedence within each task: (time, id) asc with a missing
+    # time last, or original input order (preserve_original_order,
+    # _stac_load.py:552-557). The order key leads each source struct, so
+    # sort_array orders by it, and rows tied on it by their remaining
+    # fields — never by shuffle arrival.
+    if preserve_original_order:
+        order = F.struct("item_idx")
+    else:
+        order = F.struct(F.col("ts").isNull(), "ts", "item_id")
+    src = [
+        (F.col(c) if c in sources_df.columns else F.lit(None)).cast(ty).alias(c)
+        for c, ty in (f.split() for f in _SOURCE_DDL.split(", "))
+    ]
     # Explicit task partitioning: AQE would coalesce this shuffle to ~1
     # partition (the task *rows* are tiny metadata), but each row expands
     # into megabytes of pixel work inside the UDF — cost is invisible to
-    # the optimizer. Pin partitions to the tile-task count so every task
-    # can run in parallel; the groupBy below reuses this hash partitioning
-    # (same keys), adding no second exchange.
+    # the optimizer. One partition per core packs the tasks like the list
+    # path's; the aggregation reuses this hash partitioning (same keys).
     n_tasks = len(plan.bands) * max(len(plan.group_keys), 1) * nty * ntx
-    tasks = src_tiles.repartition(min(max(n_tasks, 1), 20000), "band", "t", "iy", "ix")
-
-    # --- S8 + A6: the tile task. Plan scalars ship via closure broadcast.
-    cfg = plan.cfg
-    audit = plan.audit
-    gb_obj = GeoBox((gb.shape[0], gb.shape[1]), gb.transform, gb.crs)
-    src_cols = [
-        "uri", "src_band", "g_ny", "g_nx", "g_sx", "g_x0", "g_sy", "g_y0",
-        "g_crs", "dtype", "nodata",
-    ]
-    if "subdataset" in sources_df.columns:  # netcdf/hdf5 variable address
-        src_cols.append("subdataset")
-
-    def run_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        sources = pdf[src_cols].to_dict("records")
-        return pd.DataFrame(
-            [
-                _tile_result(
-                    pdf["band"].iloc[0],
-                    int(pdf["t"].iloc[0]),
-                    int(pdf["iy"].iloc[0]),
-                    int(pdf["ix"].iloc[0]),
-                    sources,
-                    gb_obj,
-                    (ty, tx),
-                    cfg,
-                    audit,
-                )
-            ]
+    n_parts = min(n_tasks, sources_df.sparkSession.sparkContext.defaultParallelism)
+    tasks = (
+        src_tiles.repartition(n_parts, "band", "t", "iy", "ix")
+        .groupBy("band", "t", "iy", "ix")
+        .agg(F.sort_array(F.collect_list(F.struct(order.alias("_o"), *src))).alias("sources"))
+        .select(
+            "band", F.col("t").cast("int"), "iy", "ix",
+            F.transform("sources", lambda s: s.dropFields("_o")).alias("sources"),
         )
-
-    return tasks.groupBy("band", "t", "iy", "ix").applyInPandas(run_tile, _TILE_SCHEMA)
+    )
+    return _run_tiles(tasks, plan)
 
 
 @dataclass

@@ -91,7 +91,7 @@ def _demo_items(n: int = 9):
     GROUP BY band, iy, ix, height, width
     """,
     doc="S8+A6+J1 end-to-end, HASH-GATED: 9-item 2-band solar-day mosaic "
-    "through the tile-explode → applyInPandas pipeline; per-tile valid "
+    "through the tile binning → mapInPandas pipeline; per-tile valid "
     "count + value sum, with a DuckDB oracle that recomputes every pixel "
     "of the mosaic (grid union, item→tile binning, first-valid precedence, "
     "per-band nodata masking) from the synth-generator formula. Byte-level "

@@ -26,9 +26,10 @@ import os
 from typing import Sequence
 
 import pyarrow as pa
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 #: the directory holding the ``odc_stac_spark`` package
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -82,4 +83,21 @@ def literal_df(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -
         if field.dataType.needConversion():
             values = [field.dataType.toInternal(v) for v in values]
         arrays.append(pa.array(values, type=arrow_field.type))
-    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema).coalesce(1)
+    # pyspark rebuilds a map of nested values without its null mask under
+    # pyarrow < 17 (SPARK-48302), so a NULL map would read back as {}: a
+    # top-level NULL map is restored from a null-flag column (the Project
+    # folds into the LocalRelation)
+    lost = [i for i, a in enumerate(arrays) if pa.types.is_map(a.type) and a.null_count]
+    full = StructType(schema.fields + [StructField(f"_null{i}", BooleanType()) for i in lost])
+    arrays += [arrays[i].is_null() for i in lost]
+    df = spark.createDataFrame(pa.Table.from_arrays(arrays, schema=to_arrow_schema(full)), full)
+    if lost:
+        df = df.select(
+            *[
+                F.when(F.col(f"_null{i}"), None).otherwise(F.col(f.name)).alias(f.name)
+                if i in lost
+                else f.name
+                for i, f in enumerate(schema.fields)
+            ]
+        )
+    return df.coalesce(1)

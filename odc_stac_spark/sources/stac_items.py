@@ -300,14 +300,22 @@ def items_df(
 
     ``with_idx=True`` attaches an ``item_idx`` input-order column — the
     basis for ``preserve_original_order`` on the catalog path (a DataFrame
-    has no inherent row order, so the order must be a column)."""
-    docs = list(items)
-    if not with_idx:
-        return spark.createDataFrame(docs, schema=ITEM_SCHEMA)
-    schema = StructType(ITEM_SCHEMA.fields + [StructField("item_idx", IntegerType())])
-    return spark.createDataFrame(
-        [{**d, "item_idx": i} for i, d in enumerate(docs)], schema=schema
-    )
+    has no inherent row order, so the order must be a column).
+
+    Each dict (or object, by its attributes) maps onto the schema by field
+    name, a missing one being NULL, and the rows become a
+    :func:`literal_df`: a JVM-only scan, not the Python-RDD scan of
+    ``createDataFrame(list)``."""
+    names = ITEM_SCHEMA.fieldNames()
+    rows = [
+        tuple((d if isinstance(d, dict) else vars(d)).get(n) for n in names)
+        + ((i,) if with_idx else ())
+        for i, d in enumerate(items)
+    ]
+    schema = ITEM_SCHEMA
+    if with_idx:
+        schema = StructType(ITEM_SCHEMA.fields + [StructField("item_idx", IntegerType())])
+    return literal_df(spark, rows, schema)
 
 
 def is_raster_data_sql(asset: str) -> str:

@@ -3,7 +3,7 @@
 The reference's reader protocol (``SomeReader.read(src, cfg, dst_geobox,
 dst)``, loader/types.py:142-157) is mirrored here as a pluggable driver
 that executes *inside Spark executors* (called from the mosaic
-``applyInPandas`` task — see plans/load.py).
+``mapInPandas`` tile task — see plans/load.py).
 
 Two drivers:
 

@@ -555,3 +555,72 @@ def test_catalog_plan_errors(spark, parsed_catalog, kw, match):
     parsed, _ = parsed_catalog
     with pytest.raises(ValueError, match=match):
         plan_load_df(spark, parsed, groupby="time", **kw)
+
+
+@pytest.mark.parametrize("same_ts, preserve", [(True, False), (False, False), (False, True)])
+def test_precedence_parity_with_list_path(spark, same_ts, preserve):
+    """Overlapping items listed in reverse: with equal timestamps the item
+    id decides on both paths; with preserve_original_order the input
+    order decides, even against the time order (equal timestamps with
+    preserve_original_order: test_preserve_original_order_catalog)."""
+    origins = [(0.0, 1000.0), (40.0, 980.0), (20.0, 990.0)]
+    ts = [T0 if same_ts else T0 + timedelta(hours=i) for i in range(3)]
+    docs = [catalog_item(i, o, ts=t) for i, (o, t) in enumerate(zip(origins, ts))][::-1]
+    parsed = parse_items(spark, items_df(spark, docs, with_idx=preserve))
+    # one group (no item has the property), so precedence decides every pixel
+    kw = dict(groupby="platform", chunks=(64, 64))
+    tiles_df, plan = load_from_catalog(spark, parsed, preserve_original_order=preserve, **kw)
+
+    items = equivalent_items(3, origins)
+    for it, t in zip(items, ts):
+        it.datetime = t
+    tiles2, plan2 = load(spark, items[::-1], preserve_original_order=preserve, **kw)
+    got, want = assemble_numpy(tiles_df, plan), assemble_numpy(tiles2, plan2)
+    assert plan.gbox == plan2.gbox and set(got) == set(want) == {"red", "nir"}
+    for b in got:
+        np.testing.assert_array_equal(got[b], want[b])
+
+
+def test_missing_datetime_sorts_last_in_its_group(spark):
+    """An item with no datetime shares a property group with dated items:
+    its NULL ts sorts last in the mosaic precedence and never becomes the
+    group's time — the same load as if it were the latest item."""
+    origins = [(0.0, 1000.0), (40.0, 980.0), (20.0, 990.0)]
+
+    def catalog(first_ts):
+        docs = [catalog_item(i, o) for i, o in enumerate(origins)]
+        for d in docs:
+            d["properties"] = {"platform": "sat-a"}
+        docs[0]["datetime"] = first_ts
+        return parse_items(spark, items_df(spark, docs))
+
+    kw = dict(groupby="platform", chunks=(64, 64))
+    tiles_df, plan = load_from_catalog(spark, catalog(None), **kw)
+    tiles2, plan2 = load_from_catalog(spark, catalog(T0 + timedelta(days=1)), **kw)
+    assert plan.group_keys == plan2.group_keys == ["sat-a"]
+    assert plan.group_ts == plan2.group_ts == [T0 + timedelta(hours=1)]
+    got, want = assemble_numpy(tiles_df, plan), assemble_numpy(tiles2, plan2)
+    for b in want:
+        np.testing.assert_array_equal(got[b], want[b])
+    # the undated item really is under the others, not absent
+    undated = catalog(None).where("id = 'cat-000'")
+    alone = assemble_numpy(load_from_catalog(spark, undated, plan=plan, **kw)[0], plan)
+    assert (alone["red"] != -1).any()
+
+
+def test_catalog_tiles_run_packed_per_core(spark, parsed_catalog):
+    """The catalog path runs the list path's executor: no grouped pandas
+    UDF, and exactly one shuffle — on the task key, into at most
+    defaultParallelism partitions — feeds the ``MapInPandas``."""
+    import re
+
+    parsed, _ = parsed_catalog
+    tiles_df, _ = load_from_catalog(spark, parsed, groupby="time", chunks=(32, 32))
+    text = tiles_df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in text and "MapInPandas" in text, text
+    # shuffle exchanges only: the key map joins through a BroadcastExchange
+    exchanges = [ln for ln in text.splitlines() if re.search(r"(?<!Broadcast)Exchange ", ln)]
+    assert len(exchanges) == 1, text
+    m = re.search(r"hashpartitioning\(band#\d+, t#\d+L?, iy#\d+, ix#\d+, (\d+)\)", exchanges[0])
+    assert m is not None, exchanges[0]
+    assert 1 <= int(m.group(1)) <= spark.sparkContext.defaultParallelism

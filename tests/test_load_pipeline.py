@@ -302,15 +302,10 @@ def test_explicit_plan_carries_groupby(spark):
     assert_same(got, want)
 
 
-def test_load_from_sources_dataframe_path(spark):
-    """The 100 TB ingestion path: sources arrive as a DataFrame (never a
-    driver list) and produce identical pixels."""
+def _source_rows(items):
+    """``load_from_sources`` input rows for the red band of ``items``."""
     import pandas as pd
 
-    from odc_stac_spark.plans.load import load_from_sources
-
-    items = [mk_item(0, nodata=-1, nodata_every=3), mk_item(1, origin=(300.0, 1000.0), nodata=-1)]
-    plan = plan_load(items, groupby="solar_day", chunks=(48, 48))
     rows = []
     for idx, it in enumerate(items):
         src = it.bands["red"]
@@ -324,10 +319,59 @@ def test_load_from_sources_dataframe_path(spark):
                 "g_crs": g.crs, "dtype": src.meta.data_type, "nodata": src.meta.nodata,
             }
         )
-    sources_df = spark.createDataFrame(pd.DataFrame(rows))
+    return pd.DataFrame(rows)
+
+
+def test_load_from_sources_dataframe_path(spark):
+    """The 100 TB ingestion path: sources arrive as a DataFrame (never a
+    driver list) and produce identical pixels."""
+    from odc_stac_spark.plans.load import load_from_sources
+
+    items = [mk_item(0, nodata=-1, nodata_every=3), mk_item(1, origin=(300.0, 1000.0), nodata=-1)]
+    plan = plan_load(items, groupby="solar_day", chunks=(48, 48))
+    sources_df = spark.createDataFrame(_source_rows(items))
     got = assemble_numpy(load_from_sources(sources_df, plan), plan)
     want = oracle_load(items, plan, groupby="solar_day")
     assert_same(got, want)
+
+
+def test_load_from_sources_ties_break_on_source_fields(spark):
+    """Two sources tied on (ts, item_id) — one item id listed with two
+    assets — keep one precedence whatever order their rows arrive in:
+    the tie breaks on the source fields that follow (uri first), so the
+    lower uri wins, as in a list load that lists it first."""
+    from odc_stac_spark.plans.load import load_from_sources
+
+    a = mk_item(0, nodata=-1, nodata_every=3, ts=T0)
+    b = mk_item(1, origin=(100.0, 950.0), nodata=-1, nodata_every=5, ts=T0)
+    b.id = a.id
+    assert a.bands["red"].uri < b.bands["red"].uri
+    plan = plan_load([a, b], groupby="time", chunks=(48, 48))
+    rows = _source_rows([a, b])
+    want = oracle_load([a, b], plan, groupby="time")
+    for order in (rows, rows[::-1]):
+        sources_df = spark.createDataFrame(order).repartition(2)
+        assert_same(assemble_numpy(load_from_sources(sources_df, plan), plan), want)
+    assert_same(assemble_numpy(load(spark, [a, b], plan=plan)[0], plan), want)
+
+
+def test_list_load_plan_has_no_exchange(spark):
+    """The list path bins on the driver: its tile plan is one
+    ``MapInPandas`` over a JVM ``LocalTableScan`` of the task table, with
+    no shuffle — also in a session that does not convert pandas frames
+    through Arrow (an int nodata then still fills a double field)."""
+    items = [mk_item(0, nodata=-1), mk_item(1, origin=(300.0, 1000.0), nodata=-1)]
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        tiles_df, plan = load(spark, items, groupby="time", chunks=(48, 48))
+        text = tiles_df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in text and "LocalTableScan" in text, text
+        assert "Exchange" not in text and "ExistingRDD" not in text, text
+        assert_same(assemble_numpy(tiles_df, plan), oracle_load(items, plan, groupby="time"))
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_subdataset_sources_through_pipeline(spark):

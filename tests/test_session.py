@@ -11,7 +11,9 @@ import textwrap
 import pyspark.sql.functions as F
 from pyspark.sql.types import (
     DoubleType,
+    IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -73,6 +75,29 @@ def test_literal_df_sizes_and_plan(spark):
         assert "LocalTableScan" in plan and "PythonRDD" not in plan, plan
         assert df.rdd.getNumPartitions() == 1
     assert [tuple(r) for r in big.collect()] == rows
+
+
+def test_literal_df_keeps_null_maps(spark):
+    """A NULL map and an empty map stay apart, also for a map of structs
+    (which the Arrow path would otherwise read back as an empty map), and
+    the plan stays one ``LocalTableScan``."""
+    inner = StructType([StructField("a", IntegerType()), StructField("b", StringType())])
+    schema = StructType(
+        [
+            StructField("k", LongType()),
+            StructField("m", MapType(StringType(), inner)),
+            StructField("p", MapType(StringType(), StringType())),
+        ]
+    )
+    rows = [(0, None, None), (1, {}, {}), (2, {"x": {"a": 1, "b": None}}, {"y": "z"})]
+    df = literal_df(spark, rows, schema)
+    assert df.schema.simpleString() == schema.simpleString()
+    got = [(r.k, r.m, r.p) for r in df.orderBy("k").collect()]
+    assert got[:2] == [(0, None, None), (1, {}, {})]
+    assert got[2][1]["x"].asDict() == {"a": 1, "b": None} and got[2][2] == {"y": "z"}
+    plan = _plan(df)
+    assert "LocalTableScan" in plan and "Project" not in plan, plan
+    assert df.rdd.getNumPartitions() == 1
 
 
 def test_python_workers_import_package_from_any_cwd(tmp_path):

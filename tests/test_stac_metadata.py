@@ -433,3 +433,50 @@ def test_raster_heuristic_branches(spark, media, roles, href, want):
         }
     }
     assert assets_df(items_df(spark, [it])).first().is_raster is want
+
+
+def _items_df_docs():
+    """S2 and Landsat items plus docs with missing keys (top-level and in
+    an asset) and with empty or missing assets."""
+    partial = s2_item(2)
+    del partial["collection"], partial["start_datetime"]
+    partial["assets"] = {"B04": {"href": "https://example.com/B04.tif", "gsd": 10.0}}
+    return [
+        s2_item(0),
+        landsat_item(),
+        partial,
+        {"id": "empty-assets", "datetime": T0, "assets": {}, "properties": {}},
+        {"id": "bare"},
+    ]
+
+
+@pytest.mark.parametrize("with_idx", [False, True])
+def test_items_df_rows_equal_create_dataframe(spark, with_idx):
+    """items_df maps each dict onto ITEM_SCHEMA by name: its rows equal
+    what ``createDataFrame(list of dicts)`` builds from the same docs,
+    including NULL for a missing key, an empty assets map and a NULL
+    (not empty) map for missing assets."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from odc_stac_spark.sources.stac_items import ITEM_SCHEMA
+
+    docs = _items_df_docs()
+    got = items_df(spark, docs, with_idx=with_idx)
+    schema, rows = ITEM_SCHEMA, docs
+    if with_idx:
+        schema = StructType(ITEM_SCHEMA.fields + [StructField("item_idx", IntegerType())])
+        rows = [{**d, "item_idx": i} for i, d in enumerate(docs)]
+    want = spark.createDataFrame(rows, schema=schema)
+    assert got.schema.simpleString() == want.schema.simpleString()
+    assert got.collect() == want.collect()
+    by_id = {r.id: r for r in got.collect()}
+    assert by_id["empty-assets"].assets == {} and by_id["bare"].assets is None
+
+
+def test_items_df_plans_one_local_table_scan(spark):
+    """items_df is a one-partition JVM ``LocalTableScan``: no Python
+    worker reads it."""
+    df = items_df(spark, _items_df_docs(), with_idx=True)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "PythonRDD" not in plan and "ExistingRDD" not in plan, plan
+    assert df.rdd.getNumPartitions() == 1
