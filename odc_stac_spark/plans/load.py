@@ -170,6 +170,15 @@ def _group_key(item: Item, groupby: str, idx: int, default_lon: float = 0.0):
     raise ValueError(f"unsupported groupby: {groupby!r}")
 
 
+def _precedence(item: Item) -> Tuple:
+    """A4 precedence by time: ``(time, id)`` with a missing datetime last,
+    the catalog path's ``(ts IS NULL, ts, item_id)``. Undated items share
+    the placeholder 0 and order by id, so no ``None`` is ever ordered."""
+    if pd.isna(item.datetime):
+        return (True, 0, item.id)
+    return (False, pd.Timestamp(item.datetime), item.id)
+
+
 def _maybe_int(v: float, tol: float = 1e-6) -> float:
     r = round(v)
     return float(r) if abs(v - r) < tol else v
@@ -522,13 +531,13 @@ def plan_load(
     grids, foreign, meta = _item_census(items, bands)
 
     def groups(gbox: GeoBox):
-        # each group's representative is its first member by (time, id) or
-        # original index (_stac_load.py:538-566)
+        # each group's representative is its first member by precedence
+        # or original index (_stac_load.py:538-566)
         mid_lon = _mid_longitude(gbox) if groupby == "solar_day" else 0.0
         first: Dict[object, Tuple] = {}
         for i, it in enumerate(items):
             k = _group_key(it, groupby, i, mid_lon)
-            order = (i,) if preserve_original_order else (it.datetime, it.id)
+            order = (i,) if preserve_original_order else _precedence(it)
             if k not in first or order < first[k][0]:
                 first[k] = (order, it.datetime)
         return [(k, ts) for k, (_, ts) in first.items()]
@@ -788,8 +797,8 @@ def load(
     tasks: Dict[Tuple, List[Tuple]] = {}
     for idx, it in enumerate(items):
         t = key_to_t[_group_key(it, groupby, idx, mid_lon)]
-        # A4 precedence basis: original input order or (time, id)
-        order = (idx,) if preserve_original_order else (pd.Timestamp(it.datetime), it.id)
+        # A4 precedence basis: original input order or _precedence
+        order = (idx,) if preserve_original_order else _precedence(it)
         for b in plan.bands:
             src = it.bands.get(b)
             if src is None:

@@ -47,9 +47,10 @@ def _pairs_sql() -> str:
     """
 
 
-@register(
-    "dedup_connected_components",
-    oracle=f"""
+#: connected components of the near-dup pair graph by transitive closure,
+#: each labeled with its minimum doc_id: the oracle of
+#: dedup_connected_components and of its alias dedup_cc_star_contraction
+CC_ORACLE = f"""
     WITH RECURSIVE pairs AS ({_pairs_sql()}),
     edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -63,7 +64,12 @@ def _pairs_sql() -> str:
         SELECT r.a, e.dst FROM reach r JOIN edges e ON e.src = r.b
     )
     SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a
-    """,
+    """
+
+
+@register(
+    "dedup_connected_components",
+    oracle=CC_ORACLE,
     doc="dedup clustering: connected components over near-dup pairs "
     "(survivor selection after LSH), labeled with each component's "
     "minimum doc_id by cc_star_contraction.",
@@ -249,31 +255,18 @@ def cc_star_contraction(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
 
 @register(
     "dedup_cc_star_contraction",
-    oracle=f"""
-    WITH RECURSIVE pairs AS ({_pairs_sql()}),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    verts AS (SELECT DISTINCT src AS doc_id FROM edges),
-    reach(a, b) AS (
-        SELECT doc_id, doc_id FROM verts
-        UNION
-        SELECT r.a, e.dst FROM reach r JOIN edges e ON e.src = r.b
-    )
-    SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a
-    """,
-    doc="connected components over the near-dup pair graph via "
+    oracle=CC_ORACLE,
+    doc="alias of dedup_connected_components: the same computation and "
+    "the same CC_ORACLE gate under a second registry name, so tune only "
+    "dedup_connected_components. Connected components over the near-dup "
+    "pair graph via "
     "cc_star_contraction: driver union-find up to DRIVER_CC_MAX_EDGES "
     "directed edges, large-star/small-star contraction (Kiveris et al. "
     "2014) above it — the 100 TB-safe CC, whose round count grows with "
     "log(component diameter) instead of the diameter itself, so a "
     "pathological transitive near-dup chain cannot turn the driver loop "
     "into thousands of shuffle rounds the way plain min-label "
-    "propagation can. The same computation as "
-    "dedup_connected_components, gated by the same recursive-CTE "
-    "oracle.",
+    "propagation can.",
     tags=("dedup", "iterative", "scale"),
 )
 def dedup_cc_star_contraction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -921,12 +914,9 @@ def _cc_histogram_oracle() -> str:
     """Wrap the gated connected-components oracle's final SELECT as a CTE
     and roll it up to the cluster-size histogram — the composed oracle
     replays the EXACT gated computation (the ann_recall_report pattern)."""
-    from . import REGISTRY
-
-    cc = REGISTRY["dedup_connected_components"].oracle
     final = "SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a"
-    assert final in cc
-    return cc.replace(
+    assert final in CC_ORACLE
+    return CC_ORACLE.replace(
         final,
         """, comp AS (SELECT a AS doc_id, MIN(b) AS component
                     FROM reach GROUP BY a),

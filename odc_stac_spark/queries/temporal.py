@@ -15,7 +15,7 @@ from contextlib import contextmanager
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, normalize_timestamps
 from . import register
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min in microseconds
@@ -101,8 +101,9 @@ def _stage_events_stream(spark: SparkSession, sf_dir: str, prefix: str) -> DataF
     Fixture generations differ in how ``events.ts`` is written (see
     sources/tables.py): TIMESTAMP(NANOS) arrives as bigint under
     ``nanosAsLong``; TIMESTAMP(MICROS, isAdjustedToUTC=false) arrives as
-    TIMESTAMP_NTZ, which watermarks reject. Both are normalized to a
-    UTC-instant TIMESTAMP so the streaming expressions match the batch path.
+    TIMESTAMP_NTZ, which watermarks reject. ``normalize_timestamps``, the
+    batch path's own normalization, turns both into a UTC-instant TIMESTAMP
+    so the streaming expressions match the batch path.
     """
     import os
     import tempfile
@@ -121,13 +122,7 @@ def _stage_events_stream(spark: SparkSession, sf_dir: str, prefix: str) -> DataF
     else:
         os.symlink(src, os.path.join(stage, "events.parquet"))
     raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    kind = dict(stream.dtypes)["ts"]
-    if kind == "bigint":  # int64 nanos under nanosAsLong → truncate to µs
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif kind == "timestamp_ntz":  # naive-UTC by fixture convention
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_timestamps(spark.readStream.schema(raw_schema).parquet(stage))
 
 
 @register(

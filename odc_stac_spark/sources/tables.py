@@ -59,12 +59,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
        the returned DataFrame is lazy, and the parquet scan consults the
        session's SQLConf at *action* time, so flipping the conf back would
        make a later ``.collect()`` fail on nanos files. The conf's only
-       effect is letting nanos columns arrive as int64, which we immediately
-       normalize below.
+       effect is letting nanos columns arrive as int64, which
+       :func:`normalize_timestamps` immediately normalizes.
 
        The session ``timeZone`` is NOT mutated: the fixture timestamps are
-       naive-UTC by convention, and the normalization below yields the same
-       instants under any session tz — nanos convert via the epoch-based
+       naive-UTC by convention, and :func:`normalize_timestamps` yields the
+       same instants under any session tz — nanos convert via the epoch-based
        ``timestamp_micros``; TIMESTAMP_NTZ converts via a plain cast when
        the session is already UTC (pushdown-friendly — see the inline note)
        and via zone-explicit ``make_timestamp(..., 'UTC')`` otherwise.
@@ -77,6 +77,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return normalize_timestamps(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
+
+
+def normalize_timestamps(df: DataFrame) -> DataFrame:
+    """``df`` (a batch or streaming read of a fixture table) with each
+    :data:`TIMESTAMP_COLUMNS` column as a UTC-instant TIMESTAMP, whichever
+    encoding the fixture generation wrote (see :func:`load_table`)."""
     # Fixture generations differ in how events.ts is written:
     #   (a) TIMESTAMP(NANOS) — arrives as bigint under nanosAsLong;
     #   (b) TIMESTAMP(MICROS, isAdjustedToUTC=false) — arrives as
@@ -84,8 +92,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     #       to_utc_timestamp) reject.
     # Normalize both to a UTC-instant TIMESTAMP so every downstream query
     # sees one type.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     for field in df.schema.fields:
         if field.name not in TIMESTAMP_COLUMNS:
             continue
@@ -113,7 +119,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             #   back to zone-explicit ``make_timestamp(..., 'UTC')`` —
             #   slower, but correct under any session configuration.
             c = field.name
-            tz = spark.conf.get("spark.sql.session.timeZone")
+            tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
             if tz in _UTC_ZONES:
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
             else:

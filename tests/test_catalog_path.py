@@ -19,7 +19,7 @@ from odc_stac_spark.plans.catalog import (
 )
 from odc_stac_spark.functions.geom import Polygon
 from odc_stac_spark.plans.load import Item, assemble_numpy, load, plan_load
-from odc_stac_spark.sources.stac_items import items_df, parse_items
+from odc_stac_spark.sources.stac_items import items_df, parse_items, to_load_items
 
 COG = "image/tiff; application=geotiff; profile=cloud-optimized"
 T0 = datetime(2020, 6, 6, 8, 30)
@@ -584,14 +584,17 @@ def test_precedence_parity_with_list_path(spark, same_ts, preserve):
 def test_missing_datetime_sorts_last_in_its_group(spark):
     """An item with no datetime shares a property group with dated items:
     its NULL ts sorts last in the mosaic precedence and never becomes the
-    group's time — the same load as if it were the latest item."""
+    group's time — the same load as if it were the latest item. The list
+    path keys on the same precedence, whatever the input order, also with
+    two undated items."""
     origins = [(0.0, 1000.0), (40.0, 980.0), (20.0, 990.0)]
 
-    def catalog(first_ts):
+    def catalog(*first_ts):
         docs = [catalog_item(i, o) for i, o in enumerate(origins)]
         for d in docs:
             d["properties"] = {"platform": "sat-a"}
-        docs[0]["datetime"] = first_ts
+        for d, ts in zip(docs, first_ts):
+            d["datetime"] = ts
         return parse_items(spark, items_df(spark, docs))
 
     kw = dict(groupby="platform", chunks=(64, 64))
@@ -606,6 +609,20 @@ def test_missing_datetime_sorts_last_in_its_group(spark):
     undated = catalog(None).where("id = 'cat-000'")
     alone = assemble_numpy(load_from_catalog(spark, undated, plan=plan, **kw)[0], plan)
     assert (alone["red"] != -1).any()
+
+    for parsed, ts in ((catalog(None), T0 + timedelta(hours=1)),
+                       (catalog(None, None), T0 + timedelta(hours=2))):
+        tiles_c, plan_c = load_from_catalog(spark, parsed, **kw)
+        assert plan_c.group_ts == [ts]
+        want = assemble_numpy(tiles_c, plan_c)
+        items = to_load_items(parsed)
+        for ordered in (items, items[::-1]):
+            tiles_l, plan_l = load(spark, ordered, **kw)
+            assert plan_l.gbox == plan_c.gbox
+            assert plan_l.group_keys == ["sat-a"] and plan_l.group_ts == [ts]
+            got = assemble_numpy(tiles_l, plan_l)
+            for b in want:
+                np.testing.assert_array_equal(got[b], want[b])
 
 
 def test_catalog_tiles_run_packed_per_core(spark, parsed_catalog):

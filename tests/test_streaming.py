@@ -68,6 +68,24 @@ def test_stream_tumbling_matches_batch(spark, sf_dir, tmp_path):
         assert w[k] == v, f"window {k}: stream {v} != batch {w[k]}"
 
 
+def test_events_stream_instants_ignore_session_time_zone(spark, sf_dir):
+    """The registry's events stream normalizes ``ts`` through the batch
+    path's helper, so a non-UTC session reads the batch path's instants."""
+    from odc_stac_spark.queries.temporal import _stage_events_stream
+
+    us = F.unix_micros("ts").alias("us")
+    want = sorted(r.us for r in load_table(spark, sf_dir, "events").select(us).collect())
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try:
+        stream = _stage_events_stream(spark, sf_dir, "events_tz_").select(us)
+        _run_stream_to_memory(stream, "events_tz", mode="append")
+        got = sorted(r.us for r in spark.table("events_tz").collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert got == want
+
+
 def test_stream_dedup_drops_watermark_window_duplicates(spark, sf_dir, tmp_path):
     """The same file staged twice: every event is a duplicate; streaming
     dedup must emit each event_id exactly once."""
