@@ -42,6 +42,9 @@ from typing import List, Tuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import StructType
+
+from ..session import literal_df
 
 
 def _cos(a, b):
@@ -90,12 +93,13 @@ def assign_to_centroids(
     array — the same winner as the window's (sim DESC, cent_id ASC)
     order — so every hash-gated oracle image is preserved bit-for-bit."""
     spark = emb.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = literal_df(
+        spark,
         [
             (i, [float(v) for v in c], _seqnorm(c))
             for i, c in enumerate(centroids)
         ],
-        "cent_id int, cemb array<double>, cnrm double",
+        StructType.fromDDL("cent_id int, cemb array<double>, cnrm double"),
     )
     carr_df = cdf.select(
         F.struct("cent_id", "cemb", "cnrm").alias("c")

@@ -28,6 +28,9 @@ from typing import Dict, List
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+
+from ..session import literal_df
 
 
 def _violation_expr(spec: Dict):
@@ -94,9 +97,12 @@ def run_checks(df: DataFrame, checks: List[Dict]) -> DataFrame:
             )
         )
     if not results:  # no checks supplied → empty report, not an IndexError
-        return df.sparkSession.createDataFrame(
+        return literal_df(
+            df.sparkSession,
             [],
-            "check string, column string, violations bigint, total bigint, passed boolean",
+            StructType.fromDDL(
+                "check string, column string, violations bigint, total bigint, passed boolean"
+            ),
         )
     out = results[0]
     for r in results[1:]:

@@ -23,6 +23,7 @@ The item stream itself never leaves the cluster:
 ``sources_from_parsed`` maps parsed rows straight onto the
 ``load_from_sources`` input columns (a broadcast join against the
 #groups-sized key→t map), so catalog → plan → tiles is DataFrame-only.
+Per-row expressions are SQL text, as in ``sources.stac_items``.
 """
 
 from __future__ import annotations
@@ -35,44 +36,46 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..model import GeoBox, RasterBandMetadata
-from ..session import literal_df
+from ..session import literal_df, sql_in, sql_literal
 from .load import LoadPlan, _finish_plan, load_from_sources
 
 
+#: per-row grid geometry of a parsed row (its g_* columns) as SQL text;
+#: x/y edges are origin and origin + pixel size × pixel count
+_X = ("g_transform[2]", "g_transform[2] + g_transform[0] * CAST(g_shape[1] AS DOUBLE)")
+_Y = ("g_transform[5]", "g_transform[5] + g_transform[4] * CAST(g_shape[0] AS DOUBLE)")
+_GEOM = {
+    "gsd": "least(abs(g_transform[0]), abs(g_transform[4]))",
+    "bb_xmin": f"least({_X[0]}, {_X[1]})",
+    "bb_xmax": f"greatest({_X[0]}, {_X[1]})",
+    "bb_ymin": f"least({_Y[0]}, {_Y[1]})",
+    "bb_ymax": f"greatest({_Y[0]}, {_Y[1]})",
+    "ts": "coalesce(datetime, start_datetime, end_datetime)",
+}
+_SIDES = ("xmin", "ymin", "xmax", "ymax")
+
+
 def _with_geom_cols(parsed: DataFrame) -> DataFrame:
-    """Per-row grid geometry scalars from the parsed g_* struct columns."""
-    t = F.col("g_transform")
-    nx = F.col("g_shape")[1].cast("double")
-    ny = F.col("g_shape")[0].cast("double")
-    x_a = t[2]
-    x_b = t[2] + t[0] * nx
-    y_a = t[5]
-    y_b = t[5] + t[4] * ny
-    return (
-        parsed.where(F.col("g_shape").isNotNull() & F.col("g_transform").isNotNull())
-        .withColumn("gsd", F.least(F.abs(t[0]), F.abs(t[4])))
-        .withColumn("bb_xmin", F.least(x_a, x_b))
-        .withColumn("bb_xmax", F.greatest(x_a, x_b))
-        .withColumn("bb_ymin", F.least(y_a, y_b))
-        .withColumn("bb_ymax", F.greatest(y_a, y_b))
-        .withColumn("ts", F.coalesce("datetime", "start_datetime", "end_datetime"))
+    """Rows with a grid, plus its gsd, affine bbox and nominal ts."""
+    return parsed.where("g_shape IS NOT NULL AND g_transform IS NOT NULL").withColumns(
+        {name: F.expr(sql) for name, sql in _GEOM.items()}
     )
 
 
 def _with_footprints(df: DataFrame, dst_crs: str) -> DataFrame:
-    """``fp_*`` columns: source footprint bbox expressed in ``dst_crs``.
+    """``df`` plus ``_fp``, the source footprint bbox in ``dst_crs`` of
+    each foreign-CRS row (NULL on same-CRS rows, whose footprint is the
+    affine bbox already computed by ``_with_geom_cols``; ``_fp_sql``
+    picks between the two).
 
-    Same-CRS rows use the affine bbox already computed by
-    ``_with_geom_cols``. Foreign-CRS rows reproject a densified boundary
-    through :mod:`odc_stac_spark.functions.proj` — but only once per
-    DISTINCT grid, not per row: catalogs tile on a fixed grid set
-    (e.g. MGRS), so #grids ≪ #items, the per-grid footprints are a
-    broadcast-sized dimension, and the Python work is O(grids) while the
-    item stream itself stays JVM-side (the list path's driver-resident
+    Foreign-CRS rows reproject a densified boundary through
+    :mod:`odc_stac_spark.functions.proj` — but only once per DISTINCT
+    grid, not per row: catalogs tile on a fixed grid set (e.g. MGRS), so
+    #grids ≪ #items, the per-grid footprints are a broadcast-sized
+    dimension, and the Python work is O(grids) while the item stream
+    itself stays JVM-side (the list path's driver-resident
     ``_footprint_in`` loop, plans/load.py, distributed)."""
     from .load import _footprint_in
-
-    same = F.col("g_crs") == dst_crs
 
     @F.pandas_udf("xmin double, ymin double, xmax double, ymax double")
     def _fp(shape: pd.Series, transform: pd.Series, crs: pd.Series) -> pd.DataFrame:
@@ -80,22 +83,26 @@ def _with_footprints(df: DataFrame, dst_crs: str) -> DataFrame:
         for s, t, c in zip(shape, transform, crs):
             gbox = GeoBox((int(s[0]), int(s[1])), tuple(float(v) for v in t), str(c))
             out.append(_footprint_in(gbox, dst_crs))
-        return pd.DataFrame(out, columns=["xmin", "ymin", "xmax", "ymax"])
+        return pd.DataFrame(out, columns=list(_SIDES))
 
+    grid = ["g_shape", "g_transform", "g_crs"]
     fps = (
-        df.where(~same)
-        .select("g_shape", "g_transform", "g_crs")
+        df.where(f"NOT (g_crs = {sql_literal(dst_crs)})")
+        .select(*grid)
         .distinct()
-        .withColumn("_fp", _fp("g_shape", "g_transform", "g_crs"))
+        .withColumn("_fp", _fp(*grid))
     )
-    return (
-        df.join(F.broadcast(fps), ["g_shape", "g_transform", "g_crs"], "left")
-        .withColumn("fp_xmin", F.when(same, F.col("bb_xmin")).otherwise(F.col("_fp.xmin")))
-        .withColumn("fp_ymin", F.when(same, F.col("bb_ymin")).otherwise(F.col("_fp.ymin")))
-        .withColumn("fp_xmax", F.when(same, F.col("bb_xmax")).otherwise(F.col("_fp.xmax")))
-        .withColumn("fp_ymax", F.when(same, F.col("bb_ymax")).otherwise(F.col("_fp.ymax")))
-        .drop("_fp")
-    )
+    return df.join(F.broadcast(fps), grid, "left")
+
+
+def _fp_sql(dst_crs: Optional[str]) -> list:
+    """``fp_*`` (footprint bbox in the output CRS) as SQL: the affine bbox,
+    or with ``dst_crs`` the ``_with_footprints`` footprint of rows outside
+    it."""
+    if dst_crs is None:
+        return [f"bb_{c} AS fp_{c}" for c in _SIDES]
+    same = f"g_crs = {sql_literal(dst_crs)}"
+    return [f"CASE WHEN {same} THEN bb_{c} ELSE _fp.{c} END AS fp_{c}" for c in _SIDES]
 
 
 def _group_key_col(groupby: str, has_item_idx: bool = False) -> F.Column:
@@ -104,21 +111,20 @@ def _group_key_col(groupby: str, has_item_idx: bool = False) -> F.Column:
         return _callable_key_col(groupby, has_item_idx)
     if groupby == "id":
         # one group per item: its input index when the catalog carries one
-        return F.col("item_idx") if has_item_idx else F.col("id")
+        return F.expr("item_idx" if has_item_idx else "id")
     if groupby == "time":
-        return F.col("ts")
+        return F.expr("ts")
     if groupby == "solar_day":
         # A2: date after the longitude-derived whole-hour offset
         # (model.solar_offset_seconds: int(lon/15)*3600, trunc toward 0).
         # Longitude = grid centroid x — valid for geographic CRS only.
-        lon = (F.col("bb_xmin") + F.col("bb_xmax")) / 2.0
-        off = (lon / F.lit(15.0)).cast("int") * 3600
-        return F.to_date(F.col("ts") + F.make_interval(secs=off.cast("double")))
+        off = "CAST((bb_xmin + bb_xmax) / 2.0D / 15.0D AS INT) * 3600"
+        return F.expr(f"to_date(ts + make_interval(0, 0, 0, 0, 0, 0, CAST({off} AS DOUBLE)))")
     if isinstance(groupby, str):
         # any other string keys off the raw STAC properties map; items
         # missing the property share the NULL group (reference
         # _groupby_property, _stac_load.py:515-535)
-        return F.element_at(F.col("properties"), F.lit(groupby))
+        return F.expr(f"element_at(properties, {sql_literal(groupby)})")
     raise ValueError(
         f"groupby={groupby!r}: catalog path supports id|time|solar_day|<property>|callable"
     )
@@ -166,28 +172,31 @@ def _callable_key_col(fn, has_item_idx: bool) -> F.Column:
 _BANDS, _GRIDS, _GROUPS = 0b0111, 0b1001, 0b1110
 
 
-def _plan_rows(base: DataFrame, key: F.Column, member: F.Column):
+#: the planning aggregates over (asset_name, g_crs, gsd, k) and member m
+_PLAN_AGGS = (
+    "first(data_type, true) AS data_type",
+    "first(nodata, true) AS nodata",
+    "first(unit, true) AS unit",
+    "count(1) AS n",
+    "min(bb_xmin) AS x0",
+    "min(bb_ymin) AS y0",
+    "max(bb_xmax) AS x1",
+    "max(bb_ymax) AS y1",
+    "min(m) AS first_m",
+    "grouping_id() AS gid",
+)
+
+
+def _plan_rows(base: DataFrame, key: F.Column, member: str):
     """The one planning scan → (band rows, grid rows, group rows): per-band
     metadata, per-(crs, gsd) count and affine bbox, and per-group-key
     first member, as one ``groupingSets`` aggregation."""
     rows = (
-        base.withColumn("k", key)
-        .withColumn("m", member)
+        base.withColumns({"k": key, "m": F.expr(member)})
         .groupingSets(
             [["asset_name"], ["g_crs", "gsd"], ["k"]], "asset_name", "g_crs", "gsd", "k"
         )
-        .agg(
-            F.first("data_type", ignorenulls=True).alias("data_type"),
-            F.first("nodata", ignorenulls=True).alias("nodata"),
-            F.first("unit", ignorenulls=True).alias("unit"),
-            F.count(F.lit(1)).alias("n"),
-            F.min("bb_xmin").alias("x0"),
-            F.min("bb_ymin").alias("y0"),
-            F.max("bb_xmax").alias("x1"),
-            F.max("bb_ymax").alias("y1"),
-            F.min("m").alias("first_m"),
-            F.grouping_id().alias("gid"),
-        )
+        .agg(*map(F.expr, _PLAN_AGGS))
         .collect()
     )
     return tuple([r for r in rows if r.gid == g] for g in (_BANDS, _GRIDS, _GROUPS))
@@ -215,16 +224,16 @@ def _plan_load_df(
     the output CRS (then no source needs a reprojected footprint)."""
     base = _with_geom_cols(parsed)
     if bands is not None:
-        base = base.where(F.col("asset_name").isin(list(bands)))
+        base = base.where(sql_in("asset_name", bands))
 
     # the representative ts per group follows the precedence basis —
     # (ts, id) with a missing ts last, or input index
     key = _group_key_col(groupby, has_item_idx="item_idx" in base.columns)
     if preserve_original_order:
         _require_item_idx(base)
-        member = F.struct("item_idx", "ts")
+        member = "struct(item_idx, ts)"
     else:
-        member = F.struct(F.col("ts").isNull().alias("no_ts"), "ts", "id")
+        member = "struct(ts IS NULL AS no_ts, ts, id)"
     band_rows, grid_rows, group_rows = _plan_rows(base, key, member)
 
     # solar_day derives longitude from the grid centroid — only valid for
@@ -248,8 +257,8 @@ def _plan_load_df(
         if all(g[0] == crs for g in grids):
             return None
         return tuple(
-            _with_footprints(base.where(F.col("g_crs") != crs), crs)
-            .agg(F.min("fp_xmin"), F.min("fp_ymin"), F.max("fp_xmax"), F.max("fp_ymax"))
+            _with_footprints(base.where(f"g_crs != {sql_literal(crs)}"), crs)
+            .selectExpr("min(_fp.xmin)", "min(_fp.ymin)", "max(_fp.xmax)", "max(_fp.ymax)")
             .first()
         )
 
@@ -276,17 +285,13 @@ def _sources_from_parsed(
     """``sources_from_parsed``; ``reproject=False`` when every source grid
     is known to be in the output CRS, so the footprints are the affine
     bboxes and the per-grid footprint join is skipped."""
-    base = _with_geom_cols(parsed).where(F.col("asset_name").isin(plan.bands))
+    base = _with_geom_cols(parsed).where(sql_in("asset_name", plan.bands))
     # tile binning (J1) needs the footprint bbox in the OUTPUT CRS:
     # same-CRS rows use the affine bbox; foreign-CRS rows get the
     # densified-boundary reproject (per distinct grid, broadcast back —
     # list-path parity, reference safe_geometry model.py:271-299)
     if reproject:
         base = _with_footprints(base, plan.gbox.crs)
-    else:
-        base = base.select(
-            "*", *[F.col(f"bb_{c}").alias(f"fp_{c}") for c in ("xmin", "ymin", "xmax", "ymax")]
-        )
     keyed = base.withColumn(
         "k", _group_key_col(groupby, has_item_idx="item_idx" in base.columns)
     )
@@ -299,41 +304,29 @@ def _sources_from_parsed(
             [StructField("_plan_k", keyed.schema["k"].dataType), StructField("t", LongType())]
         ),
     )
-    t = F.col("g_transform")
-    return (
-        # eqNullSafe: a property-groupby's missing-property group has a
-        # NULL key, which a plain equi-join would silently drop
-        keyed.join(F.broadcast(key_map), F.col("k").eqNullSafe(F.col("_plan_k")))
-        .select(
-            # input index drives preserve_original_order precedence when
-            # the catalog carries one (items_df(..., with_idx=True) /
-            # any ordered catalog column named item_idx); default
-            # precedence is (ts, item_id)
-            (
-                F.col("item_idx")
-                if "item_idx" in keyed.columns
-                else F.lit(0).alias("item_idx")
-            ),
-            F.col("id").alias("item_id"),
-            "ts",
-            "t",
-            F.col("asset_name").alias("band"),
-            F.col("href").alias("uri"),
-            F.col("band_idx").alias("src_band"),
-            F.col("g_shape")[0].alias("g_ny"),
-            F.col("g_shape")[1].alias("g_nx"),
-            t[0].alias("g_sx"),
-            t[2].alias("g_x0"),
-            t[4].alias("g_sy"),
-            t[5].alias("g_y0"),
-            "g_crs",
-            F.col("data_type").alias("dtype"),
-            "nodata",
-            "fp_xmin",
-            "fp_ymin",
-            "fp_xmax",
-            "fp_ymax",
-        )
+    # eqNullSafe: a property-groupby's missing-property group has a NULL
+    # key, which a plain equi-join would silently drop
+    return keyed.join(F.broadcast(key_map), F.expr("k <=> _plan_k")).selectExpr(
+        # input index drives preserve_original_order precedence when the
+        # catalog carries one (items_df(..., with_idx=True) / any ordered
+        # catalog column named item_idx); default precedence is (ts, item_id)
+        "item_idx" if "item_idx" in keyed.columns else "0 AS item_idx",
+        "id AS item_id",
+        "ts",
+        "t",
+        "asset_name AS band",
+        "href AS uri",
+        "band_idx AS src_band",
+        "g_shape[0] AS g_ny",
+        "g_shape[1] AS g_nx",
+        "g_transform[0] AS g_sx",
+        "g_transform[2] AS g_x0",
+        "g_transform[4] AS g_sy",
+        "g_transform[5] AS g_y0",
+        "g_crs",
+        "data_type AS dtype",
+        "nodata",
+        *_fp_sql(plan.gbox.crs if reproject else None),
     )
 
 

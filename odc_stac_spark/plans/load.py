@@ -68,6 +68,7 @@ from ..model import (
     solar_offset_seconds,
 )
 from ..operators.mosaic import fill_tile
+from ..session import sql_in, sql_literal
 from ..sources.synth import reader_for
 
 DEFAULT_CHUNK = 2048  # reference DEFAULT_CHUNK_FOR_LOAD (_stac_load.py:46)
@@ -906,44 +907,37 @@ def load_from_sources(
     gb = plan.gbox
     ty, tx = plan.tiles.tile_shape
     nty, ntx = plan.tiles.chunk_counts
-    dsx, _, dx0, _, dsy, dy0 = gb.transform
+    dsx, _, dx0, _, dsy, dy0 = (f"({sql_literal(v)})" for v in gb.transform)
+    cols = sources_df.columns
     # source footprint in output-CRS world coords: precomputed fp_*
     # columns when provided (cross-CRS capable), else the affine bbox of
     # the source grid (sy<0: y0 is top edge)
-    if "fp_xmin" in sources_df.columns:
-        sxmin, symin = F.col("fp_xmin"), F.col("fp_ymin")
-        sxmax, symax = F.col("fp_xmax"), F.col("fp_ymax")
+    if "fp_xmin" in cols:
+        sxmin, symin, sxmax, symax = "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax"
     else:
-        sxmin = F.col("g_x0")
-        sxmax = F.col("g_x0") + F.col("g_sx") * F.col("g_nx")
-        symax = F.col("g_y0")
-        symin = F.col("g_y0") + F.col("g_sy") * F.col("g_ny")
+        sxmin, sxmax = "g_x0", "g_x0 + g_sx * g_nx"
+        symax, symin = "g_y0", "g_y0 + g_sy * g_ny"
     # dst pixel ranges [px0,px1), [py0,py1), clamped
-    px0 = F.greatest(F.lit(0), F.floor((sxmin - dx0) / dsx))
-    px1 = F.least(F.lit(gb.width), F.ceil((sxmax - dx0) / dsx))
-    py0 = F.greatest(F.lit(0), F.floor((symax - dy0) / dsy))
-    py1 = F.least(F.lit(gb.height), F.ceil((symin - dy0) / dsy))
     src_tiles = (
-        sources_df.withColumn("px0", px0)
-        .withColumn("px1", px1)
-        .withColumn("py0", py0)
-        .withColumn("py1", py1)
-        .where((F.col("px0") < F.col("px1")) & (F.col("py0") < F.col("py1")))
-        .withColumn(
-            "iy", F.explode(F.sequence(F.floor(F.col("py0") / ty), F.floor((F.col("py1") - 1) / ty)))
+        sources_df.withColumns(
+            {
+                "px0": F.expr(f"greatest(0, floor(({sxmin} - {dx0}) / {dsx}))"),
+                "px1": F.expr(f"least({gb.width}, ceil(({sxmax} - {dx0}) / {dsx}))"),
+                "py0": F.expr(f"greatest(0, floor(({symax} - {dy0}) / {dsy}))"),
+                "py1": F.expr(f"least({gb.height}, ceil(({symin} - {dy0}) / {dsy}))"),
+            }
         )
-        .withColumn(
-            "ix", F.explode(F.sequence(F.floor(F.col("px0") / tx), F.floor((F.col("px1") - 1) / tx)))
-        )
-        .withColumn("iy", F.col("iy").cast("int"))
-        .withColumn("ix", F.col("ix").cast("int"))
+        .where("px0 < px1 AND py0 < py1")
+        .withColumn("iy", F.expr(f"explode(sequence(floor(py0 / {ty}), floor((py1 - 1) / {ty})))"))
+        .withColumn("ix", F.expr(f"explode(sequence(floor(px0 / {tx}), floor((px1 - 1) / {tx})))"))
+        .withColumns({"iy": F.expr("CAST(iy AS INT)"), "ix": F.expr("CAST(ix AS INT)")})
     )
 
     # P4 AOI tile pruning, pushed down as an integer-set filter
     keep = _aoi_tiles(plan)
     if keep is not None:
         src_tiles = src_tiles.where(
-            (F.col("iy") * F.lit(ntx) + F.col("ix")).isin(sorted(iy * ntx + ix for iy, ix in keep))
+            sql_in(f"(iy * {ntx} + ix)", sorted(iy * ntx + ix for iy, ix in keep))
         )
 
     # --- A4: precedence within each task: (time, id) asc with a missing
@@ -951,14 +945,9 @@ def load_from_sources(
     # _stac_load.py:552-557). The order key leads each source struct, so
     # sort_array orders by it, and rows tied on it by their remaining
     # fields — never by shuffle arrival.
-    if preserve_original_order:
-        order = F.struct("item_idx")
-    else:
-        order = F.struct(F.col("ts").isNull(), "ts", "item_id")
-    src = [
-        (F.col(c) if c in sources_df.columns else F.lit(None)).cast(ty).alias(c)
-        for c, ty in (f.split() for f in _SOURCE_DDL.split(", "))
-    ]
+    order = "struct(item_idx)" if preserve_original_order else "struct(ts IS NULL, ts, item_id)"
+    fields = [f.split() for f in _SOURCE_DDL.split(", ")]
+    src = ", ".join(f"CAST({c if c in cols else 'NULL'} AS {t}) AS {c}" for c, t in fields)
     # Explicit task partitioning: AQE would coalesce this shuffle to ~1
     # partition (the task *rows* are tiny metadata), but each row expands
     # into megabytes of pixel work inside the UDF — cost is invisible to
@@ -969,10 +958,10 @@ def load_from_sources(
     tasks = (
         src_tiles.repartition(n_parts, "band", "t", "iy", "ix")
         .groupBy("band", "t", "iy", "ix")
-        .agg(F.sort_array(F.collect_list(F.struct(order.alias("_o"), *src))).alias("sources"))
-        .select(
-            "band", F.col("t").cast("int"), "iy", "ix",
-            F.transform("sources", lambda s: s.dropFields("_o")).alias("sources"),
+        .agg(F.expr(f"sort_array(collect_list(struct({order} AS _o, {src}))) AS sources"))
+        .selectExpr(
+            "band", "CAST(t AS INT) AS t", "iy", "ix",
+            f"transform(sources, s -> struct({', '.join(f's.{c}' for c, _ in fields)})) AS sources",
         )
     )
     return _run_tiles(tasks, plan)

@@ -23,7 +23,9 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import StructType
 
+from ..session import literal_df
 from ..sources.tables import load_table
 from . import register, scoped_persist
 
@@ -667,7 +669,7 @@ def sketch_cms_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both the sketch build and the probe read the per-user counts
     keys = scoped_persist(keys)
     params = F.broadcast(
-        spark.createDataFrame(CMS_ROWS, "i INT, a BIGINT, b BIGINT")
+        literal_df(spark, CMS_ROWS, StructType.fromDDL("i INT, a BIGINT, b BIGINT"))
     )
     bucket = ((F.col("hp") * F.col("a") + F.col("b")) % CMS_P) % CMS_W
     cms = (

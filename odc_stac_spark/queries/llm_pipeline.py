@@ -627,9 +627,10 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("text")
     merges = bpe_train(docs, n_merges=12)
-    return spark.createDataFrame(
+    return literal_df(
+        spark,
         [(int(s), a, b, a + b, int(n)) for s, a, b, n in merges],
-        "step INT, left STRING, right STRING, merged STRING, pair_count BIGINT",
+        StructType.fromDDL("step INT, left STRING, right STRING, merged STRING, pair_count BIGINT"),
     )
 
 

@@ -26,7 +26,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import StructType
 
+from ..session import literal_df
 from ..sources.tables import load_table
 from . import register, scoped_persist
 
@@ -130,9 +132,12 @@ def q7_nation_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
         # disjunction can never hold. Short-circuit to an explicitly empty
         # result with the output schema rather than relying on Spark
         # accepting zero-arg create_map()/isin([]).
-        return spark.createDataFrame(
+        return literal_df(
+            spark,
             [],
-            "supp_nation string, cust_nation string, l_year int, revenue double",
+            StructType.fromDDL(
+                "supp_nation string, cust_nation string, l_year int, revenue double"
+            ),
         )
     name_of = F.create_map(
         *[x for k in keys for x in (F.lit(k), F.lit(key2name[k]))]

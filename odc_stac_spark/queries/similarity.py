@@ -21,7 +21,9 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import StructType
 
+from ..session import literal_df
 from ..sources.tables import load_table
 from . import register, scoped_persist
 
@@ -750,8 +752,10 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit = emb.where(F.col("vec_id") % KM_FIT_STRIDE == 0)
     cent, _trace = kmeans_fit(fit, IVF_K, n_iter=3)
     assigned = assign_to_centroids(emb, cent)
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cent)], "cent_id int, cemb array<double>"
+    cdf = literal_df(
+        spark,
+        [(i, c) for i, c in enumerate(cent)],
+        StructType.fromDDL("cent_id int, cemb array<double>"),
     )
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")

@@ -14,7 +14,9 @@ from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import StructType
 
+from ..session import literal_df
 from ..sources.tables import load_table, normalize_timestamps
 from . import register
 
@@ -2317,7 +2319,7 @@ def events_retention_day_n_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = scoped_persist(firsts)
     activity = scoped_persist(activity)
     cohort = firsts.agg(F.count(F.lit(1)).alias("n_users"))
-    ds = spark.createDataFrame([(n,) for n in RETENTION_DAYS], "day_n int")
+    ds = literal_df(spark, [(n,) for n in RETENTION_DAYS], StructType.fromDDL("day_n int"))
     probes = F.broadcast(ds).crossJoin(firsts)
     retained = (
         probes.join(

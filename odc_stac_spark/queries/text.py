@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import StructType
 
+from ..session import literal_df
 from ..sources.tables import load_table
 from . import register, scoped_persist
 
@@ -924,9 +926,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).where(F.col("word") != "")
     wdf = F.broadcast(
-        toks.sparkSession.createDataFrame(
-            sorted(QC_WEIGHTS.items()), "word STRING, wt DOUBLE"
-        )
+        literal_df(spark, sorted(QC_WEIGHTS.items()), StructType.fromDDL("word STRING, wt DOUBLE"))
     )
     perdoc = (
         toks.join(wdf, "word", "left")
@@ -1589,9 +1589,7 @@ def text_oov_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = ranked.agg(
         F.sum("n").alias("tot"), F.count(F.lit(1)).alias("n_vocab")
     )
-    vs = spark.createDataFrame(
-        [(v,) for v in OOV_VOCAB_SIZES], "vocab_size int"
-    )
+    vs = literal_df(spark, [(v,) for v in OOV_VOCAB_SIZES], StructType.fromDDL("vocab_size int"))
     covered = (
         F.broadcast(vs)
         .join(ranked, F.col("rk") <= F.col("vocab_size"), "left")

@@ -18,10 +18,13 @@ ones that matter identically on a 1000-executor cluster:
 
 ``literal_df`` turns a driver-side table into a one-partition DataFrame
 built through Arrow: a JVM ``LocalTableScan`` that no Python worker reads.
+``sql_literal`` and ``sql_in`` write driver values into SQL expression text.
 """
 
 from __future__ import annotations
 
+import math
+import numbers
 import os
 from typing import Sequence
 
@@ -101,3 +104,30 @@ def literal_df(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -
             ]
         )
     return df.coalesce(1)
+
+
+def sql_literal(v) -> str:
+    """``None``, a bool, an integer, a real number or a str as Spark SQL
+    literal text.
+
+    Strings escape backslash and quote for Spark's default string-literal
+    parser; floats are exact ``DOUBLE`` literals (``repr`` round-trips),
+    and NaN and the infinities are casts from their names."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, numbers.Integral):
+        return str(int(v))
+    if isinstance(v, numbers.Real):
+        v = float(v)
+        return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no SQL literal for {v!r}")
+
+
+def sql_in(column: str, values) -> str:
+    """``column IN (values)`` as SQL text; an empty list matches nothing."""
+    values = list(values)
+    return f"{column} IN ({', '.join(map(sql_literal, values))})" if values else "false"

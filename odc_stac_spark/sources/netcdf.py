@@ -4,7 +4,7 @@ The reference reads netCDF/HDF5 subdataset containers through GDAL/xarray
 (reference loader/types.py:52-53 subdataset addressing; odc/loader RIO
 driver). This module implements the *netCDF classic* on-disk format from
 the public spec (Unidata "NetCDF Classic Format Specification", also
-ESDS-RFC-011) so the engine's ``NetCDFReader`` protocol slot serves real
+ESDS-RFC-011) so the engine's reader protocol (``NcReader``) serves real
 ``.nc`` files with no native library:
 
 - **writer**: CDF-1, CDF-2 (64-bit offsets) or CDF-5 (64-bit sizes +

@@ -48,7 +48,7 @@ def read_tiles_parquet(spark, path: str) -> DataFrame:
 
 
 def write_cog(
-    tiles_df: DataFrame, plan, out_dir: str, parallel_encode: bool | None = None
+    tiles_df: DataFrame, plan, out_dir: str, parallel_encode: bool = True
 ) -> list:
     """S14 sink: one cloud-optimized GeoTIFF per (band, time group),
     written by the in-house pure-Python writer (sources/geotiff.py —
@@ -72,7 +72,12 @@ def write_cog(
     observed) is backfilled driver-side with a nodata-filled image, so
     every present band gets the full ``nt`` files exactly as the previous
     driver-side writer produced. Returns the written paths,
-    band-major/t-minor."""
+    band-major/t-minor.
+
+    ``parallel_encode`` (the default) cuts and deflates COG blocks inside
+    the load tasks when the tiles align to the 256-px block grid;
+    ``False``, or unaligned tiles, take the serial one-task-per-file
+    writer, which produces the same bytes."""
     import itertools
 
     from ..operators.mosaic import empty_fill
@@ -106,8 +111,6 @@ def write_cog(
                 os.path.join(out_dir, f"{band}_t{t}.tif"), img, gbox, nodata=nodata
             )
 
-    if parallel_encode is None:
-        parallel_encode = os.environ.get("SPARK_GRAFT_COG_PARALLEL", "1") != "0"
     # the map-side cut requires input tiles aligned to the 256-px COG
     # block grid (any multiple-of-256 chunking); otherwise fall back to
     # the serial one-task-per-file writer

@@ -8,6 +8,11 @@ and collection-schema inference are all Catalyst-planned jobs — filters
 push into the scan, and only the tiny inferred collection record is
 collected (SURVEY §1.2 "Spark mapping").
 
+Every transform, the ``stac_cfg`` overrides included, is written as SQL
+expression text (``selectExpr``): building a plan from Column objects
+costs one py4j round trip per call, ~1.2k per parse, where one SQL
+projection per step costs a few dozen (tests/test_py4j_budget.py).
+
 Citations map each transform to the reference behavior it reproduces
 (semantics only — independent implementation):
 
@@ -40,11 +45,12 @@ from pyspark.sql.types import (
 
 from ..model import (
     GeoBox,
+    MDParseConfig,
     RasterBandMetadata,
     RasterCollectionMetadata,
     RasterSource,
 )
-from ..session import literal_df
+from ..session import literal_df, sql_in, sql_literal
 
 # ---- schema for raw STAC items (S1 scan) ---------------------------------
 
@@ -130,6 +136,30 @@ STAC_JSON_DDL = (
 )
 
 
+def _resolve_href_sql(href: str, self_href: str) -> str:
+    """A relative asset href resolved against the item's self link
+    (pystac ``get_absolute_href`` semantics, reference _mdtools.py:685;
+    self-contained catalogs ship relative hrefs): ``./x``, ``x`` and up to
+    three leading ``../``, each dropping one more trailing segment of the
+    self link's directory. An item with relative hrefs and NO self link
+    keeps them as-is: the read fails loudly at the reader instead of the
+    reference's driver-side ValueError (no per-row raise in a distributed
+    parse)."""
+    rel = f"regexp_replace({href}, '^[.]/', '')"
+    ups = (
+        f"CASE WHEN startswith({rel}, '../../../') THEN 3"
+        f" WHEN startswith({rel}, '../../') THEN 2"
+        f" WHEN startswith({rel}, '../') THEN 1 ELSE 0 END"
+    )
+    segs = f"split({self_href}, '/')"
+    base = f"array_join(slice({segs}, 1, greatest(1, size({segs}) - 1 - {ups})), '/')"
+    return (
+        f"CASE WHEN rlike({href}, '^[A-Za-z][A-Za-z0-9+.-]*://') OR startswith({href}, '/')"
+        f" OR {self_href} IS NULL THEN {href}"
+        f" ELSE concat({base}, '/', substr({rel}, 3 * {ups} + 1)) END"
+    )
+
+
 def stac_json_to_items(raw: DataFrame, column: str = "value") -> DataFrame:
     """Real STAC item JSON documents → ITEM_SCHEMA rows, entirely as
     Catalyst expressions (``from_json`` + map/array transforms — no Python
@@ -148,87 +178,47 @@ def stac_json_to_items(raw: DataFrame, column: str = "value") -> DataFrame:
     - every property is additionally preserved stringified in the generic
       ``properties`` map (numbers → literals, objects → raw JSON) for
       ``groupby=<property name>`` and ad-hoc predicates.
-    """
-    j = F.from_json(F.col(column), STAC_JSON_DDL)
-    props = j.getField("properties")
-    has_proj = F.exists(
-        F.coalesce(j.getField("stac_extensions"), F.array()),
-        lambda e: (e == "projection")
-        | (e == "proj")
-        | e.startswith("https://stac-extensions.github.io/projection/"),
+
+    Two projections of SQL text: the document parses once into ``j``,
+    then every output column reads fields of ``j``."""
+    has_proj = (
+        "exists(coalesce(j.stac_extensions, array()), e -> e = 'projection' OR e = 'proj'"
+        " OR startswith(e, 'https://stac-extensions.github.io/projection/'))"
     )
-    it_shape = props.getField("proj:shape")
-    it_tr = props.getField("proj:transform")
-    it_epsg = props.getField("proj:epsg")
-
-    def mk_asset(a: F.Column) -> F.Column:
-        return F.struct(
-            resolve_href(a.getField("href")).alias("href"),
-            a.getField("type").alias("type"),
-            a.getField("roles").alias("roles"),
-            F.coalesce(a.getField("gsd"), props.getField("gsd")).alias("gsd"),
-            F.when(has_proj, F.coalesce(a.getField("proj:shape"), it_shape)).alias(
-                "proj_shape"
-            ),
-            F.when(
-                has_proj, F.coalesce(a.getField("proj:transform"), it_tr)
-            ).alias("proj_transform"),
-            F.when(has_proj, F.coalesce(a.getField("proj:epsg"), it_epsg)).alias(
-                "proj_epsg"
-            ),
-            a.getField("eo:bands").alias("eo_bands"),
-            a.getField("raster:bands").alias("raster_bands"),
-        )
-
     # try_element_at: an item with links present but NO self link yields
     # an empty filtered array, which plain element_at rejects under ANSI
-    self_href = F.try_element_at(
-        F.filter(
-            F.coalesce(j.getField("links"), F.array()), lambda l: l["rel"] == "self"
-        ),
-        F.lit(1),
-    )["href"]
+    self_href = "try_element_at(filter(coalesce(j.links, array()), l -> l.rel = 'self'), 1).href"
 
-    def resolve_href(href: F.Column) -> F.Column:
-        """Relative asset hrefs resolve against the item's self link
-        (pystac ``get_absolute_href`` semantics, reference
-        _mdtools.py:685; self-contained catalogs ship relative hrefs).
-        Handles ``./x``, ``x`` and up to three ``../`` levels as column
-        expressions; an item with relative hrefs and NO self link keeps
-        them as-is — the read fails loudly at the reader instead of the
-        reference's driver-side ValueError (no per-row raise in a
-        distributed parse)."""
-        is_abs = href.rlike("^[A-Za-z][A-Za-z0-9+.-]*://") | href.startswith("/")
-        base = F.regexp_replace(self_href, "/[^/]*$", "")
-        rel = F.regexp_replace(href, r"^\./", "")
-        for _ in range(3):  # static unroll: ../ up to three levels
-            up = rel.startswith("../")
-            base = F.when(up, F.regexp_replace(base, "/[^/]*$", "")).otherwise(base)
-            rel = F.when(up, F.substr(rel, F.lit(4))).otherwise(rel)
-        return F.when(
-            is_abs | self_href.isNull(), href
-        ).otherwise(F.concat(base, F.lit("/"), rel))
-    # generic properties map: stringified values (objects keep raw JSON)
-    props_map = F.from_json(
-        F.get_json_object(F.col(column), "$.properties"), "map<string,string>"
+    def proj(field: str) -> str:
+        return (
+            f"CASE WHEN {has_proj} THEN coalesce(a.`proj:{field}`, j.properties.`proj:{field}`) END"
+        )
+
+    asset = (
+        f"named_struct('href', {_resolve_href_sql('a.href', self_href)}, 'type', a.type,"
+        " 'roles', a.roles, 'gsd', coalesce(a.gsd, j.properties.gsd),"
+        f" 'proj_shape', {proj('shape')}, 'proj_transform', {proj('transform')},"
+        f" 'proj_epsg', {proj('epsg')},"
+        " 'eo_bands', a.`eo:bands`, 'raster_bands', a.`raster:bands`)"
     )
-    return raw.select(
-        j.getField("id").alias("id"),
-        j.getField("collection").alias("collection"),
-        props.getField("odc:product").alias("odc_product"),
-        F.to_timestamp(props.getField("datetime")).alias("datetime"),
-        F.to_timestamp(props.getField("start_datetime")).alias("start_datetime"),
-        F.to_timestamp(props.getField("end_datetime")).alias("end_datetime"),
-        self_href.alias("href"),
-        j.getField("bbox").alias("bbox"),
-        F.transform_values(
-            F.coalesce(j.getField("assets"), F.create_map().cast(
-                "map<string," + _STAC_JSON_ASSET_DDL + ">"
-            )),
-            lambda _, a: mk_asset(a),
-        ).alias("assets"),
-        props_map.alias("properties"),
-        has_proj.alias("has_proj"),
+    return raw.selectExpr(
+        f"from_json({column}, '{STAC_JSON_DDL}') AS j",
+        # generic properties map: stringified values (objects keep raw JSON)
+        f"from_json(get_json_object({column}, '$.properties'), 'map<string,string>')"
+        " AS properties",
+    ).selectExpr(
+        "j.id AS id",
+        "j.collection AS collection",
+        "j.properties.`odc:product` AS odc_product",
+        "to_timestamp(j.properties.datetime) AS datetime",
+        "to_timestamp(j.properties.start_datetime) AS start_datetime",
+        "to_timestamp(j.properties.end_datetime) AS end_datetime",
+        f"{self_href} AS href",
+        "j.bbox AS bbox",
+        f"transform_values(coalesce(j.assets, CAST(map() AS map<string,{_STAC_JSON_ASSET_DDL}>)),"
+        f" (k, a) -> {asset}) AS assets",
+        "properties",
+        f"{has_proj} AS has_proj",
     )
 
 
@@ -251,12 +241,9 @@ def stac_featurecollection_to_items(raw: DataFrame, column: str = "value") -> Da
     applies unchanged and a directory of search dumps parses as one
     distributed scan. Bare item documents (no ``features`` key) pass
     through, so dumps and single items can be mixed."""
-    j = F.from_json(F.col(column), "struct<type:string,features:array<string>>")
-    feats = F.when(
-        j.getField("features").isNotNull(), j.getField("features")
-    ).otherwise(F.array(F.col(column)))
+    j = f"from_json({column}, 'struct<type:string,features:array<string>>')"
     return stac_json_to_items(
-        raw.select(F.explode(feats).alias("value")), column="value"
+        raw.selectExpr(f"explode(coalesce({j}.features, array({column}))) AS value")
     )
 
 
@@ -340,67 +327,43 @@ def is_raster_data_sql(asset: str) -> str:
     )
 
 
-class _CfgExprs:
+#: collection id: collection → odc:product → '_' (reference _mdtools.py:471-479)
+_CID = "coalesce(collection, odc_product, '_')"
+
+
+def _by_cid(cfg: dict, fn) -> str:
     """The user's ``stac_cfg`` dict (reference MDParseConfig surface,
-    model.py:417-442) compiled to literal CASE expressions over
-    (collection id, asset name) — the config is tiny and driver-resident,
-    so overrides stay pure Catalyst literals: no join, no Python in the
-    item stream."""
+    model.py:417-442) as a literal CASE over the collection id: ``fn``
+    maps each collection's merged MDParseConfig to SQL text, the ``'*'``
+    merge being the ELSE. The config is tiny and driver-resident, so the
+    overrides stay literals: no join, no Python in the item stream."""
+    whens = "".join(
+        f" WHEN {sql_literal(c)} THEN {fn(MDParseConfig.from_dict(c, cfg))}"
+        for c in cfg
+        if c != "*"
+    )
+    star = fn(MDParseConfig.from_dict("*", cfg))
+    return f"CASE {_CID}{whens} ELSE {star} END" if whens else star
 
-    _BM_DDL = "struct<data_type:string,nodata:double,unit:string>"
 
-    def __init__(self, cfg: dict):
-        from ..model import MDParseConfig
+def _bm_sql(bm: RasterBandMetadata) -> str:
+    """A ``raster:bands`` element as a struct literal."""
+    return (
+        f"named_struct('data_type', CAST({sql_literal(bm.data_type)} AS STRING),"
+        f" 'nodata', CAST({sql_literal(bm.nodata)} AS DOUBLE),"
+        f" 'unit', CAST({sql_literal(bm.unit)} AS STRING))"
+    )
 
-        self.star = MDParseConfig.from_dict("*", cfg)
-        self.per_cid = {
-            k: MDParseConfig.from_dict(k, cfg) for k in cfg if k != "*"
-        }
 
-    def _by_cid(self, fn) -> F.Column:
-        """CASE over collection id: explicit entries, else the '*' merge."""
-        expr = fn(self.star)
-        for c, mc in self.per_cid.items():
-            expr = F.when(collection_id_col() == c, fn(mc)).otherwise(expr)
-        return expr
-
-    def ignore_proj(self) -> F.Column:
-        return self._by_cid(lambda mc: F.lit(mc.ignore_proj))
-
-    def configured_asset(self) -> F.Column:
-        """Assets named in band_cfg are data bands regardless of media
-        type (reference _keep, _mdtools.py:505-511)."""
-        return self._by_cid(
-            lambda mc: (
-                F.col("asset_name").isin(list(mc.band_cfg))
-                if mc.band_cfg
-                else F.lit(False)
-            )
-        )
-
-    def _bm_struct(self, bm) -> F.Column:
-        return F.struct(
-            F.lit(bm.data_type).cast(StringType()).alias("data_type"),
-            F.lit(bm.nodata).cast(DoubleType()).alias("nodata"),
-            F.lit(bm.unit).cast(StringType()).alias("unit"),
-        )
-
-    def band_override(self) -> F.Column:
-        """Exact band_cfg entry for (cid, asset) — replaces the item's own
-        raster:bands wholesale (reference _extract_bands,
-        _mdtools.py:513-525), else NULL."""
-
-        def one(mc):
-            e = F.lit(None).cast(self._BM_DDL)
-            for name, bm in mc.band_cfg.items():
-                e = F.when(F.col("asset_name") == name, self._bm_struct(bm)).otherwise(e)
-            return e
-
-        return self._by_cid(one)
-
-    def band_defaults(self) -> F.Column:
-        """Fallback metadata when the item carries no raster:bands."""
-        return self._by_cid(lambda mc: self._bm_struct(mc.band_defaults))
+def _band_override(mc) -> str:
+    """The exact band_cfg entry for the row's asset — it replaces the
+    item's own raster:bands wholesale (reference _extract_bands,
+    _mdtools.py:513-525) — else NULL."""
+    whens = "".join(
+        f" WHEN {sql_literal(name)} THEN {_bm_sql(bm)}"
+        for name, bm in mc.band_cfg.items()
+    )
+    return f"CASE asset_name{whens} END" if whens else "NULL"
 
 
 def assets_df(items: DataFrame, cfg: Optional[dict] = None) -> DataFrame:
@@ -412,56 +375,47 @@ def assets_df(items: DataFrame, cfg: Optional[dict] = None) -> DataFrame:
     leaves the item with ZERO data bands, in which case it is waived for
     the whole item. The waiver is an ``exists`` over the item's own asset
     map, evaluated on the item row before the explode: map-only, no
-    shuffle, no driver round-trip."""
-    has_proj_col = (
-        F.coalesce(F.col("has_proj"), F.lit(False))
-        if "has_proj" in items.columns
-        else F.lit(False)
-    )
-    ce = _CfgExprs(cfg) if cfg else None
-    if ce is not None:
-        # ignore_proj: treat the item as not declaring the projection
-        # extension (reference check_proj, _mdtools.py:498)
-        has_proj_col = has_proj_col & ~ce.ignore_proj()
+    shuffle, no driver round-trip.
 
-    def strict(asset: str) -> str:
+    ``cfg`` (``stac_cfg``): ``ignore_proj`` treats the item as not
+    declaring the projection extension (reference check_proj,
+    _mdtools.py:498), and assets named in band_cfg are data bands
+    regardless of media type or proj data (reference _keep,
+    _mdtools.py:505-511)."""
+    cols = items.columns
+    has_proj = "coalesce(has_proj, false)" if "has_proj" in cols else "false"
+    configured = "false"
+    if cfg:
+        has_proj = f"({has_proj} AND NOT {_by_cid(cfg, lambda mc: sql_literal(mc.ignore_proj))})"
+        configured = _by_cid(cfg, lambda mc: sql_in("asset_name", mc.band_cfg))
+
+    def strict(asset: str, proj: str) -> str:
         return (
-            f"({is_raster_data_sql(asset)} AND (NOT has_proj"
+            f"({is_raster_data_sql(asset)} AND (NOT {proj}"
             f" OR ({asset}.proj_shape IS NOT NULL AND {asset}.proj_transform IS NOT NULL)))"
         )
 
-    props_col = (
-        F.col("properties")
-        if "properties" in items.columns
-        else F.lit(None).cast(MapType(StringType(), StringType()))
-    )
     # item_idx is strictly opt-in: defaulting it to a constant would let
     # preserve_original_order "sort" by shuffle arrival order downstream
-    idx_cols = [F.col("item_idx")] if "item_idx" in items.columns else []
+    idx = ["item_idx"] if "item_idx" in cols else []
     item_cols = ["id", "collection", "odc_product", "datetime", "start_datetime", "end_datetime"]
-    ex = items.select(
+    ex = items.selectExpr(
         *item_cols,
-        props_col.alias("properties"),
-        *idx_cols,
-        has_proj_col.alias("has_proj"),
-        "assets",
-    ).select(
-        *item_cols,
-        "properties",
-        *idx_cols,
-        "has_proj",
-        F.expr(f"exists(map_values(assets), a -> {strict('a')})").alias("any_strict"),
-        F.explode("assets").alias("asset_name", "asset"),
+        "properties" if "properties" in cols else "CAST(NULL AS map<string,string>) AS properties",
+        *idx,
+        f"{has_proj} AS has_proj",
+        f"exists(map_values(assets), a -> {strict('a', has_proj)}) AS any_strict",
+        "explode(assets) AS (asset_name, asset)",
     )
-    is_raster = F.expr(
-        f"CASE WHEN any_strict THEN {strict('asset')} ELSE {is_raster_data_sql('asset')} END"
+    is_raster = (
+        f"CASE WHEN any_strict THEN {strict('asset', 'has_proj')}"
+        f" ELSE {is_raster_data_sql('asset')} END"
     )
-    if ce is not None:
-        # assets named in band_cfg are data bands unconditionally —
-        # before any media-type or proj filtering (reference _keep,
-        # _mdtools.py:505-511)
-        is_raster = ce.configured_asset() | is_raster
-    return ex.withColumn("is_raster", is_raster).drop("any_strict")
+    if cfg:
+        is_raster = f"({configured} OR {is_raster})"
+    return ex.selectExpr(
+        *item_cols, "properties", *idx, "has_proj", "asset_name", "asset", f"{is_raster} AS is_raster"
+    )
 
 
 def raster_assets_df(items: DataFrame, cfg: Optional[dict] = None) -> DataFrame:
@@ -471,38 +425,26 @@ def raster_assets_df(items: DataFrame, cfg: Optional[dict] = None) -> DataFrame:
     item's raster:bands wholesale (single band), band_defaults fill in
     when the item has none."""
     a = assets_df(items, cfg).where("is_raster")
-    ce = _CfgExprs(cfg) if cfg else None
     # S5 band metadata: raster:bands extension else defaults
     # (float32/None/"1" — reference BAND_DEFAULTS loader/types.py:160)
-    default_bm = (
-        ce.band_defaults()
-        if ce is not None
-        else F.struct(
-            F.lit(None).cast(StringType()).alias("data_type"),
-            F.lit(None).cast(DoubleType()).alias("nodata"),
-            F.lit(None).cast(StringType()).alias("unit"),
+    if cfg:
+        default_bm = _by_cid(cfg, lambda mc: _bm_sql(mc.band_defaults))
+        override = _by_cid(cfg, _band_override)
+        rb = (
+            f"CASE WHEN {override} IS NOT NULL THEN array({override})"
+            f" ELSE coalesce(asset.raster_bands, array({default_bm})) END"
         )
-    )
-    rb = F.coalesce(F.col("asset.raster_bands"), F.array(default_bm))
-    if ce is not None:
-        ov = ce.band_override()
-        rb = F.when(ov.isNotNull(), F.array(ov)).otherwise(rb)
-    a = a.select(
-        "*",
-        F.posexplode(rb).alias("band_idx0", "band_meta"),
-    ).withColumn("band_idx", F.col("band_idx0") + 1)
+    else:
+        rb = f"coalesce(asset.raster_bands, array({_bm_sql(RasterBandMetadata(None, None, None))}))"
     # S6 asset geobox: proj shape+transform; 9-element affine accepted iff
     # tail == [0,0,1] (reference _mdtools.py:296-301)
-    tr = F.col("asset.proj_transform")
-    valid_tr = tr.isNotNull() & (
-        (F.size(tr) == 6)
-        | ((F.size(tr) == 9)
-           & (tr.getItem(6) == 0.0) & (tr.getItem(7) == 0.0) & (tr.getItem(8) == 1.0))
+    tr = "asset.proj_transform"
+    has_gbox = (
+        f"{tr} IS NOT NULL AND (size({tr}) = 6 OR (size({tr}) = 9"
+        f" AND {tr}[6] = 0.0D AND {tr}[7] = 0.0D AND {tr}[8] = 1.0D))"
+        " AND asset.proj_shape IS NOT NULL AND asset.proj_epsg IS NOT NULL"
     )
-    has_gbox = valid_tr & F.col("asset.proj_shape").isNotNull() & F.col(
-        "asset.proj_epsg"
-    ).isNotNull()
-    return a.select(
+    return a.selectExpr("*", f"posexplode({rb}) AS (band_idx0, band_meta)").selectExpr(
         "id",
         "collection",
         "odc_product",
@@ -510,16 +452,16 @@ def raster_assets_df(items: DataFrame, cfg: Optional[dict] = None) -> DataFrame:
         "start_datetime",
         "end_datetime",
         "asset_name",
-        "band_idx",
-        F.col("asset.href").alias("href"),
-        F.col("band_meta.data_type").alias("data_type"),
-        F.col("band_meta.nodata").alias("nodata"),
-        F.coalesce(F.col("band_meta.unit"), F.lit("1")).alias("unit"),
-        F.col("asset.gsd").alias("gsd"),
-        F.when(has_gbox, F.col("asset.proj_shape")).alias("g_shape"),
-        F.when(has_gbox, F.slice(tr, 1, 6)).alias("g_transform"),
-        F.when(has_gbox, F.concat(F.lit("EPSG:"), F.col("asset.proj_epsg"))).alias("g_crs"),
-        F.col("asset.eo_bands").alias("eo_bands"),
+        "band_idx0 + 1 AS band_idx",
+        "asset.href AS href",
+        "band_meta.data_type AS data_type",
+        "band_meta.nodata AS nodata",
+        "coalesce(band_meta.unit, '1') AS unit",
+        "asset.gsd AS gsd",
+        f"CASE WHEN {has_gbox} THEN asset.proj_shape END AS g_shape",
+        f"CASE WHEN {has_gbox} THEN slice({tr}, 1, 6) END AS g_transform",
+        f"CASE WHEN {has_gbox} THEN concat('EPSG:', asset.proj_epsg) END AS g_crs",
+        "asset.eo_bands AS eo_bands",
         "properties",
         *(["item_idx"] if "item_idx" in a.columns else []),
     )
@@ -530,43 +472,39 @@ def alias_map_df(items: DataFrame) -> DataFrame:
     (band count asc, asset name) — 1-band assets win aliases
     (reference _mdtools.py:400-442, priority :437-442)."""
     a = assets_df(items).where("is_raster")
-    eo = a.select(
-        "collection",
-        "asset_name",
-        F.size(F.coalesce(F.col("asset.eo_bands"), F.array())).alias("n_bands"),
-        F.posexplode(F.coalesce(F.col("asset.eo_bands"), F.array())).alias("idx0", "eo"),
+    eo = "coalesce(asset.eo_bands, array())"
+    names = (
+        a.selectExpr(
+            "collection", "asset_name", f"size({eo}) AS n_bands", f"posexplode({eo}) AS (idx0, eo)"
+        )
+        .selectExpr(
+            "collection",
+            "asset_name",
+            "n_bands",
+            "idx0 + 1 AS band_idx",
+            "explode(array_distinct(filter(array(eo.name, eo.common_name), x -> x IS NOT NULL)))"
+            " AS alias",
+        )
+        .distinct()
     )
-    names = eo.select(
-        "collection",
-        "asset_name",
-        "n_bands",
-        (F.col("idx0") + 1).alias("band_idx"),
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.array(F.col("eo.name"), F.col("eo.common_name")),
-                    lambda x: x.isNotNull(),
-                )
-            )
-        ).alias("alias"),
-    ).distinct()
     # drop aliases that shadow a real asset name (reference skips those,
     # _mdtools.py:430-432)
-    asset_names = a.select("collection", F.col("asset_name").alias("alias")).distinct()
-    names = names.join(asset_names, ["collection", "alias"], "left_anti")
-    ordered = F.array_sort(
-        F.collect_list(F.struct("n_bands", "asset_name", "band_idx"))
-    )
-    return names.groupBy("collection", "alias").agg(
-        F.transform(ordered, lambda x: F.struct(x["asset_name"], x["band_idx"])).alias(
-            "candidates"
+    asset_names = a.selectExpr("collection", "asset_name AS alias").distinct()
+    return (
+        names.join(asset_names, ["collection", "alias"], "left_anti")
+        .groupBy("collection", "alias")
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(n_bands, asset_name, band_idx))),"
+                " x -> struct(x.asset_name, x.band_idx)) AS candidates"
+            )
         )
     )
 
 
 def collection_id_col() -> F.Column:
     """collection → odc:product → '_' (reference _mdtools.py:471-479)."""
-    return F.coalesce(F.col("collection"), F.col("odc_product"), F.lit("_"))
+    return F.expr(_CID)
 
 
 def extract_collection_metadata(
@@ -577,19 +515,12 @@ def extract_collection_metadata(
 
     Consistency assumption as in the reference (loader/types.py:16-19):
     same-named assets share dtype/nodata across items → ``first()``."""
-    ra = raster_assets_df(items, cfg).withColumn("cid", collection_id_col())
+    first = ("data_type", "nodata", "unit", "gsd", "g_shape", "g_transform", "g_crs")
     per_band = (
-        ra.groupBy("cid", "asset_name", "band_idx")
-        .agg(
-            F.first("data_type", ignorenulls=True).alias("data_type"),
-            F.first("nodata", ignorenulls=True).alias("nodata"),
-            F.first("unit", ignorenulls=True).alias("unit"),
-            F.first("gsd", ignorenulls=True).alias("gsd"),
-            F.first("g_shape", ignorenulls=True).alias("g_shape"),
-            F.first("g_transform", ignorenulls=True).alias("g_transform"),
-            F.first("g_crs", ignorenulls=True).alias("g_crs"),
-            F.count(F.lit(1)).alias("n_seen"),
-        )
+        raster_assets_df(items, cfg)
+        .withColumn("cid", collection_id_col())
+        .groupBy("cid", "asset_name", "band_idx")
+        .agg(*[F.expr(f"first({c}, true) AS {c}") for c in first], F.expr("count(1) AS n_seen"))
         .collect()
     )
     aliases = alias_map_df(items.withColumn("collection", collection_id_col())).collect()
@@ -625,8 +556,6 @@ def extract_collection_metadata(
     if cfg:
         # config aliases outrank eo:bands-derived candidates (reference
         # puts MDParseConfig.aliases first, _mdtools.py:400-442)
-        from ..model import MDParseConfig
-
         for cid, md in out.items():
             mc = MDParseConfig.from_dict(cid, cfg)
             for alias, bk in mc.aliases.items():
@@ -664,7 +593,6 @@ def extract_collection_metadata(
 def parse_items(
     spark: SparkSession,
     items: DataFrame,
-    collections: Optional[Dict[str, RasterCollectionMetadata]] = None,
     cfg: Optional[dict] = None,
 ) -> DataFrame:
     """S2: parsed-item rows — (item, band) with source URI, geobox, meta;
@@ -672,9 +600,9 @@ def parse_items(
     ``to_load_items`` for the pixel plane, or query it relationally.
     ``cfg`` is the per-collection MDParseConfig dict (band overrides /
     aliases / ignore_proj — reference model.py:417-442)."""
-    ra = raster_assets_df(items, cfg).withColumn("cid", collection_id_col())
-    return ra.select(
-        "cid",
+    ra = raster_assets_df(items, cfg)
+    return ra.selectExpr(
+        f"{_CID} AS cid",
         "id",
         "datetime",
         "start_datetime",

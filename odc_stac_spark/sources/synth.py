@@ -814,21 +814,6 @@ class RioReader:
         )
 
 
-class NetCDFReader:
-    """Legacy h5py slot, superseded: netCDF-4/HDF5 containers are now
-    served natively by :class:`odc_stac_spark.sources.netcdf.NcReader`
-    via the in-house HDF5 reader (sources/hdf5.py — v1 B-tree chunk
-    index, deflate/shuffle filters, windowed chunk reads). This class
-    remains only so external code holding the name keeps a loud error
-    path for genuinely unreadable HDF5 profiles."""
-
-    def read(self, src, cfg, dst_geobox):  # pragma: no cover - superseded
-        raise NotImplementedError(
-            "NetCDFReader is superseded: .h5/.nc4 containers dispatch to "
-            "sources/netcdf.py NcReader (in-house HDF5 reader); use that"
-        )
-
-
 class TiffReader(SynthReader):
     """Real GeoTIFF/COG file driver over the in-house TIFF codec
     (sources/geotiff.py) — inherits the format-agnostic paste/warp/ROI
@@ -849,7 +834,7 @@ class TiffReader(SynthReader):
     - windows clipped to the file extent are padded with source nodata.
     - GeoTIFF has no subdataset concept — a source carrying one is a
       catalog error and raises (netcdf/hdf5 containers go to
-      NetCDFReader).
+      :class:`odc_stac_spark.sources.netcdf.NcReader`).
     """
 
     def _resolve_subdataset(self, src: RasterSource) -> RasterSource:

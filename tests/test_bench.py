@@ -1,10 +1,12 @@
 """The measurement code: ``bench.timed``, the headline list perfbench
-copies, and the tools that import from ``bench``. No Spark session."""
+copies, and the tools that import from ``bench``. Only the plan-dump test
+starts Spark."""
 
 from __future__ import annotations
 
 import ast
 import glob
+import importlib.util
 import os
 
 import bench
@@ -66,3 +68,15 @@ def test_tools_compile_and_import_existing_bench_names():
     assert used, "no tool imports from bench"
     missing = [(os.path.relpath(p, REPO), n) for p, n in sorted(used) if not hasattr(bench, n)]
     assert not missing
+
+
+def test_sweep_plan_dump_is_the_final_adaptive_plan(spark):
+    """``tools/sweep.py --plans`` writes the plan AQE settled on at run
+    time; the unexecuted query execution only holds AQE's initial plan."""
+    spec = importlib.util.spec_from_file_location("sweep", os.path.join(REPO, "tools", "sweep.py"))
+    sweep = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sweep)
+    df = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count()
+    initial = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    assert "isFinalPlan=false" in initial
+    assert "isFinalPlan=true" in sweep.final_plan(df)

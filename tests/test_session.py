@@ -20,7 +20,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from odc_stac_spark.session import literal_df
+from odc_stac_spark.session import literal_df, sql_in, sql_literal
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -133,3 +133,24 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
         timeout=300,
     )
     assert "OK 2" in out.stdout, out.stderr[-3000:]
+
+
+def test_sql_literal_round_trips(spark):
+    """Driver values written as SQL text read back as the same values:
+    quotes, backslashes and non-ASCII text, shortest-repr doubles, NaN,
+    the infinities, -0.0, 64-bit integers and NULL."""
+    import math
+
+    values = [
+        "it's \\ \"q\" é 中文 \\'", "", 0.1, 1e-300, -999.0, 0.30000000000000004,
+        float("nan"), float("inf"), float("-inf"), -0.0, (1 << 62) + 1, -7, True, None,
+    ]
+    row = spark.sql("SELECT " + ", ".join(sql_literal(v) for v in values)).first()
+    for want, got in zip(values, row):
+        if isinstance(want, float) and math.isnan(want):
+            assert math.isnan(got)
+        else:
+            assert got == want and type(got) is type(want), (want, got)
+    assert math.copysign(1.0, row[9]) == -1.0
+    n = spark.range(5).where(sql_in("id", [1, 3])).count()
+    assert (n, spark.range(5).where(sql_in("id", [])).count()) == (2, 0)

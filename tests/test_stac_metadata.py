@@ -361,6 +361,75 @@ def _json_item(iid, collection, proj_ext, proj_assets):
     }
 
 
+@pytest.mark.parametrize(
+    "href, want",
+    [
+        ("x.tif", "https://h.example/cat/a/b/x.tif"),
+        ("./x.tif", "https://h.example/cat/a/b/x.tif"),
+        ("../x.tif", "https://h.example/cat/a/x.tif"),
+        ("../../x.tif", "https://h.example/cat/x.tif"),
+        ("../../../x.tif", "https://h.example/x.tif"),
+        # three levels resolve; a fourth stays in the href
+        ("../../../../x.tif", "https://h.example/../x.tif"),
+        ("/abs/x.tif", "/abs/x.tif"),
+        ("s3://bucket/x.tif", "s3://bucket/x.tif"),
+    ],
+)
+def test_relative_hrefs_resolve_against_self_link(spark, href, want):
+    """Relative asset hrefs resolve against the item's self link (pystac
+    get_absolute_href semantics, reference _mdtools.py:685); an item
+    without a self link (no links, links missing, or no rel=self among
+    them) keeps them as written."""
+    docs = []
+    for iid, links in (
+        ("self", [{"rel": "root", "href": "https://h.example/catalog.json"},
+                  {"rel": "self", "href": "https://h.example/cat/a/b/item.json"}]),
+        ("empty", []),
+        ("missing", None),
+        ("other", [{"rel": "parent", "href": "https://h.example/cat/a/b/c.json"}]),
+    ):
+        d = _json_item(iid, "c1", True, {"B01"})
+        d["assets"]["B01"]["href"] = href
+        if links is None:
+            del d["links"]
+        else:
+            d["links"] = links
+        docs.append(d)
+    got = {
+        r.id: r.href
+        for r in raster_assets_df(stac_dicts_to_items(spark, docs))
+        .where("asset_name = 'B01'")
+        .select("id", "href")
+        .collect()
+    }
+    assert got == {"self": want, "empty": href, "missing": href, "other": href}
+
+
+def test_cfg_collection_and_asset_names_with_quotes(spark):
+    """stac_cfg keys are written into the parse as SQL literals: a
+    collection id and asset names holding quotes and backslashes still
+    match their band override, ignore_proj and alias entries."""
+    cid, band = "o'col\\x", "B'0\\2"
+    docs = [_json_item("q", cid, True, {"B01"})]
+    docs[0]["assets"][band] = docs[0]["assets"].pop("B02")
+    cfg = {
+        cid: {
+            "assets": {band: {"data_type": "int16", "nodata": float("nan")}},
+            "aliases": {"quoted": band},
+            "ignore_proj": True,
+        }
+    }
+    items = stac_dicts_to_items(spark, docs)
+    assert {r.asset_name for r in parse_items(spark, items).collect()} == {"B01"}
+    rows = {r.asset_name: r for r in parse_items(spark, items, cfg=cfg).collect()}
+    assert set(rows) == {"B01", band}  # ignore_proj keeps the proj-less band
+    assert rows[band].cid == cid and rows[band].data_type == "int16"
+    assert rows[band].nodata != rows[band].nodata  # NaN
+    assert rows["B01"].data_type == "float32"  # band_defaults
+    md = extract_collection_metadata(spark, items, cfg=cfg)
+    assert md[cid].aliases["quoted"] == [(band, 1)]
+
+
 def test_check_proj_strict_waiver_and_no_extension(spark):
     """check_proj per item (reference _mdtools.py:199-205, waiver
     :536-539): a proj item keeps only assets with proj data; a proj item

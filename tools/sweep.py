@@ -11,9 +11,9 @@ after. Prints the slowest queries on stderr and one JSON line on stdout:
 {"sf_dir", "total_sec" (sum of the bests), "queries": {name: record}}.
 A query that fails is recorded as {"error": ...} and the sweep goes on.
 
-With ``--plans SUFFIX`` the formatted physical plan of each query's last
-built DataFrame (AQE's initial plan: the noop write re-plans its own
-copy) is written to plans/<name>_<SUFFIX>.txt.
+With ``--plans SUFFIX`` each query's last built DataFrame runs once more,
+untimed, through its own query execution, and that execution's final
+adaptive plan (formatted) is written to plans/<name>_<SUFFIX>.txt.
 
 Reading a full sweep: walls inflate late in one session from accumulated
 pressure (Python workers, Arrow buffers, state stores), so time a
@@ -35,6 +35,16 @@ from bench import noop, timed  # noqa: E402
 from odc_stac_spark import get_spark  # noqa: E402
 from odc_stac_spark.queries import load_all  # noqa: E402
 from odc_stac_spark.sources.tables import DEFAULT_SF_DIR  # noqa: E402
+
+
+def final_plan(df) -> str:
+    """The formatted physical plan of ``df`` once its own query execution
+    has run: AQE re-plans at run time (broadcast conversion, partition
+    coalescing), and the noop write runs a copy, so before this run the
+    plan is AQE's initial one (``isFinalPlan=false``)."""
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    return df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
 
 
 def main() -> None:
@@ -59,9 +69,8 @@ def main() -> None:
             out[name] = {"error": str(e)[:200]}
         print(f"{out[name].get('best', 'ERR'):>8}  {name}", file=sys.stderr, flush=True)
         if args.plans and "best" in out[name]:
-            plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
             with open(os.path.join(REPO, "plans", f"{name}_{args.plans}.txt"), "w") as fh:
-                fh.write(plan)
+                fh.write(final_plan(df))
         spark.catalog.clearCache()
     best = {k: r["best"] for k, r in out.items() if "best" in r}
     for k, v in sorted(best.items(), key=lambda kv: -kv[1])[:20]:
