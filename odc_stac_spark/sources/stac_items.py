@@ -384,10 +384,8 @@ def assets_df(items: DataFrame, cfg: Optional[dict] = None) -> DataFrame:
     _mdtools.py:505-511)."""
     cols = items.columns
     has_proj = "coalesce(has_proj, false)" if "has_proj" in cols else "false"
-    configured = "false"
     if cfg:
         has_proj = f"({has_proj} AND NOT {_by_cid(cfg, lambda mc: sql_literal(mc.ignore_proj))})"
-        configured = _by_cid(cfg, lambda mc: sql_in("asset_name", mc.band_cfg))
 
     def strict(asset: str, proj: str) -> str:
         return (
@@ -412,6 +410,7 @@ def assets_df(items: DataFrame, cfg: Optional[dict] = None) -> DataFrame:
         f" ELSE {is_raster_data_sql('asset')} END"
     )
     if cfg:
+        configured = _by_cid(cfg, lambda mc: sql_in("asset_name", mc.band_cfg))
         is_raster = f"({configured} OR {is_raster})"
     return ex.selectExpr(
         *item_cols, "properties", *idx, "has_proj", "asset_name", "asset", f"{is_raster} AS is_raster"
