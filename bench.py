@@ -52,8 +52,8 @@ PROTOCOL = (
     "every phase: one untimed warm call, then best of 3 timed calls, after one "
     "JIT warm-up pass over the headline; jp2_lossy_sec, dedup_pipeline_e2e_sec "
     "and sf1_spot are warm best-of-3 (single-shot in BENCH_local_r17 and "
-    "earlier; a registry query's later calls reuse the caches its first call "
-    "persisted), sf1_cold is the warm call"
+    "earlier); every registry call releases the caches the previous call "
+    "persisted, so each timed call recomputes its own; sf1_cold is the warm call"
 )
 
 
@@ -146,8 +146,8 @@ def main() -> None:
 
     def query(name: str, d: str = sf_dir) -> dict:
         rec = timed(lambda: noop(registry[name].spark_fn(spark, d)))
-        # the registry wrapper keeps a query's scoped caches across its
-        # own re-entries; drop them so the next query starts clean
+        # every registry call already releases the previous call's scoped
+        # caches; this also drops anything a query persisted outside them
         spark.catalog.clearCache()
         return rec
 

@@ -6,9 +6,9 @@ correctness gate, but real recall needs centroids that follow the data.
 This operator runs Lloyd iterations with the cluster in charge of the
 O(n·k·d) work:
 
-- **assignment** is a broadcast crossJoin (k rows) + per-vector top-1
-  window — all JVM expressions (``zip_with``/``aggregate`` folds), one
-  shuffle per iteration for the window;
+- **assignment** (:func:`assign_to_centroids`, the one cosine assigner
+  of the IVF family) scores each vector against a broadcast one-row
+  centroid array in one SQL expression — map-side, no shuffle;
 - **update** is one groupBy over at most k groups with per-dimension
   ``avg`` columns — partial aggregation map-side, k×d scalars collected;
 - the driver only ever holds the k centroid vectors (k·d floats).
@@ -47,94 +47,64 @@ from pyspark.sql.types import StructType
 from ..session import literal_df
 
 
-def _cos(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    return dot / (na * nb)
+def _norm_sql(a: str) -> str:
+    """L2 norm of an array expression as SQL text: the sequential float64
+    fold of the oracles' ``sqrt(list_dot_product(v, v))``, so a centroid
+    norm computed once has the bits of one computed per row."""
+    return f"sqrt(aggregate({a}, 0D, (s, x) -> s + x * x))"
 
 
-def _seqnorm(vec) -> float:
-    """Sequential left-fold x*x then sqrt — the bit-identical Python image
-    of the Catalyst `_cos` norm fold (r16: lets centroid norms ship as
-    literals instead of being re-folded once per corpus row per
-    centroid)."""
-    import math
+def centroid_array(cent: DataFrame) -> DataFrame:
+    """``cent``'s ``(cent_id, cemb)`` rows as ONE row: ``carr``, the
+    cent_id-sorted array of ``(cent_id, cemb, cnrm)`` structs.
 
-    acc = 0.0
-    for v in vec:
-        acc = acc + float(v) * float(v)
-    return math.sqrt(acc)
+    ``cent`` must be bounded (k rows): the array is a two-stage
+    ``collect_list`` aggregate, and callers broadcast its single row to
+    every corpus task, so the centroids travel as data, once, rather than
+    as plan literals folded into every build. The centroid norm ``cnrm``
+    is computed here once per centroid instead of once per (row,
+    centroid) pair; it is the same fold, so the same bits."""
+    c = f"named_struct('cent_id', cent_id, 'cemb', cemb, 'cnrm', {_norm_sql('cemb')})"
+    return cent.selectExpr(f"array_sort(collect_list({c})) AS carr")
 
 
 def assign_to_centroids(
-    emb: DataFrame, centroids: List[List[float]], keep_sim: bool = False
+    emb: DataFrame, cent: DataFrame, nprobe: int = 1, keep_sim: bool = False
 ) -> DataFrame:
-    """(vec_id, emb) → + cent_id: nearest centroid by cosine, ties →
-    cent_id asc.
+    """(vec_id, emb) → (vec_id, emb, cent_id[, sim]): one row per each of
+    the vector's ``nprobe`` nearest centroids by cosine, ranked by
+    (sim DESC, cent_id ASC) — the oracles' ROW_NUMBER order, so ties go
+    to the lower cent_id. ``cent`` is a bounded ``(cent_id, cemb)``
+    DataFrame; ``cent_id`` keeps its type.
 
-    MAP-SIDE (r13): the centroids arrive as ONE broadcast row holding a
-    cent_id-sorted (cent_id, cemb, cnrm) struct array and the argmax is a
-    deterministic left fold over that array — ZERO shuffle of the corpus.
-    The pre-r13 shape (broadcast k-row crossJoin + a row_number window
-    over vec_id) pushed k× the corpus through a window exchange; at
-    100 TB the full-corpus assign step IS the dominant pass, so it must
-    not shuffle at all. r16 moved the array from a PLAN LITERAL to a
-    broadcast 1-row table: every Lloyd iteration previously embedded
-    k×dim fresh literals, which made each iteration's plan textually
-    unique — full Catalyst analysis + whole-stage codegen compile per
-    iteration (driver-side, serial). With the centroids as data the plan
-    is structurally identical across iterations, so codegen is compiled
-    once and cached; the per-centroid norm ships precomputed (cnrm, the
-    bit-identical sequential fold) instead of being re-folded per corpus
-    row. Float semantics are unchanged: the cosine is the identical
-    fold arithmetic per (vector, centroid) pair, and the strictly-
-    greater fold keeps the FIRST maximum over the cent_id-ascending
-    array — the same winner as the window's (sim DESC, cent_id ASC)
-    order — so every hash-gated oracle image is preserved bit-for-bit."""
-    spark = emb.sparkSession
-    cdf = literal_df(
-        spark,
-        [
-            (i, [float(v) for v in c], _seqnorm(c))
-            for i, c in enumerate(centroids)
-        ],
-        StructType.fromDDL("cent_id int, cemb array<double>, cnrm double"),
+    Map-side: the corpus crossJoins :func:`centroid_array`'s broadcast
+    row, and one SQL expression scores the row against every centroid
+    and sorts the (−sim, cent_id) pairs, so the corpus is never
+    shuffled (a crossJoin + row_number window would push k× the corpus
+    through an exchange, and the full-corpus assignment is the dominant
+    pass of every IVF-family operator at scale). The plan is the same
+    whatever the centroid values, so Lloyd iterations reuse codegen.
+    ``sim`` is the exact ``dot / (row_norm * cnrm)`` the oracles compute:
+    negation is exact."""
+    dot = "aggregate(zip_with(emb, c.cemb, (x, y) -> x * y), 0D, (s, x) -> s + x)"
+    cos = f"{dot} / ({_norm_sql('emb')} * c.cnrm)"
+    ranked = (
+        f"array_sort(transform(carr, c -> named_struct("
+        f"'negsim', -({cos}), 'cent_id', c.cent_id)))"
     )
-    carr_df = cdf.select(
-        F.struct("cent_id", "cemb", "cnrm").alias("c")
-    ).agg(F.array_sort(F.collect_list("c")).alias("carr"))
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
-    rnorm = lambda a: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
-    )
-    cands = F.transform(
-        F.col("carr"),
-        lambda c: F.struct(
-            c["cent_id"].alias("cent_id"),
-            (dot(F.col("emb"), c["cemb"]) / (rnorm(F.col("emb")) * c["cnrm"])).alias(
-                "sim"
-            ),
-        ),
-    )
-    best = F.aggregate(
-        cands,
-        F.struct(
-            F.lit(-1).cast("int").alias("cent_id"),
-            F.lit(float("-inf")).alias("sim"),
-        ),
-        lambda acc, c: F.when(c["sim"] > acc["sim"], c).otherwise(acc),
-    )
-    cols = ["vec_id", "emb", F.col("best.cent_id").alias("cent_id")] + (
-        [F.col("best.sim").alias("sim")] if keep_sim else []
-    )
+    cols = ["vec_id", "emb", "best.cent_id AS cent_id"] + (["-best.negsim AS sim"] if keep_sim else [])
     return (
-        emb.crossJoin(F.broadcast(carr_df))
-        .withColumn("best", best)
-        .select(*cols)
+        emb.crossJoin(F.broadcast(centroid_array(cent)))
+        .selectExpr("vec_id", "emb", f"explode(slice({ranked}, 1, {int(nprobe)})) AS best")
+        .selectExpr(*cols)
     )
+
+
+def centroids_df(spark, cent: List[List[float]]) -> DataFrame:
+    """Driver-side centroid vectors as a ``(cent_id int, cemb)`` table,
+    ``cent_id`` = list position."""
+    schema = StructType.fromDDL("cent_id int, cemb array<double>")
+    return literal_df(spark, list(enumerate(cent)), schema)
 
 
 DEFAULT_CELL_CAP = 4096
@@ -168,7 +138,7 @@ def kmeans_fit(
     w_cap = Window.partitionBy("cent_id").orderBy("vec_id")
     for _ in range(n_iter):
         assigned = (
-            assign_to_centroids(emb, cent, keep_sim=True)
+            assign_to_centroids(emb, centroids_df(emb.sparkSession, cent), keep_sim=True)
             .withColumn("crn", F.row_number().over(w_cap))
             .where(F.col("crn") <= cell_cap)
         )

@@ -43,14 +43,12 @@ REGISTRY: dict[str, Query] = {}
 # long-lived session running the whole registry accumulates every
 # persisted subtree in the block manager — the same resident-memory
 # pressure root-caused for the r8-r10 bench variance. scoped_persist()
-# registers the cache for release when a DIFFERENT registry query is
-# next entered (by which point the previous result has been
-# materialized); re-entries of the SAME query keep their caches, so
-# bench best-of-N repeats reuse run 1's persisted blocks exactly like
-# the pre-r12 protocol (VERDICT r12 "what's wrong" #2: releasing at
-# every entry de-warmed the best-of loop and moved dedup_minhash_lsh
-# +87% for measurement reasons only). Unpersist is always safe for
-# correctness (worst case: recompute).
+# registers the cache for release when the next registry query is
+# entered (by which point the previous result has been materialized),
+# the same query included: a timed re-run of a query recomputes what it
+# persists instead of reading its previous run's blocks, so best-of-N
+# times the query, not the stages above its caches. Unpersist is always
+# safe for correctness (worst case: recompute).
 #
 # Concurrency note (ADVICE r12): the registry assumes SEQUENTIAL query
 # execution on a session — the lifecycle "release the previous query's
@@ -63,12 +61,11 @@ import threading as _threading
 
 _SCOPED_LOCK = _threading.Lock()
 _SCOPED_CACHES: list = []
-_LAST_QUERY: list = [None]  # name of the query whose caches are live
 
 
 def scoped_persist(df: DataFrame) -> DataFrame:
     """persist() with registry-query lifetime (released by release_caches,
-    which the registry wrapper calls when a different query is entered)."""
+    which the registry wrapper calls whenever a query is entered)."""
     df = df.persist()
     with _SCOPED_LOCK:
         _SCOPED_CACHES.append(df)
@@ -79,7 +76,6 @@ def release_caches() -> None:
     """Unpersist every scoped cache registered since the last call."""
     with _SCOPED_LOCK:
         drained, _SCOPED_CACHES[:] = list(_SCOPED_CACHES), []
-        _LAST_QUERY[0] = None
     for df in drained:
         try:
             df.unpersist()
@@ -92,17 +88,12 @@ def register(name: str, oracle: Optional[str] = None, doc: str = "", tags: tuple
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name}")
 
-        # The REGISTRY entry releases the previous query's scoped caches
-        # when a DIFFERENT query is entered (same-name re-entries keep
-        # their caches so bench best-of repeats stay warm); the RAW fn is
-        # returned so intra-module composition (e.g.
+        # The REGISTRY entry releases the previous call's scoped caches;
+        # the RAW fn is returned so intra-module composition (e.g.
         # dedup_connected_components -> dedup_ngram_jaccard) does not
         # release its caller's caches mid-query.
-        def run(spark: SparkSession, sf_dir: str, _fn=fn, _name=name) -> DataFrame:
-            if _LAST_QUERY[0] != _name:
-                release_caches()
-                with _SCOPED_LOCK:
-                    _LAST_QUERY[0] = _name
+        def run(spark: SparkSession, sf_dir: str, _fn=fn) -> DataFrame:
+            release_caches()
             return _fn(spark, sf_dir)
 
         run.__name__ = fn.__name__

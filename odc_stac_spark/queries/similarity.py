@@ -21,9 +21,15 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.types import StructType
 
-from ..session import literal_df
+from ..operators.kmeans import (
+    DEFAULT_CELL_CAP,
+    assign_to_centroids,
+    centroid_array,
+    centroids_df,
+    kmeans_fit,
+)
+from ..session import sql_literal
 from ..sources.tables import load_table
 from . import register, scoped_persist
 
@@ -125,69 +131,10 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _centroid_literal(emb: DataFrame):
-    """First IVF_K vectors as a plan-literal (cent_id, cemb) struct array
-    (bounded driver collect: K rows). MAP-SIDE assignment (r13): scoring
-    a corpus row against the literal array needs NO join and NO window —
-    the pre-r13 broadcast crossJoin + row_number shape pushed K× the
-    corpus through an exchange, which is the dominant cost at scale
-    (assignment IS the full-corpus pass of every IVF-family operator)."""
-    rows = (
-        emb.where(F.col("vec_id") < IVF_K)
-        .select("vec_id", "emb")
-        .orderBy("vec_id")
-        .collect()
-    )
-
-    def _seqnorm(vec) -> float:
-        # sequential left-fold of x*x then sqrt — the exact arithmetic
-        # (and therefore the exact bits) of the Catalyst `_norm` fold the
-        # scoring lambda used to re-evaluate per corpus row (r16 hoist)
-        acc = 0.0
-        for v in vec:
-            acc = acc + float(v) * float(v)
-        import math
-
-        return math.sqrt(acc)
-
-    return F.array(
-        *[
-            F.struct(
-                F.lit(int(r.vec_id)).cast("bigint").alias("cent_id"),
-                F.array(*[F.lit(float(v)) for v in r.emb]).alias("cemb"),
-                F.lit(_seqnorm(r.emb)).alias("cnrm"),
-            )
-            for r in rows
-        ]
-    )
-
-
-def _ivf_multi_assign(emb: DataFrame, nprobe: int) -> DataFrame:
-    """(vec_id, emb) → (vec_id, emb, cent_id) rows, one per the vector's
-    ``nprobe`` nearest of the IVF_K fixed centroids (map-side literal
-    scoring, zero shuffle; deterministic ties → cent_id asc — identical
-    winners to the former (sim DESC, cent_id ASC) window). Multi-
-    assignment is the standard recall lever for cell-blocked pair
-    generation."""
-    carr = _centroid_literal(emb)
-    cands = F.transform(
-        carr,
-        lambda c: F.struct(
-            (
-                -(
-                    _dot(F.col("emb"), c["cemb"])
-                    / (_norm(F.col("emb")) * c["cnrm"])
-                )
-            ).alias("negsim"),
-            c["cent_id"].alias("cent_id"),
-        ),
-    )
-    top = F.slice(F.array_sort(cands), 1, nprobe)
-    return emb.select(
-        "vec_id",
-        "emb",
-        F.explode(F.transform(top, lambda s: s["cent_id"])).alias("cent_id"),
-    )
+def _first_cents(emb: DataFrame, k: int = IVF_K) -> DataFrame:
+    """The fixed coarse quantizer: the first ``k`` vectors by id as
+    ``(cent_id, cemb)`` centroids — the oracles' ``cent`` CTE."""
+    return emb.where(f"vec_id < {int(k)}").selectExpr("vec_id AS cent_id", "emb AS cemb")
 
 
 @register(
@@ -234,9 +181,8 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join side (together: 28.5 → 1.6 s warm at sf0.1). na*nb keeps the
     # exact multiplication order of the previous inline expression, so
     # rounded cosines are bit-identical.
-    assigned = (
-        _ivf_multi_assign(emb, NEARDUP_NPROBE)
-        .withColumn("nrm", _norm(F.col("emb")))
+    assigned = assign_to_centroids(emb, _first_cents(emb), NEARDUP_NPROBE).withColumn(
+        "nrm", _norm(F.col("emb"))
     )
     assigned = scoped_persist(assigned)
     a = assigned.select(
@@ -277,72 +223,6 @@ def _neardup_k(n_vectors: int) -> int:
     NEARDUP_TARGET_CELL (floor IVF_K) — must match the oracle's
     GREATEST(IVF_K, CEIL(n / NEARDUP_TARGET_CELL))."""
     return max(IVF_K, -(-int(n_vectors) // NEARDUP_TARGET_CELL))
-
-
-def _centroid_array_df(emb: DataFrame, k: int) -> DataFrame:
-    """1-row DataFrame holding the first-``k`` coarse-quantizer table as a
-    cent_id-sorted (cent_id, cemb) struct array.
-
-    Unlike :func:`_centroid_literal` (a plan literal, right for small
-    FIXED k), the table ships as DATA — a bounded k-row aggregate joined
-    on via a broadcast 1-row crossJoin — so adaptive k can grow with the
-    corpus without inflating the Catalyst tree or re-collecting to the
-    driver. Corpus-side cost is unchanged: the same zero-shuffle map-side
-    fold scores each row against the array. (At extreme k production
-    switches to a hierarchical/coarse-fine quantizer; docstring rule, not
-    needed at any bench scale.)"""
-    return (
-        emb.where(F.col("vec_id") < int(k))
-        .select(
-            F.struct(
-                F.col("vec_id").cast("bigint").alias("cent_id"),
-                F.col("emb").alias("cemb"),
-                # centroid norm hoisted HERE (r16): the assignment lambda
-                # previously re-evaluated _norm(cemb) once per corpus row
-                # per centroid — k× n interpreted 64-element folds for a
-                # value that is a pure per-centroid constant. Same
-                # expression, same fold order → identical bits.
-                _norm(F.col("emb")).alias("cnrm"),
-            ).alias("c")
-        )
-        .agg(F.array_sort(F.collect_list("c")).alias("carr"))
-    )
-
-
-def _ivf_multi_assign_adaptive(emb: DataFrame, nprobe: int, k: int) -> DataFrame:
-    """(vec_id, emb) → (vec_id, emb, cent_id) for the ``nprobe`` nearest of
-    the first-``k`` centroids — identical fold expressions, ordering and
-    tie-break (sim DESC, cent_id ASC) as :func:`_ivf_multi_assign`, with
-    the centroid array delivered as a broadcast column instead of a plan
-    literal so ``k`` may scale with the corpus.
-
-    r16: the CENTROID norm is hoisted out of the scoring lambda into the
-    broadcast struct (it was re-folded once per corpus row per centroid
-    — k interpreted 64-element folds per row for per-centroid
-    constants). sim stays the bit-identical ``dot / (row_norm *
-    cent_norm)``. The ROW norm deliberately stays inside the lambda: a
-    hoisted projection column gets inlined back by CollapseProject into
-    the Generate/lambda (the _shingles_df hazard) and measured SLOWER —
-    the broadcast-struct hoist is safe because a field of a joined
-    column cannot be re-inlined."""
-    cands = F.transform(
-        F.col("carr"),
-        lambda c: F.struct(
-            (
-                -(
-                    _dot(F.col("emb"), c["cemb"])
-                    / (_norm(F.col("emb")) * c["cnrm"])
-                )
-            ).alias("negsim"),
-            c["cent_id"].alias("cent_id"),
-        ),
-    )
-    top = F.slice(F.array_sort(cands), 1, nprobe)
-    return emb.crossJoin(F.broadcast(_centroid_array_df(emb, k))).select(
-        "vec_id",
-        "emb",
-        F.explode(F.transform(top, lambda s: s["cent_id"])).alias("cent_id"),
-    )
 
 
 @register(
@@ -393,7 +273,7 @@ def embedding_neardup_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "embeddings").count()
     k = _neardup_k(n)
     emb = _emb(spark, sf_dir)
-    assigned = _ivf_multi_assign_adaptive(emb, NEARDUP_NPROBE, k).withColumn(
+    assigned = assign_to_centroids(emb, _first_cents(emb, k), NEARDUP_NPROBE).withColumn(
         "nrm", _norm(F.col("emb"))
     )
     assigned = scoped_persist(assigned)
@@ -470,37 +350,12 @@ SEMDEDUP_COS = 0.45  # duplicate threshold (synthetic max-cos ≈ 0.51)
 )
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    # map-side argmax over the literal centroid array (r13: zero-shuffle
-    # assignment — see _centroid_literal); the strictly-greater fold keeps
-    # the FIRST maximum, i.e. the former (sim DESC, cent_id ASC) winner
-    carr = _centroid_literal(emb)
-    cands = F.transform(
-        carr,
-        lambda c: F.struct(
-            c["cent_id"].alias("cent_id"),
-            (
-                _dot(F.col("emb"), c["cemb"])
-                / (_norm(F.col("emb")) * _norm(c["cemb"]))
-            ).alias("sim"),
-        ),
-    )
-    best = F.aggregate(
-        cands,
-        F.struct(
-            F.lit(-1).cast("bigint").alias("cent_id"),
-            F.lit(float("-inf")).alias("sim"),
-        ),
-        lambda acc, c: F.when(c["sim"] > acc["sim"], c).otherwise(acc),
-    )
     # persist: the assignment feeds BOTH sides of the cent_id self-join
     # plus the final left join — without it Spark recomputes the
-    # literal-score + argmax subtree three times (the 100 TB deployment
-    # materializes this table bucketed by cent_id instead)
-    assigned = emb.withColumn("best", best).select(
-        "vec_id",
-        "emb",
-        F.col("best.cent_id").alias("cent_id"),
-        F.col("best.sim").alias("cent_sim_raw"),
+    # assignment three times (the 100 TB deployment materializes this
+    # table bucketed by cent_id instead)
+    assigned = assign_to_centroids(emb, _first_cents(emb), keep_sim=True).withColumnRenamed(
+        "sim", "cent_sim_raw"
     )
     assigned = scoped_persist(assigned)
     v = assigned.select(
@@ -622,7 +477,6 @@ def _ivf_kmeans_oracle(n_iter: int = 3) -> str:
     capped and uncapped fits are bit-identical here, but the oracle
     replays the capped op sequence so the gate stays exact at ANY
     cell size."""
-    from ..operators.kmeans import DEFAULT_CELL_CAP
     ctes = [
         "emb AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)",
         # fit-on-sample gate (ADVICE r12, second half): Lloyd iterations
@@ -710,15 +564,11 @@ def _ivf_serve_topk(assigned: DataFrame, cent: DataFrame, q: DataFrame) -> DataF
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    cent = emb.where(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("cent_id"), F.col("emb").alias("cemb")
-    )
-    # assign: nearest centroid per vector (broadcast IVF_K × n)
-    assigned = _ivf_multi_assign(emb, 1)
+    cent = _first_cents(emb)
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
     )
-    return _ivf_serve_topk(assigned, cent, q)
+    return _ivf_serve_topk(assign_to_centroids(emb, cent), cent, q)
 
 
 @register(
@@ -738,8 +588,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity",),
 )
 def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.kmeans import assign_to_centroids, kmeans_fit
-
     emb = _emb(spark, sf_dir)
     emb = scoped_persist(emb)
     # fit on the deterministic 1/KM_FIT_STRIDE sample (ADVICE r12: the
@@ -751,39 +599,11 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (pmod(xxhash64(id), stride)) — same shape, same cost.
     fit = emb.where(F.col("vec_id") % KM_FIT_STRIDE == 0)
     cent, _trace = kmeans_fit(fit, IVF_K, n_iter=3)
-    assigned = assign_to_centroids(emb, cent)
-    cdf = literal_df(
-        spark,
-        [(i, c) for i, c in enumerate(cent)],
-        StructType.fromDDL("cent_id int, cemb array<double>"),
-    )
+    cdf = centroids_df(spark, cent)
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
     )
-    qsim = _dot(F.col("qemb"), F.col("cemb")) / (_norm(F.col("qemb")) * _norm(F.col("cemb")))
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("qsim"), F.asc("cent_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cdf))
-        .select("query_id", "qemb", "cent_id", qsim.alias("qsim"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= IVF_NPROBE)
-        .select("query_id", "qemb", "cent_id")
-    )
-    cos = _dot(F.col("qemb"), F.col("emb")) / (_norm(F.col("qemb")) * _norm(F.col("emb")))
-    w_top = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    scored = (
-        F.broadcast(probes)
-        .join(assigned, "cent_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_raw"))
-    )
-    # rank window only (r16): WindowGroupLimit bounds the exchange
-    # map-side — see knn_bruteforce_cosine
-    return (
-        scored.withColumn("rn", F.row_number().over(w_top))
-        .where(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cos"), "rn")
-    )
+    return _ivf_serve_topk(assign_to_centroids(emb, cdf), cdf, q)
 
 
 LSH_TABLES, LSH_BITS, LSH_DIM = 4, 6, 64
@@ -1049,7 +869,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     query touches NPROBE/K of the directories."""
     emb = _emb(spark, sf_dir)
     (
-        _ivf_multi_assign(emb, 1)
+        assign_to_centroids(emb, _first_cents(emb))
         .write.mode("overwrite")
         .partitionBy("cent_id")
         .parquet(path)
@@ -1081,9 +901,7 @@ def ann_ivf_topk_from_index(spark: SparkSession, index_path: str) -> DataFrame:
     stores every vector once)."""
     idx = spark.read.parquet(index_path)  # vec_id, emb, cent_id
     vecs = idx.select("vec_id", "emb")
-    cent = vecs.where(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("cent_id"), F.col("emb").alias("cemb")
-    )
+    cent = _first_cents(vecs)
     q = vecs.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
     )
@@ -1326,38 +1144,25 @@ _IVFPQ_ORACLE = f"""
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pyspark.sql.functions as F
 
     from ..operators.pq import encode_pq, ivfpq_topk, train_pq
 
     emb = _emb(spark, sf_dir)
     books = train_pq(emb, m=_PQ_M, k=_PQ_K, n_iter=0)
     codes = encode_pq(emb, books)
-    # distributed cell assignment: broadcast the 16 fixed centroids, L2
-    # argmin via sequential float64 fold (bit-matches DuckDB list_sum),
-    # map-side over the literal centroid array (r13: zero-shuffle; the
-    # strictly-less fold keeps the FIRST minimum = the former
-    # (d2 ASC, cell_id ASC) window winner)
-    carr = _centroid_literal(emb)
-    l2 = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("emb"), c["cemb"], lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    # distributed cell assignment: L2 argmin of each vector against the
+    # broadcast centroid array, map-side (zero shuffle), each distance a
+    # sequential float64 fold (bit-matches DuckDB list_sum); the
+    # strictly-less fold over the cent_id-sorted array keeps the FIRST
+    # minimum = the oracle's (d2 ASC, cent_id ASC) winner
+    d2 = "aggregate(zip_with(emb, c.cemb, (x, y) -> (x - y) * (x - y)), 0D, (s, x) -> s + x)"
+    best = (
+        f"aggregate(transform(carr, c -> named_struct('cell_id', c.cent_id, 'd2', {d2})), "
+        f"named_struct('cell_id', CAST(-1 AS BIGINT), 'd2', {sql_literal(float('inf'))}), "
+        "(acc, c) -> IF(c.d2 < acc.d2, c, acc))"
     )
-    cands = F.transform(
-        carr,
-        lambda c: F.struct(c["cent_id"].alias("cell_id"), l2(c).alias("d2")),
-    )
-    best = F.aggregate(
-        cands,
-        F.struct(
-            F.lit(-1).cast("bigint").alias("cell_id"),
-            F.lit(float("inf")).alias("d2"),
-        ),
-        lambda acc, c: F.when(c["d2"] < acc["d2"], c).otherwise(acc),
-    )
-    cells = emb.select(
-        "vec_id", best["cell_id"].cast("int").alias("cell_id")
+    cells = emb.crossJoin(F.broadcast(centroid_array(_first_cents(emb)))).selectExpr(
+        "vec_id", f"CAST({best}.cell_id AS INT) AS cell_id"
     )
     codes_cell = codes.join(cells, "vec_id")
     first = emb.orderBy("vec_id").limit(max(IVF_K, 5)).collect()
@@ -1730,7 +1535,8 @@ def emb_class_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scoped_persist(_emb(spark, sf_dir))
-    assigned = _ivf_multi_assign(emb, 1)  # (vec_id, emb, cent_id)
+    cent = _first_cents(emb)
+    assigned = assign_to_centroids(emb, cent)  # (vec_id, emb, cent_id)
     scale = F.array_max(F.transform(F.col("emb"), lambda x: F.abs(x))) / F.lit(
         SQ8_SCALE_DEN
     )
@@ -1745,9 +1551,6 @@ def ann_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     qd = F.transform(F.col("qi"), lambda x: x.cast("double"))
-    cent = emb.where(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("cent_id"), F.col("emb").alias("cemb")
-    )
     qfull = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
     )
@@ -1897,7 +1700,7 @@ def emb_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    assigned = _ivf_multi_assign(emb, 1)
+    assigned = assign_to_centroids(emb, _first_cents(emb))
     cells = assigned.groupBy("cent_id").agg(F.count(F.lit(1)).alias("n"))
     total = cells.agg(F.sum("n").alias("total"))
     return cells.crossJoin(F.broadcast(total)).select(
@@ -2449,7 +2252,7 @@ def _mutual_knn_components(spark, sf_dir, tau=None) -> DataFrame:
     emb = _emb(spark, sf_dir)
     nz = emb.where(_norm(F.col("emb")) > 0)
     assigned = scoped_persist(
-        _ivf_multi_assign_adaptive(nz, NEARDUP_NPROBE, k).withColumn(
+        assign_to_centroids(nz, _first_cents(nz, k), NEARDUP_NPROBE).withColumn(
             "nrm", _norm(F.col("emb"))
         )
     )
@@ -2657,7 +2460,7 @@ def emb_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _neardup_k(n)
     emb = _emb(spark, sf_dir)
     assigned = scoped_persist(
-        _ivf_multi_assign_adaptive(emb, NEARDUP_NPROBE, k).withColumn(
+        assign_to_centroids(emb, _first_cents(emb, k), NEARDUP_NPROBE).withColumn(
             "nrm", _norm(F.col("emb"))
         )
     )

@@ -45,13 +45,28 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _capped(x: str) -> str:
+    """``min(x, 1)`` as SQL text; a CASE, as DuckDB's LEAST turns
+    DECIMALs into DOUBLE."""
+    return f"CASE WHEN {x} < 1 THEN {x} ELSE 1 END"
+
+
+# The weighted score in exact DECIMAL arithmetic, the same text in Spark
+# and in its DuckDB oracle: in DOUBLE, a half-way sum such as 0.58315
+# rounds to 4 places differently in the two engines. The ratios are
+# already rounded to 4 places, so their DECIMAL casts are exact; the
+# divisions are multiplications because DuckDB turns a DECIMAL division
+# into DOUBLE.
+_QUALITY_SQL = f"""CAST(ROUND(
+        0.4 * {_capped("n_tokens * 0.01")}
+      + 0.4 * {_capped("CAST(stop_ratio AS DECIMAL(20, 4)) * 4")}
+      + 0.2 * {_capped("CAST(avg_token_len AS DECIMAL(20, 4)) * 0.125")}, 4) AS DOUBLE)"""
+
+
 @register(
     "text_quality_score",
     oracle=f"""
-    SELECT doc_id, n_tokens, stop_ratio, avg_token_len,
-           ROUND(0.4 * LEAST(n_tokens / 100.0, 1.0)
-               + 0.4 * LEAST(stop_ratio * 4, 1.0)
-               + 0.2 * LEAST(avg_token_len / 8.0, 1.0), 4) AS quality
+    SELECT doc_id, n_tokens, stop_ratio, avg_token_len, {_QUALITY_SQL} AS quality
     FROM (
         SELECT doc_id,
                len(toks) AS n_tokens,
@@ -84,13 +99,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         stop_ratio.alias("stop_ratio"),
         avg_len.alias("avg_token_len"),
     )
-    quality = F.round(
-        0.4 * F.least(F.col("n_tokens") / 100.0, F.lit(1.0))
-        + 0.4 * F.least(F.col("stop_ratio") * 4, F.lit(1.0))
-        + 0.2 * F.least(F.col("avg_token_len") / 8.0, F.lit(1.0)),
-        4,
-    )
-    return d.withColumn("quality", quality)
+    return d.withColumn("quality", F.expr(_QUALITY_SQL))
 
 
 @register(

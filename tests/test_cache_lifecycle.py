@@ -1,11 +1,9 @@
 """Registry scoped-cache lifecycle (queries/__init__.py).
 
-Contract (VERDICT r12 "what's wrong" #2): caches registered by a query
-survive re-entries of the SAME query — the bench best-of-N loop must
-reuse run 1's persisted blocks — and are released only when a DIFFERENT
-registry query is entered. Releasing at every entry (the r12 behavior)
-silently de-warmed the best-of loop and moved dedup_minhash_lsh +87%
-for measurement reasons only.
+Contract: caches registered by a query live until the next registry
+entry, and every entry releases them — a re-entry of the SAME query
+too, so a best-of-N loop times the query's own persisted stages on
+every run instead of re-reading run 1's blocks.
 """
 
 from __future__ import annotations
@@ -35,7 +33,7 @@ def _clean_registry():
         Q.release_caches()
 
 
-def test_same_name_reentry_keeps_caches(spark, _clean_registry):
+def test_every_entry_releases_caches(spark, _clean_registry):
     cached = []
 
     def qa(spark, sf_dir):
@@ -53,12 +51,12 @@ def test_same_name_reentry_keeps_caches(spark, _clean_registry):
     a.spark_fn(spark, "")
     first = cached[0]
     assert first.is_cached
-    # best-of re-entry of the SAME query: run 1's cache must survive
+    # a re-entry of the SAME query releases run 1's cache and persists anew
     a.spark_fn(spark, "")
-    assert first.is_cached, "same-name re-entry must not release caches"
+    assert not first.is_cached, "same-name re-entry must release the previous run's caches"
+    assert cached[1].is_cached
     # a DIFFERENT query entering releases everything A registered
     b.spark_fn(spark, "")
-    assert not first.is_cached, "name change must release the previous query's caches"
     assert all(not df.is_cached for df in cached)
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from odc_stac_spark.operators.kmeans import assign_to_centroids, kmeans_fit
+from odc_stac_spark.operators.kmeans import assign_to_centroids, centroids_df, kmeans_fit
 from odc_stac_spark.queries.similarity import TOP_K, _vecd
 from odc_stac_spark.sources.tables import load_table
 
@@ -33,7 +33,7 @@ def test_kmeans_quality_trace_non_decreasing(emb):
 
 def test_assignment_partition_invariants(emb):
     cent, _ = kmeans_fit(emb, k=8, n_iter=2)
-    assigned = assign_to_centroids(emb, cent)
+    assigned = assign_to_centroids(emb, centroids_df(emb.sparkSession, cent))
     n = emb.count()
     assert assigned.count() == n  # every vector exactly once
     assert assigned.select("vec_id").distinct().count() == n
@@ -72,7 +72,11 @@ def test_cell_cap_bounds_update_members(emb):
     # independent replication: Spark's own assignment to the init
     # centroids fixes cell membership; the capped update must average the
     # cap lowest vec_ids per cell (sorted order, like the fold)
-    rows = assign_to_centroids(emb, init).select("vec_id", "cent_id", "emb").collect()
+    rows = (
+        assign_to_centroids(emb, centroids_df(emb.sparkSession, init))
+        .select("vec_id", "cent_id", "emb")
+        .collect()
+    )
     cells: dict = {}
     for r in rows:
         cells.setdefault(r.cent_id, []).append((r.vec_id, np.array(r.emb)))
@@ -98,12 +102,9 @@ def test_assignment_margin_guards_the_hash_gate(emb):
     from odc_stac_spark.queries.similarity import IVF_K
 
     cent, _ = kmeans_fit(emb, k=IVF_K, n_iter=3)
-    assigned = assign_to_centroids(emb, cent, keep_sim=True)
+    cdf = centroids_df(emb.sparkSession, cent)
+    assigned = assign_to_centroids(emb, cdf, keep_sim=True)
     # re-derive top-2 sims per vector (assign_to_centroids keeps top-1)
-    spark = emb.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cent)], "cent_id int, cemb array<double>"
-    )
     dot = F.aggregate(
         F.zip_with("emb", "cemb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
     )
@@ -127,6 +128,48 @@ def test_assignment_margin_guards_the_hash_gate(emb):
     # double rounding noise is ~1e-16 per op; demand 6+ orders of margin
     assert min_gap > 1e-9, f"near-tied assignment (gap {min_gap}) — hash gate at risk"
     assert assigned.count() == emb.count()
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_assignment_ties_go_to_the_lower_cent_id(spark, id_type):
+    """Two identical centroids tie on every vector: nprobe=1 keeps the
+    lower cent_id (the oracles' ROW_NUMBER order sim DESC, cent_id ASC),
+    nprobe=2 returns both in cent_id order with the same sim, and
+    cent_id keeps the caller's type."""
+    from pyspark.sql.types import StructType
+
+    from odc_stac_spark.session import literal_df
+
+    tied = [0.6, -0.2, 0.3, 0.1]
+    far = [-0.6, 0.2, -0.3, -0.1]
+    # rows out of id order: the ranking, not the input order, decides
+    cent = literal_df(
+        spark,
+        [(7, tied), (2, far), (3, list(tied))],
+        StructType.fromDDL(f"cent_id {id_type}, cemb array<double>"),
+    )
+    vecs = {10: [0.5, 0.1, 0.2, 0.0], 11: [0.9, -0.4, 0.3, 0.2], 12: [0.1, 0.1, 0.1, 0.1]}
+    emb = literal_df(
+        spark, list(vecs.items()), StructType.fromDDL("vec_id bigint, emb array<double>")
+    )
+
+    def cos(a, b):
+        dot = na = nb = 0.0
+        for x, y in zip(a, b):
+            dot, na, nb = dot + x * y, na + x * x, nb + y * y
+        return dot / (na**0.5 * nb**0.5)
+
+    one = assign_to_centroids(emb, cent, keep_sim=True)
+    assert one.schema["cent_id"].dataType.simpleString() == id_type
+    assert {(r.vec_id, r.cent_id, r.sim) for r in one.collect()} == {
+        (v, 3, cos(e, tied)) for v, e in vecs.items()
+    }
+    two = assign_to_centroids(emb, cent, nprobe=2, keep_sim=True).collect()
+    by_vec: dict = {}
+    for r in two:
+        by_vec.setdefault(r.vec_id, []).append((r.cent_id, r.sim))
+    assert by_vec == {v: [(3, cos(e, tied)), (7, cos(e, tied))] for v, e in vecs.items()}
+    assert assign_to_centroids(emb, cent, nprobe=2).columns == ["vec_id", "emb", "cent_id"]
 
 
 def test_kmeans_ivf_recall(spark, sf_dir):

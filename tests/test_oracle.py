@@ -56,6 +56,49 @@ def test_q22_nonvacuous_at_sf01(spark):
         c.close()
 
 
+#: sf0.1 documents whose quality score is a half-way case at 4 places
+#: (doc 501: 0.4·0.74 + 0.4·0.4324 + 0.2·0.57095 = 0.58315)
+_QUALITY_TIES = {
+    501: "stream part customer join part a key hash batch line batch vector customer the "
+    "customer customer line part column scan join group slow table part group key column "
+    "small a stream part customer big a group slow window value query merge the group "
+    "vector a slow part hash big column table fast value key data small filter query agg the "
+    "vector filter the sort slow scan hash stream filter query group merge query key",
+    967: "query batch batch batch part the window slow column customer spark slow hash slow "
+    "vector stream stream",
+    1220: "line sort group a part a stream slow fast a query stream",
+}
+
+
+def test_text_quality_score_half_way_ties(spark, tmp_path):
+    """Half-way scores round up in both engines, the same way: the score
+    is exact DECIMAL arithmetic, so neither engine's DOUBLE rounding of a
+    sum like 0.58315 decides the fourth place."""
+    import duckdb
+    import pandas as pd
+
+    docs = pd.DataFrame(
+        {
+            "doc_id": list(_QUALITY_TIES),
+            "text": list(_QUALITY_TIES.values()),
+            "lang": "en",
+            "source": "web",
+            "n_chars": [len(t) for t in _QUALITY_TIES.values()],
+        }
+    )
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+    q = REGISTRY["text_quality_score"]
+    got = q.spark_fn(spark, str(tmp_path))
+    c = duckdb.connect()
+    try:
+        c.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')")
+        want = c.sql(q.oracle).df()
+    finally:
+        c.close()
+    compare(got, want, name="text_quality_score ties")
+    assert {r.doc_id: r.quality for r in got.collect()} == {501: 0.5832, 967: 0.2886, 1220: 0.5418}
+
+
 def test_compare_detects_value_perturbation(spark, sf_dir, con):
     """Guard the gate itself: a single perturbed value must fail the
     compare (if this ever passes silently, every green above is

@@ -134,8 +134,8 @@ def test_ivfpq_prunes_and_recalls(spark, emb, fitted):
     K = 16
     centroids = X[:K].astype(np.float64)  # deterministic coarse quantizer
 
-    # assign cells driver-side for the test corpus (engine path: broadcast
-    # join, queries/similarity._ivf_multi_assign)
+    # assign cells driver-side for the test corpus (engine path: an L2
+    # fold over the broadcast centroid array, queries/similarity.ann_ivfpq_topk)
     cells = ((X[:, None, :] - centroids[None, :, :]) ** 2).sum(-1).argmin(-1)
     cell_df = spark.createDataFrame(
         [(int(i), int(c)) for i, c in zip(ids, cells)], "vec_id long, cell_id int"

@@ -3,9 +3,11 @@
 Building a DataFrame in PySpark costs one py4j CALL command per JVM
 method the Python side invokes, so a plan assembled from Column objects
 pays thousands of round trips before Spark runs anything. The STAC
-metadata plane and the catalog planner are written as SQL text to keep
-that cost small; these budgets pin it. Each budget is the count the
-current code makes on a fixed 6-item catalog, and may only go down.
+metadata plane, the catalog planner and the IVF family's centroid
+assignment are written as SQL text to keep that cost small; these
+budgets pin it. Each budget is the count the current code makes, on a
+fixed 6-item catalog or for a registry query at the ``sf_dir`` fixture,
+and may only go down.
 
 Only CALL commands (``c\\n...``) count: py4j's garbage-collection
 commands (``m\\nd\\n...``) depend on when Python frees its proxies."""
@@ -20,6 +22,7 @@ import py4j.clientserver
 import pytest
 
 from odc_stac_spark.plans.catalog import load_from_catalog, plan_load_df
+from odc_stac_spark.queries import load_all
 from odc_stac_spark.sources.stac_items import parse_items, read_stac_json, stac_dicts_to_items
 
 #: py4j CALL commands per build, warm
@@ -27,6 +30,19 @@ BUDGETS = {
     "parse_items(read_stac_json)": 95,
     "parse_items(stac_dicts_to_items)": 104,
     "load_from_catalog(plan=plan)": 188,
+}
+
+#: py4j CALL commands per warm registry build (the call through the
+#: registry wrapper, which also releases the previous call's caches)
+QUERY_BUDGETS = {
+    "ann_ivf_topk": 534,
+    "embedding_neardup_pairs": 331,
+    "dedup_semantic_clusters": 451,
+    "emb_ivf_cell_balance": 169,
+    "ann_ivf_int8_topk": 673,
+    "ann_ivfpq_topk": 219,
+    "ann_recall_report": 940,
+    "embedding_neardup_adaptive": 339,
 }
 
 PROJ = "https://stac-extensions.github.io/projection/v1.1.0/schema.json"
@@ -112,3 +128,14 @@ def test_plan_build_py4j_budget(builds, name):
         build()
     # a count of 0 would mean the counter no longer sees py4j traffic
     assert 0 < n[0] <= BUDGETS[name], f"{name}: {n[0]} py4j calls, budget {BUDGETS[name]}"
+
+
+@pytest.mark.parametrize("name", sorted(QUERY_BUDGETS))
+def test_registry_build_py4j_budget(spark, sf_dir, name):
+    build = load_all()[name].spark_fn
+    build(spark, sf_dir)  # warm
+    with _py4j_calls() as n:
+        build(spark, sf_dir)
+    assert 0 < n[0] <= QUERY_BUDGETS[name], (
+        f"{name}: {n[0]} py4j calls, budget {QUERY_BUDGETS[name]}"
+    )

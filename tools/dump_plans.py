@@ -143,11 +143,11 @@ PICKS = [
     ),
     (
         "dedup_semantic_clusters",
-        "SemDeDup (r11): centroid scoring broadcasts the K-row centroid "
-        "table (BroadcastNestedLoopJoin BuildRight — embeddings stream "
-        "through it unshuffled); the per-vector argmax is a rank-1 window "
-        "whose WindowGroupLimit is pushed MAP-SIDE, so the one assignment "
-        "exchange carries ~1 row per vector, not K; the duplicate-pair "
+        "SemDeDup: centroid scoring crossJoins the one-row broadcast "
+        "centroid array (BroadcastNestedLoopJoin of one row — embeddings "
+        "stream through it unshuffled) and ranks every vector's centroids "
+        "in one map-side expression, so assignment adds no exchange; the "
+        "duplicate-pair "
         "search is a SortMergeJoin equi-join on cent_id (never all-pairs) "
         "ending in a distinct on vec_id. At 100 TB the assignment is a "
         "materialized cent_id-bucketed table (one-off k-means write), "
@@ -178,8 +178,8 @@ PICKS = [
     (
         "ann_ivf_kmeans_topk",
         "k-means IVF (r12 determinism + r13 bounded cells + r13 map-side "
-        "assign): centroid assignment is a ZERO-shuffle map-side argmax "
-        "fold over a plan-literal centroid array (the pre-r13 broadcast "
+        "assign): centroid assignment is a ZERO-shuffle map-side ranking "
+        "over a one-row broadcast centroid array (the pre-r13 broadcast "
         "crossJoin + row_number window pushed k× the corpus through an "
         "exchange — fatal at 100 TB where the full-corpus assign is the "
         "dominant pass); each Lloyd iteration then runs one row_number "
@@ -198,8 +198,8 @@ PICKS = [
         "2.15 s warm on 10× data, with fixed-K at 250 s). The coarse-"
         "quantizer table ships as a 1-row broadcast struct ARRAY "
         "(BroadcastNestedLoopJoin of one row — not a plan literal, so the "
-        "Catalyst tree stays flat at any K); assignment is the same "
-        "zero-shuffle map-side fold as the fixed path (no Window, no "
+        "Catalyst tree stays flat at any K); assignment is the one "
+        "zero-shuffle map-side ranking every IVF query uses (no Window, no "
         "corpus-keyed exchange); the pair join stays cent_id-blocked.",
     ),
     (
