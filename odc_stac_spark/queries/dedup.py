@@ -22,8 +22,9 @@ LSH output bit-for-bit.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
+from ..session import sql_literal
 from ..sources.tables import load_table
 from . import register, scoped_persist
 
@@ -240,58 +241,46 @@ def text_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_sig(sharr: DataFrame) -> DataFrame:
-    """(doc_id, m0..m15) MinHash signature — computed MAP-SIDE from the
-    per-doc shingle array via higher-order functions: a signature is a pure
-    per-document function, so it must cost zero shuffles (at 100 TB the
-    explode→groupBy formulation re-shuffles the entire shingle stream just
-    to put it back together).
-
-    ONE ``aggregate`` fold computes all 16 minima in a single pass: the
-    md5 shingle hash is evaluated once per shingle and the 16 affine
-    permutations fold off that value. The previous 16-×-``array_min``
-    form embedded 16 copies of the md5 transform (no CSE across HOF
-    lambdas) and measured 3× slower at sf1 — same results bit-for-bit."""
-    hs = F.transform(F.col("shingles"), lambda s: _hash32(s))
-    init = F.array(*[F.lit(MINHASH_P).cast("bigint") for _ in range(16)])
-    fold = F.aggregate(
-        hs,
-        init,
-        lambda acc, h: F.array(
-            *[
-                F.least(acc[j], (F.lit(MINHASH_A[j]) * h + F.lit(MINHASH_B[j])) % MINHASH_P)
-                for j in range(16)
-            ]
-        ),
+#: the 16 MinHash minima of a doc's ``shingles`` as one SQL ``aggregate``
+#: fold: each shingle's :func:`_hash32` is computed once, and the 16
+#: affine permutations fold off it
+_MINHASH_SQL = (
+    "aggregate(transform(shingles, s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)), "
+    f"array({', '.join([f'{MINHASH_P}L'] * 16)}), "
+    "(acc, h) -> array("
+    + ", ".join(
+        f"least(acc[{j}], ({a} * h + {b}) % {MINHASH_P})"
+        for j, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     )
-    return sharr.select("doc_id", fold.alias("ms")).select(
-        "doc_id", *[F.element_at("ms", j + 1).alias(f"m{j}") for j in range(16)]
+    + "))"
+)
+
+#: one (band_idx, bh) struct per LSH band: bh = md5 of the band's minima
+_BANDS_SQL = (
+    "inline(array("
+    + ", ".join(
+        f"named_struct('band_idx', {band}, 'bh', md5(concat_ws(',', "
+        + ", ".join(f"CAST(m{band * ROWS_PER_BAND + j} AS STRING)" for j in range(ROWS_PER_BAND))
+        + ")))"
+        for band in range(N_BANDS)
+    )
+    + "))"
+)
+
+
+def _minhash_sig(sharr: DataFrame) -> DataFrame:
+    """(doc_id, shingles) → (doc_id, m0..m15) MinHash signature, computed
+    map-side by one ``aggregate`` fold over the shingle array: a signature
+    is a pure per-document function, so it costs no shuffle. Stream-safe."""
+    return sharr.selectExpr("doc_id", f"{_MINHASH_SQL} AS ms").selectExpr(
+        "doc_id", *[f"ms[{j}] AS m{j}" for j in range(16)]
     )
 
 
 def minhash_bands(sig: DataFrame) -> DataFrame:
     """(doc_id, m0..m15) → (doc_id, band_idx, bh): the LSH bucket rows.
     Map-side (explode of a per-row array) — stream-safe."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band_idx"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"m{band * ROWS_PER_BAND + j}").cast("string")
-                            for j in range(ROWS_PER_BAND)
-                        ],
-                    )
-                ).alias("bh"),
-            )
-            for band in range(N_BANDS)
-        ]
-    )
-    return sig.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", F.col("b.band_idx").alias("band_idx"), F.col("b.bh").alias("bh")
-    )
+    return sig.selectExpr("doc_id", _BANDS_SQL)
 
 
 def _minhash_sig_sql() -> str:
@@ -366,8 +355,6 @@ def _lsh_verified_pairs(sharr: DataFrame) -> DataFrame:
     shared with the composed dedup_pipeline_e2e so the production chain
     runs the EXACT gated candidate generator. ``sharr`` should already
     be persisted (it feeds both the signature and the verify stage)."""
-    sig = _minhash_sig(sharr)
-    bands = minhash_bands(sig)
     # singleton-bucket skip: a (band, bh) bucket with one doc can't
     # produce a candidate pair (doc_a < doc_b needs two), and at corpus
     # scale MOST buckets are singletons — filtering them before the
@@ -376,13 +363,12 @@ def _lsh_verified_pairs(sharr: DataFrame) -> DataFrame:
     # persist: both sides of the bucket self-join read this — without the
     # cache the 16-min signature aggregation runs twice (verified: two
     # identical exchanges in the unpersisted plan)
-    bucket = Window.partitionBy("band_idx", "bh")
-    bands = (
-        bands.withColumn("bkt_n", F.count(F.lit(1)).over(bucket))
-        .where(F.col("bkt_n") >= 2)
+    bands = scoped_persist(
+        minhash_bands(_minhash_sig(sharr))
+        .selectExpr("*", "count(1) OVER (PARTITION BY band_idx, bh) AS bkt_n")
+        .where("bkt_n >= 2")
         .drop("bkt_n")
     )
-    bands = scoped_persist(bands)
     # hot-bucket salting (operators/skew.salted_join): a boilerplate-heavy
     # corpus can put thousands of docs in ONE (band, bh) bucket — the
     # pair join's quadratic work for that bucket lands on a single
@@ -393,15 +379,11 @@ def _lsh_verified_pairs(sharr: DataFrame) -> DataFrame:
     # in tests/test_scale_patterns.py).
     from ..operators.skew import salted_join
 
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), "band_idx", "bh"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"), "band_idx", "bh"
-    )
+    a = bands.selectExpr("doc_id AS doc_a", "band_idx", "bh")
+    b = bands.selectExpr("doc_id AS doc_b", "band_idx", "bh")
     cand = (
         salted_join(a, b, ["band_idx", "bh"], salt_on="doc_a", n_salt=8)
-        .where(F.col("doc_a") < F.col("doc_b"))
+        .where("doc_a < doc_b")
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -413,13 +395,15 @@ def _lsh_verified_pairs(sharr: DataFrame) -> DataFrame:
     # the old explode-join re-shuffled EVERY doc's shingles by value to
     # verify a handful of pairs; this shape's verify cost follows the
     # candidate count instead.
-    A = sharr.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    B = sharr.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    ver = cand.join(A, "doc_a").join(B, "doc_b")
-    shared = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = shared * 1.0 / (F.size("sh_a") + F.size("sh_b") - shared)
-    return ver.where(jac >= JACCARD_THRESHOLD).select(
-        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
+    A = sharr.selectExpr("doc_id AS doc_a", "shingles AS sh_a")
+    B = sharr.selectExpr("doc_id AS doc_b", "shingles AS sh_b")
+    shared = "size(array_intersect(sh_a, sh_b))"
+    jac = f"{shared} * 1.0D / (size(sh_a) + size(sh_b) - {shared})"
+    return (
+        cand.join(A, "doc_a")
+        .join(B, "doc_b")
+        .where(f"{jac} >= {sql_literal(JACCARD_THRESHOLD)}")
+        .selectExpr("doc_a", "doc_b", f"round({jac}, 4) AS jaccard")
     )
 
 

@@ -167,10 +167,16 @@ def cc_star_contraction(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
     # the star joins, the convergence diff) — without this, an expensive
     # upstream (the shingle self-join) would recompute on every
     # reference, every round (measured: 49 s → 2 s at sf0.1).
-    # eager=False (r17): the checkpoint RDD materializes (and caches)
-    # under the count() job below instead of a dedicated job — same
-    # blocks, one fewer job round trip (the bpe_train r16 lesson; each
-    # job costs ~0.1-0.5 s of scheduler floor on the composed pipeline)
+    # eager=False (r17): the checkpoint's own blocks are written under the
+    # count() job below instead of a dedicated job (the bpe_train r16
+    # lesson; each job costs ~0.1-0.5 s of scheduler floor on the composed
+    # pipeline). Under AQE this call still runs jobs: it takes the plan's
+    # RDD, which makes AQE run every upstream shuffle stage here, and only
+    # the last stage runs under count(). At sf0.01, 17 of
+    # dedup_pipeline_e2e's 20 build jobs run inside this call and 2 under
+    # count() (job groups around each call, 4 cores). The same cause
+    # puts the mutual-kNN queries' jobs in their build (CHANGES.md, the
+    # FOUND on emb_mutual_knn_cc).
     E = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).localCheckpoint(
         eager=False
     )

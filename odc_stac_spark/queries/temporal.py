@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StructType
 
 from ..session import literal_df
-from ..sources.tables import load_table, normalize_timestamps
+from ..sources.tables import load_table, normalize_timestamps, table_schema
 from . import register
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min in microseconds
@@ -123,8 +123,8 @@ def _stage_events_stream(spark: SparkSession, sf_dir: str, prefix: str) -> DataF
                 os.symlink(os.path.join(src, fn), os.path.join(stage, fn))
     else:
         os.symlink(src, os.path.join(stage, "events.parquet"))
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    return normalize_timestamps(spark.readStream.schema(raw_schema).parquet(stage))
+    schema = table_schema(spark, src)[0]
+    return normalize_timestamps(spark.readStream.schema(schema).parquet(stage), schema)
 
 
 @register(

@@ -89,7 +89,14 @@ def literal_df(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -
     # pyspark rebuilds a map of nested values without its null mask under
     # pyarrow < 17 (SPARK-48302), so a NULL map would read back as {}: a
     # top-level NULL map is restored from a null-flag column (the Project
-    # folds into the LocalRelation)
+    # folds into the LocalRelation); a NULL map below the top level is
+    # refused rather than read back as {}
+    for field, a in zip(schema.fields, arrays):
+        if _ARROW_DROPS_MAP_NULLS and _nested_null_map(a, 0, False):
+            raise ValueError(
+                f"literal_df: column {field.name!r} holds a NULL map inside a struct, "
+                f"array or map, which pyarrow {pa.__version__} would read back as {{}}"
+            )
     lost = [i for i, a in enumerate(arrays) if pa.types.is_map(a.type) and a.null_count]
     full = StructType(schema.fields + [StructField(f"_null{i}", BooleanType()) for i in lost])
     arrays += [arrays[i].is_null() for i in lost]
@@ -104,6 +111,30 @@ def literal_df(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -
             ]
         )
     return df.coalesce(1)
+
+
+#: pyspark's Arrow conversion drops a rebuilt map's null mask (SPARK-48302)
+_ARROW_DROPS_MAP_NULLS = int(pa.__version__.split(".")[0]) < 17
+
+
+def _nested_null_map(a: pa.Array, inherited: int, nested: bool) -> bool:
+    """Whether ``a`` holds, below its top level, a NULL map that pyspark's
+    Arrow conversion rebuilds (one with nested or timestamp keys or
+    values). ``inherited`` counts the nulls ``a`` takes from its parent
+    struct, which are not NULL maps of its own."""
+    t = a.type
+    if pa.types.is_struct(t):
+        return any(_nested_null_map(c, a.null_count, True) for c in a.flatten())
+    if pa.types.is_list(t):
+        return _nested_null_map(a.flatten(), 0, True)
+    if pa.types.is_map(t):
+        rebuilt = any(
+            pa.types.is_nested(x) or pa.types.is_timestamp(x) for x in (t.key_type, t.item_type)
+        )
+        if nested and rebuilt and a.null_count > inherited:
+            return True
+        return _nested_null_map(a.keys, 0, True) or _nested_null_map(a.items, 0, True)
+    return False
 
 
 def sql_literal(v) -> str:

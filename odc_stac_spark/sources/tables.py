@@ -6,14 +6,25 @@ declarative (check ``PushedFilters`` / ``ReadSchema`` in ``.explain``).
 At 100 TB the same code path works unchanged: the scan parallelizes by
 row-group, `maxPartitionBytes` controls split size, and partition-directory
 layouts (e.g. date-partitioned `events`) add partition pruning on top.
+
+Schemas are memoized: inferring a parquet schema is a Spark job (it reads
+the footers), so :func:`load_table` infers each file once and later reads
+name that schema (``spark.read.load(path, format="parquet", schema=s)``),
+which runs no job. The memo is keyed by the file's identity: its absolute
+path, ``st_mtime_ns`` and ``st_size``, and for a table directory the same
+of every file below it. A table rewritten in place is therefore inferred
+again. The memo holds 256 entries and is not released with the query
+caches (see :func:`table_schema`).
 """
 
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -48,8 +59,61 @@ _UTC_ZONES = frozenset(
 )
 
 
+#: inferred schemas held by :func:`table_schema`, least recently used first
+_SCHEMAS: "OrderedDict[tuple, tuple[StructType, str]]" = OrderedDict()
+_SCHEMAS_MAX = 256
+
+
+def _file_identity(path: str) -> tuple:
+    """``path`` as a memo key: its absolute path, ``st_mtime_ns`` and
+    ``st_size``, and for a directory (a Spark-written table) the sorted
+    ``(relative name, st_mtime_ns, st_size)`` of every file below it."""
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    parts = []
+    if os.path.isdir(path):
+        for d, _, files in os.walk(path):
+            for f in files:
+                fst = os.stat(os.path.join(d, f))
+                rel = os.path.relpath(os.path.join(d, f), path)
+                parts.append((rel, fst.st_mtime_ns, fst.st_size))
+    return (path, st.st_mtime_ns, st.st_size, tuple(sorted(parts)))
+
+
+def table_schema(spark: SparkSession, path: str) -> tuple[StructType, str]:
+    """The schema Spark infers for the parquet table at ``path`` with
+    ``spark.sql.legacy.parquet.nanosAsLong`` set (see :func:`load_table`),
+    as a ``StructType`` and as Spark's own DDL text of it, inferred once
+    per file identity.
+
+    The memo is keyed by :func:`_file_identity`, so rewriting the file (or
+    any file of a table directory) changes the key and the next call infers
+    again; an untouched table returns the same objects. It holds the last
+    256 identities. It is catalog metadata, not query results, so
+    ``queries.release_caches`` leaves it alone."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    key = _file_identity(path)
+    hit = _SCHEMAS.get(key)
+    if hit is None:
+        df = spark.read.parquet(path)
+        hit = _SCHEMAS[key] = (df.schema, df._jdf.schema().toDDL())
+        if len(_SCHEMAS) > _SCHEMAS_MAX:
+            _SCHEMAS.popitem(last=False)
+    else:
+        _SCHEMAS.move_to_end(key)
+    return hit
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic fixture table, normalizing timestamp encodings.
+
+    The read names the table's schema (``spark.read.load(path,
+    format="parquet", schema=s)``), taken from :func:`table_schema`:
+    the first call per file runs Spark's schema-inference job, later calls
+    run no job until the file changes. ``s`` is Spark's DDL text of the
+    inferred ``StructType``, and :func:`normalize_timestamps` reads the
+    memoized ``StructType`` instead of asking the new DataFrame, so a call
+    makes no more py4j round trips than an inferring read did.
 
     .. warning:: **Session side effect.** This sets one runtime conf on the
        *caller's* session and leaves it set:
@@ -77,14 +141,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_timestamps(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema, ddl = table_schema(spark, path)
+    return normalize_timestamps(spark.read.load(path, format="parquet", schema=ddl), schema)
 
 
-def normalize_timestamps(df: DataFrame) -> DataFrame:
-    """``df`` (a batch or streaming read of a fixture table) with each
-    :data:`TIMESTAMP_COLUMNS` column as a UTC-instant TIMESTAMP, whichever
-    encoding the fixture generation wrote (see :func:`load_table`)."""
+def normalize_timestamps(df: DataFrame, schema: StructType) -> DataFrame:
+    """``df`` (a batch or streaming read of a fixture table with the
+    :func:`table_schema` ``schema``) with each :data:`TIMESTAMP_COLUMNS`
+    column as a UTC-instant TIMESTAMP, whichever encoding the fixture
+    generation wrote (see :func:`load_table`)."""
     # Fixture generations differ in how events.ts is written:
     #   (a) TIMESTAMP(NANOS) — arrives as bigint under nanosAsLong;
     #   (b) TIMESTAMP(MICROS, isAdjustedToUTC=false) — arrives as
@@ -92,7 +158,7 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
     #       to_utc_timestamp) reject.
     # Normalize both to a UTC-instant TIMESTAMP so every downstream query
     # sees one type.
-    for field in df.schema.fields:
+    for field in schema.fields:
         if field.name not in TIMESTAMP_COLUMNS:
             continue
         kind = field.dataType.simpleString()

@@ -3,11 +3,11 @@
 Building a DataFrame in PySpark costs one py4j CALL command per JVM
 method the Python side invokes, so a plan assembled from Column objects
 pays thousands of round trips before Spark runs anything. The STAC
-metadata plane, the catalog planner and the IVF family's centroid
-assignment are written as SQL text to keep that cost small; these
-budgets pin it. Each budget is the count the current code makes, on a
-fixed 6-item catalog or for a registry query at the ``sf_dir`` fixture,
-and may only go down.
+metadata plane, the catalog planner, the IVF family's centroid
+assignment and the MinHash-LSH chain are written as SQL text to keep
+that cost small; these budgets pin it. Each budget is the count the
+current code makes, on a fixed 6-item catalog or for a registry query at
+the ``sf_dir`` fixture, and may only go down.
 
 Only CALL commands (``c\\n...``) count: py4j's garbage-collection
 commands (``m\\nd\\n...``) depend on when Python frees its proxies."""
@@ -43,6 +43,9 @@ QUERY_BUDGETS = {
     "ann_ivfpq_topk": 219,
     "ann_recall_report": 940,
     "embedding_neardup_adaptive": 339,
+    "dedup_minhash_lsh": 262,
+    "dedup_pipeline_e2e": 527,
+    "q5_local_supplier_volume": 241,
 }
 
 PROJ = "https://stac-extensions.github.io/projection/v1.1.0/schema.json"

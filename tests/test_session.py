@@ -9,7 +9,9 @@ import sys
 import textwrap
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     IntegerType,
     LongType,
@@ -20,7 +22,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from odc_stac_spark.session import literal_df, sql_in, sql_literal
+from odc_stac_spark.session import _ARROW_DROPS_MAP_NULLS, literal_df, sql_in, sql_literal
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -98,6 +100,37 @@ def test_literal_df_keeps_null_maps(spark):
     plan = _plan(df)
     assert "LocalTableScan" in plan and "Project" not in plan, plan
     assert df.rdd.getNumPartitions() == 1
+
+
+def test_literal_df_nested_null_maps(spark):
+    """A NULL map inside a struct or an array cannot be built under a
+    pyarrow that reads it back as an empty map: ``literal_df`` raises
+    naming the column. A NULL struct around a map and a NULL map of plain
+    strings inside a struct still read back as NULL."""
+    inner = MapType(StringType(), StructType([StructField("a", IntegerType())]))
+    key = StructField("k", LongType())
+    in_struct = StructType([key, StructField("s", StructType([StructField("m", inner)]))])
+    in_array = StructType([key, StructField("l", ArrayType(inner))])
+    cases = [
+        (in_struct, [(0, {"m": None}), (1, {"m": {}})], "s"),
+        (in_array, [(0, [{}, None])], "l"),
+    ]
+    for schema, rows, col in cases:
+        if _ARROW_DROPS_MAP_NULLS:
+            with pytest.raises(ValueError, match=repr(col)):
+                literal_df(spark, rows, schema)
+        else:
+            got = literal_df(spark, rows, schema).orderBy("k").collect()
+            assert [r.asDict(recursive=True)[col] for r in got] == [r[1] for r in rows]
+    plain_map = StructType([StructField("m", MapType(StringType(), StringType()))])
+    plain = StructType([key, StructField("s", plain_map)])
+    ok = [
+        (in_struct, [(0, None), (1, {"m": {"x": {"a": 1}}})]),
+        (plain, [(0, {"m": None}), (1, {"m": {}})]),
+    ]
+    for schema, rows in ok:
+        got = literal_df(spark, rows, schema).orderBy("k").collect()
+        assert [r.asDict(recursive=True)["s"] for r in got] == [r[1] for r in rows]
 
 
 def test_python_workers_import_package_from_any_cwd(tmp_path):

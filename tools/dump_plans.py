@@ -3,6 +3,11 @@
 queries, with the scale-relevant features called out. Run from repo root:
 
     python tools/dump_plans.py > PLANS.md
+
+Each query runs once through its own query execution, and the section
+holds that execution's final adaptive plan (``sweep.final_plan``, the
+helper ``tools/sweep.py --plans`` uses), so runtime re-plans such as
+broadcast conversion and partition coalescing show.
 """
 
 from __future__ import annotations
@@ -15,6 +20,7 @@ sys.path.insert(0, REPO)
 
 from odc_stac_spark import get_spark  # noqa: E402
 from odc_stac_spark.queries import load_all  # noqa: E402
+from sweep import final_plan  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -367,10 +373,7 @@ def main() -> None:
     print("Annotations call out the scale-relevant plan features the judge")
     print("should be able to confirm directly in the output below.")
     for name, note in PICKS:
-        df = registry[name].spark_fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = final_plan(registry[name].spark_fn(spark, SF_DIR))
         print()
         print(f"## {name}")
         print()
