@@ -48,37 +48,54 @@ REGISTRY: dict[str, Query] = {}
 # the same query included: a timed re-run of a query recomputes what it
 # persists instead of reading its previous run's blocks, so best-of-N
 # times the query, not the stages above its caches. Unpersist is always
-# safe for correctness (worst case: recompute).
+# safe for correctness (worst case: recompute). scoped_tempdir() gives a
+# work directory (a stream's sink or checkpoint) the same lifetime, so a
+# result may read it lazily until the next registry query is entered.
 #
 # Concurrency note (ADVICE r12): the registry assumes SEQUENTIAL query
 # execution on a session — the lifecycle "release the previous query's
 # caches on next entry" is only well-defined with one query in flight.
-# The lock below keeps the list operations themselves race-free (so
-# concurrent use degrades to spurious recomputes, never corruption),
-# but interleaved queries on one session will still unpersist each
-# other's live caches; run the registry sequentially.
+# The lock below keeps the list operations themselves race-free, but
+# interleaved queries on one session will still unpersist each other's
+# live caches and remove each other's work directories; run the registry
+# sequentially.
+import tempfile as _tempfile
 import threading as _threading
 
 _SCOPED_LOCK = _threading.Lock()
-_SCOPED_CACHES: list = []
+_SCOPED_RELEASES: list = []  # callables that release_caches() runs once
+
+
+def _scope(release: Callable[[], None]) -> None:
+    with _SCOPED_LOCK:
+        _SCOPED_RELEASES.append(release)
 
 
 def scoped_persist(df: DataFrame) -> DataFrame:
     """persist() with registry-query lifetime (released by release_caches,
     which the registry wrapper calls whenever a query is entered)."""
     df = df.persist()
-    with _SCOPED_LOCK:
-        _SCOPED_CACHES.append(df)
+    _scope(df.unpersist)
     return df
 
 
+def scoped_tempdir(prefix: str) -> str:
+    """A new empty directory under ``tempfile.gettempdir()`` with
+    registry-query lifetime: release_caches removes it with everything
+    written below it."""
+    d = _tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True)
+    _scope(d.cleanup)
+    return d.name
+
+
 def release_caches() -> None:
-    """Unpersist every scoped cache registered since the last call."""
+    """Unpersist every scoped cache and remove every scoped directory
+    registered since the last call."""
     with _SCOPED_LOCK:
-        drained, _SCOPED_CACHES[:] = list(_SCOPED_CACHES), []
-    for df in drained:
+        drained, _SCOPED_RELEASES[:] = list(_SCOPED_RELEASES), []
+    for release in drained:
         try:
-            df.unpersist()
+            release()
         except Exception:  # noqa: BLE001 - session may already be stopped
             pass
 

@@ -2279,22 +2279,15 @@ def _key_skew_from_perkey(spark, perkey: DataFrame) -> DataFrame:
     tags=("analytics", "streaming", "quality", "scale"),
 )
 def t_stream_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import scoped_persist
-    from .temporal import _run_stream, _stage_events_stream
+    from ..streaming.events import stream_events
+    from .temporal import _stream_to_table
 
-    name = "t_stream_key_skew_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = _stage_events_stream(spark, sf_dir, "events_skew_stream_")
-    counts = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-    _run_stream(spark, (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    ))
-    perkey = spark.table(name).groupBy("user_id").agg(F.max("c").alias("c"))
+    counts = stream_events(spark, sf_dir).groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
+    perkey = (
+        _stream_to_table(spark, "t_stream_key_skew_sink", counts, "update")
+        .groupBy("user_id")
+        .agg(F.max("c").alias("c"))
+    )
     return _key_skew_from_perkey(spark, perkey)
 
 

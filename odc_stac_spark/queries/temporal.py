@@ -9,7 +9,6 @@ the reference's lazy iterator pipeline (_mdtools.py:705-723).
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 import pyspark.sql.functions as F
@@ -17,8 +16,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StructType
 
 from ..session import literal_df
-from ..sources.tables import load_table, normalize_timestamps, table_schema
-from . import register
+from ..sources.tables import load_table
+from ..streaming.continuous import continuous_aggregate, read_continuous
+from ..streaming.events import (
+    stream_click_attribution,
+    stream_events,
+    stream_tumbling_counts,
+)
+from . import register, scoped_persist, scoped_tempdir
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min in microseconds
 
@@ -43,88 +48,62 @@ def _await_stream(q, timeout: int = 1800) -> None:
         raise q.exception()
 
 
-# Streaming state partitions for the gated availableNow streams. The
-# round-14 time sweep showed the t_stream_* family walls dominated by
-# state-store machinery, not data: every micro-batch commits one state
-# delta + checkpoint file PER STATE PARTITION, so a 32-partition session
-# pays 32 commits/batch to maintain kilobytes of state. The partition
-# count is fixed at query start from spark.sql.shuffle.partitions and
-# results are partition-count independent (the hash gates have passed at
-# both 8 and 32), so the stream runner pins it low for the stream's
-# lifetime and restores the session value after. At real scale an
-# operator sizes this to state volume / executor count — the point is
-# it's a STREAM-level knob, not the session's batch-shuffle width.
-STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
-# Optional state-store provider override (e.g. org.apache.spark.sql.
-# execution.streaming.state.RocksDBStateStoreProvider). The r15 cost
-# pass measured RocksDB vs the default HDFS-backed provider at this
-# state scale (kilobytes/partition) — see COVERAGE.md; default stays
-# the HDFS-backed store, the env knob exists for A/B and for real
-# deployments whose state exceeds executor heap.
-STREAM_STATE_PROVIDER = os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER", "")
+# Streaming state partitions. The round-14 time sweep showed the
+# t_stream_* family walls dominated by state-store machinery, not data:
+# every micro-batch commits one state delta + checkpoint file PER STATE
+# PARTITION, so a 32-partition session pays 32 commits/batch to maintain
+# kilobytes of state. The partition count is fixed at query start from
+# spark.sql.shuffle.partitions and results are partition-count
+# independent (the hash gates have passed at both 8 and 32), so the
+# stream runner pins it for the stream's lifetime and restores the
+# session value after. 1 partition measured 40% slower on
+# t_stream_cms_freq (VERDICT r17). At real scale an operator sizes this
+# to state volume / executor count — it is a STREAM-level setting, not
+# the session's batch-shuffle width.
+STREAM_SHUFFLE_PARTITIONS = 4
 
 
 @contextmanager
 def _stream_conf(spark):
-    """Session conf pinned for a stream's lifetime (see
-    STREAM_SHUFFLE_PARTITIONS / STREAM_STATE_PROVIDER); restores the
-    batch values on exit."""
+    """spark.sql.shuffle.partitions pinned to STREAM_SHUFFLE_PARTITIONS
+    for a stream's lifetime; the batch value is restored on exit."""
     key = "spark.sql.shuffle.partitions"
-    pkey = "spark.sql.streaming.stateStore.providerClass"
     old = spark.conf.get(key)
-    old_p = spark.conf.get(pkey, None)
     spark.conf.set(key, str(STREAM_SHUFFLE_PARTITIONS))
-    if STREAM_STATE_PROVIDER:
-        spark.conf.set(pkey, STREAM_STATE_PROVIDER)
     try:
         yield
     finally:
         spark.conf.set(key, old)
-        if STREAM_STATE_PROVIDER:
-            if old_p is None:
-                spark.conf.unset(pkey)
-            else:
-                spark.conf.set(pkey, old_p)
 
 
-def _run_stream(spark, writer, timeout: int = 1800):
-    """Start ``writer`` (a DataStreamWriter) with streaming-tuned session
-    conf and await termination (loudly, via _await_stream). Returns the
-    terminated query handle."""
+def _run_stream(spark: SparkSession, name: str, writer) -> None:
+    """Run ``writer`` (a DataStreamWriter) as the availableNow query
+    ``name`` under _stream_conf and wait for it through _await_stream,
+    first stopping a still-active query of that name."""
+    for q in spark.streams.active:
+        if q.name == name:
+            q.stop()
     with _stream_conf(spark):
-        q = writer.start()
-        _await_stream(q, timeout)
-        return q
+        _await_stream(writer.queryName(name).trigger(availableNow=True).start())
 
 
-def _stage_events_stream(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
-    """events.parquet as a file-source stream with ``ts`` normalized to TIMESTAMP.
+def _stream_to_table(spark: SparkSession, name: str, df: DataFrame, mode: str) -> DataFrame:
+    """Run the streaming ``df`` to completion into the memory table
+    ``name`` with output ``mode`` and return that table."""
+    _run_stream(spark, name, df.writeStream.format("memory").outputMode(mode))
+    return spark.table(name)
 
-    Fixture generations differ in how ``events.ts`` is written (see
-    sources/tables.py): TIMESTAMP(NANOS) arrives as bigint under
-    ``nanosAsLong``; TIMESTAMP(MICROS, isAdjustedToUTC=false) arrives as
-    TIMESTAMP_NTZ, which watermarks reject. ``normalize_timestamps``, the
-    batch path's own normalization, turns both into a UTC-instant TIMESTAMP
-    so the streaming expressions match the batch path.
-    """
-    import os
-    import tempfile
 
-    stage = tempfile.mkdtemp(prefix=prefix)
-    src = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(src):
-        # Spark-written table (a DIRECTORY of part files — the sf1 scale
-        # replica's layout): the file-source stream does not descend into
-        # a nested dir, so link each part file into the stage root (a dir
-        # symlink streams ZERO files and the query silently terminates
-        # with an empty result — found by the r13 10× scale probe).
-        for fn in sorted(os.listdir(src)):
-            if fn.endswith(".parquet"):
-                os.symlink(os.path.join(src, fn), os.path.join(stage, fn))
-    else:
-        os.symlink(src, os.path.join(stage, "events.parquet"))
-    schema = table_schema(spark, src)[0]
-    return normalize_timestamps(spark.readStream.schema(schema).parquet(stage), schema)
+def _hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The continuous aggregate (streaming/continuous.py) maintained from
+    the events stream to completion: ``(bucket, event_type, n,
+    value_sum)``, one row per (hour, event_type), read from a work
+    directory that lives until the next registry query is entered."""
+    work = scoped_tempdir("hourly_rollup_")
+    stream = stream_events(spark, sf_dir).select("ts", "event_type", "value")
+    with _stream_conf(spark):
+        _await_stream(continuous_aggregate(spark, stream, f"{work}/agg", f"{work}/ckpt"))
+    return read_continuous(spark, f"{work}/agg")
 
 
 @register(
@@ -253,31 +232,13 @@ def t_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "streaming"),
 )
 def t_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = "t_stream_tumbling_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = _stage_events_stream(spark, sf_dir, "events_stream_")
-    agg = (
-        stream.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            "event_type",
-            "n_events",
-        )
+    agg = stream_tumbling_counts(stream_events(spark, sf_dir)).select(
+        F.unix_micros("window_start").alias("window_start_us"), "event_type", "n_events"
     )
-    _run_stream(spark, (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    ))
     # update-mode table holds every state update; counts are monotone so
     # the final value per key is the max
     return (
-        spark.table(name)
+        _stream_to_table(spark, "t_stream_tumbling_sink", agg, "update")
         .groupBy("window_start_us", "event_type")
         .agg(F.max("n_events").alias("n_events"))
     )
@@ -301,21 +262,8 @@ def t_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "streaming", "join"),
 )
 def t_stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import stream_click_attribution
-
-    name = "t_stream_attr_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = _stage_events_stream(spark, sf_dir, "events_attr_")
-    out = stream_click_attribution(stream)
-    _run_stream(spark, (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    ))
-    return spark.table(name).select(
+    out = stream_click_attribution(stream_events(spark, sf_dir))
+    return _stream_to_table(spark, "t_stream_attr_sink", out, "append").select(
         "click_id", "purchase_id", "user_id", F.round("amount", 2).alias("amount")
     )
 
@@ -371,32 +319,12 @@ def t_asof_last_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "streaming", "continuous-aggregate"),
 )
 def t_stream_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..streaming.continuous import continuous_aggregate, read_continuous
-
-    work = tempfile.mkdtemp(prefix="cagg_")
-    stream = _stage_events_stream(spark, sf_dir, "cagg_events_").select(
-        "ts", "event_type", "value"
+    return _hourly_rollup(spark, sf_dir).select(
+        F.unix_micros("bucket").alias("bucket_us"),
+        "event_type",
+        F.col("n").cast("bigint").alias("n"),
+        F.round("value_sum", 4).alias("value_sum"),
     )
-    with _stream_conf(spark):
-        q = continuous_aggregate(
-            spark, stream, f"{work}/agg", f"{work}/ckpt"
-        )
-        _await_stream(q)
-    out = (
-        read_continuous(spark, f"{work}/agg")
-        .select(
-            F.unix_micros("bucket").alias("bucket_us"),
-            "event_type",
-            F.col("n").cast("bigint").alias("n"),
-            F.round("value_sum", 4).alias("value_sum"),
-        )
-        .localCheckpoint()  # materialize before the workdir is removed
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 def _cms_oracle() -> str:
@@ -426,10 +354,6 @@ def _cms_oracle() -> str:
 def t_stream_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .analytics import CMS_P, CMS_ROWS, CMS_W
 
-    name = "t_stream_cms_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     hp = (
         F.conv(
             F.substring(
@@ -459,7 +383,7 @@ def t_stream_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c"),
         ).select(*df.columns, F.col("c.i").alias("i"), F.col("c.bucket").alias("bucket"))
 
-    stream = _stage_events_stream(spark, sf_dir, "events_cms_").select("ts", "user_id")
+    stream = stream_events(spark, sf_dir).select("ts", "user_id")
     win_sketch = (
         cells(stream)
         .withWatermark("ts", "1 day")
@@ -467,17 +391,11 @@ def t_stream_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.unix_micros(F.col("w.start")).alias("w_us"), "i", "bucket", "n")
     )
-    _run_stream(spark, (
-        win_sketch.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    ))
     # update-mode sink holds every state revision; counts are monotone per
     # (window, cell) so the final value is the max — then the hourly
     # sketches MERGE by cell addition into the global grid
     merged = (
-        spark.table(name)
+        _stream_to_table(spark, "t_stream_cms_sink", win_sketch, "update")
         .groupBy("w_us", "i", "bucket")
         .agg(F.max("n").alias("n"))
         .groupBy("i", "bucket")
@@ -657,8 +575,6 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("h")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    from . import scoped_persist
-
     hourly = scoped_persist(hourly)
     prof = hourly.groupBy("event_type", F.hour("h").alias("hod")).agg(
         F.avg("n").alias("mu"), F.stddev_pop("n").alias("sd")
@@ -708,24 +624,9 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "streaming", "anomaly"),
 )
 def t_stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil  # noqa: F401  (parity with t_stream_continuous_agg's imports)
-    import tempfile
-
-    from ..streaming.continuous import continuous_aggregate, read_continuous
-
-    work = tempfile.mkdtemp(prefix="canom_")
-    stream = _stage_events_stream(spark, sf_dir, "canom_events_").select(
-        "ts", "event_type", "value"
+    hourly = scoped_persist(
+        _hourly_rollup(spark, sf_dir).select("event_type", F.col("bucket").alias("h"), "n")
     )
-    with _stream_conf(spark):
-        q = continuous_aggregate(spark, stream, f"{work}/agg", f"{work}/ckpt")
-        _await_stream(q)
-    hourly = read_continuous(spark, f"{work}/agg").select(
-        "event_type", F.col("bucket").alias("h"), "n"
-    )
-    from . import scoped_persist
-
-    hourly = scoped_persist(hourly)
     prof = hourly.groupBy("event_type", F.hour("h").alias("hod")).agg(
         F.avg("n").alias("mu"), F.stddev_pop("n").alias("sd")
     )
@@ -818,21 +719,8 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "streaming"),
 )
 def t_stream_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..streaming.continuous import continuous_aggregate, read_continuous
-
-    work = tempfile.mkdtemp(prefix="cgap_")
-    stream = _stage_events_stream(spark, sf_dir, "cgap_events_").select(
-        "ts", "event_type", "value"
-    )
-    with _stream_conf(spark):
-        q = continuous_aggregate(spark, stream, f"{work}/agg", f"{work}/ckpt")
-        _await_stream(q)
-    from . import scoped_persist
-
     hourly = scoped_persist(
-        read_continuous(spark, f"{work}/agg").select(
+        _hourly_rollup(spark, sf_dir).select(
             "event_type",
             F.col("bucket").alias("h"),
             "n",
@@ -997,8 +885,6 @@ def ts_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    from . import scoped_persist
-
     ud = scoped_persist(
         ev.select(F.date_trunc("day", "ts").alias("d"), "user_id").distinct()
     )
@@ -1135,13 +1021,9 @@ def ab_test_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "streaming", "window"),
 )
 def t_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = "t_stream_sess_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = _stage_events_stream(spark, sf_dir, "sess_events_")
     out = (
-        stream.withWatermark("ts", "1 hour")
+        stream_events(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -1155,13 +1037,7 @@ def t_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the trailing <gap+delay> of history would never emit in a bounded
     # replay — complete mode emits the full maintained session state,
     # which for availableNow equals the batch session set exactly
-    _run_stream(spark, (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-    ))
-    return spark.table(name)
+    return _stream_to_table(spark, "t_stream_sess_sink", out, "complete")
 
 
 @register(
@@ -1327,8 +1203,6 @@ def ts_linear_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "analytics"),
 )
 def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import scoped_persist
-
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
@@ -1403,25 +1277,15 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "streaming", "dedup"),
 )
 def t_stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = "t_stream_exact_dedup_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = _stage_events_stream(spark, sf_dir, "events_dedup_stream_")
     keys = (
-        stream.withColumn("m", F.date_trunc("minute", "ts"))
+        stream_events(spark, sf_dir)
+        .withColumn("m", F.date_trunc("minute", "ts"))
         .withWatermark("m", "30 minutes")
         .dropDuplicates(["user_id", "event_type", "m"])
         .select("user_id", "event_type", "m")
     )
-    _run_stream(spark, (
-        keys.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    ))
     return (
-        spark.table(name)
+        _stream_to_table(spark, "t_stream_exact_dedup_sink", keys, "append")
         .groupBy("event_type", F.unix_micros(F.date_trunc("hour", "m")).alias("hour_us"))
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
@@ -1522,13 +1386,9 @@ def events_latency_p95_sli(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "streaming", "sli"),
 )
 def t_stream_latency_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = "t_stream_latency_p95_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = _stage_events_stream(spark, sf_dir, "events_lat_stream_")
     hist = (
-        stream.where(F.col("event_type") == "view")
+        stream_events(spark, sf_dir)
+        .where(F.col("event_type") == "view")
         .withWatermark("ts", "30 minutes")
         .groupBy(
             F.window("ts", "1 hour").alias("w"),
@@ -1539,14 +1399,8 @@ def t_stream_latency_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros(F.col("w.start")).alias("hour_us"), "bucket", "cnt"
         )
     )
-    _run_stream(spark, (
-        hist.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    ))
     final = (
-        spark.table(name)
+        _stream_to_table(spark, "t_stream_latency_p95_sink", hist, "update")
         .groupBy("hour_us", "bucket")
         .agg(F.max("cnt").alias("cnt"))
     )
@@ -1608,8 +1462,6 @@ ANOM_MAD_K = 3.5  # |robust z| threshold (modified z-score, Iglewicz-Hoaglin)
     tags=("temporal", "anomaly"),
 )
 def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import scoped_persist
-
     ev = load_table(spark, sf_dir, "events")
     hourly = scoped_persist(
         ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("h")).agg(
@@ -1827,15 +1679,9 @@ def events_bot_detection_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "streaming", "quality"),
 )
 def t_stream_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    name = "t_stream_bot_detection_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = _stage_events_stream(spark, sf_dir, "events_bot_stream_")
     per_min = (
-        stream.withWatermark("ts", "30 minutes")
+        stream_events(spark, sf_dir)
+        .withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 minute").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("nm"))
         .select(
@@ -1851,17 +1697,16 @@ def t_stream_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sink executor-side and the downstream reduction distributed
     # (the r15 streaming cost pass measured the memory-sink collect as
     # this query's actual wall, not the state store)
-    work = tempfile.mkdtemp(prefix="bot_sink_")
+    work = scoped_tempdir("bot_sink_")
 
     def _sink(batch_df, _bid):
         batch_df.write.mode("append").parquet(work)
 
-    _run_stream(spark, (
-        per_min.writeStream.foreachBatch(_sink)
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    ))
+    _run_stream(
+        spark,
+        "t_stream_bot_detection_sink",
+        per_min.writeStream.foreachBatch(_sink).outputMode("update"),
+    )
     final = (
         spark.read.parquet(work)
         .groupBy("user_id", "m")
@@ -1969,37 +1814,22 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "streaming"),
 )
 def t_stream_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name_first = "t_stream_nvr_firsts_sink"
-    name_daily = "t_stream_nvr_daily_sink"
-    for q in spark.streams.active:
-        if q.name in (name_first, name_daily):
-            q.stop()
-    stream = _stage_events_stream(spark, sf_dir, "events_nvr_stream_")
-    days = stream.select(
+    days = stream_events(spark, sf_dir).select(
         "user_id", F.date_trunc("day", "ts").alias("d"), "ts"
     )
-    _run_stream(spark, (
-        days.groupBy("user_id")
-        .agg(F.min("d").alias("first_day"))
-        .writeStream.format("memory")
-        .queryName(name_first)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-    ))
-    _run_stream(spark, (
+    first_day = days.groupBy("user_id").agg(F.min("d").alias("first_day"))
+    firsts = (
+        _stream_to_table(spark, "t_stream_nvr_firsts_sink", first_day, "complete")
+        .groupBy("user_id")
+        .agg(F.min("first_day").alias("first_day"))
+    )
+    presence = (
         days.withWatermark("ts", "30 minutes")
         .groupBy("d", "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.format("memory")
-        .queryName(name_daily)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    ))
-    firsts = spark.table(name_first).groupBy("user_id").agg(
-        F.min("first_day").alias("first_day")
     )
     daily = (
-        spark.table(name_daily)
+        _stream_to_table(spark, "t_stream_nvr_daily_sink", presence, "update")
         .select("d", "user_id")
         .distinct()
         .join(firsts, "user_id")
@@ -2080,8 +1910,6 @@ def events_distribution_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("ts") >= F.col("mid_us")).cast("int").alias("half"),
         F.floor(F.col("value") / DRIFT_W).alias("bucket"),
     )
-    from . import scoped_persist
-
     hist = scoped_persist(
         base.groupBy("event_type", "half", "bucket").agg(
             F.count(F.lit(1)).alias("n")
@@ -2314,8 +2142,6 @@ def events_retention_day_n_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     activity = ev.select(
         F.col("user_id").alias("au"), F.date_trunc("day", "ts").alias("d")
     ).distinct()
-    from . import scoped_persist
-
     firsts = scoped_persist(firsts)
     activity = scoped_persist(activity)
     cohort = firsts.agg(F.count(F.lit(1)).alias("n_users"))
@@ -2444,8 +2270,6 @@ def events_user_activity_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def events_type_cooccurrence_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    from . import scoped_persist
-
     ud = scoped_persist(
         ev.select(
             "user_id", F.date_trunc("day", "ts").alias("d"), "event_type"

@@ -156,20 +156,11 @@ def make_batch_processor(spark: SparkSession, agg_path: str):
     return process
 
 
-def continuous_aggregate(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    agg_path: str,
-    checkpoint: str,
-    trigger_available_now: bool = True,
-):
-    """Maintain the hourly rollup incrementally from an event stream."""
-    writer = events_stream.writeStream.foreachBatch(
-        make_batch_processor(spark, agg_path)
-    ).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def continuous_aggregate(spark: SparkSession, events_stream: DataFrame, agg_path: str, checkpoint: str):
+    """Maintain the hourly rollup incrementally from an event stream:
+    starts and returns an availableNow query over what has arrived."""
+    writer = events_stream.writeStream.foreachBatch(make_batch_processor(spark, agg_path))
+    return writer.option("checkpointLocation", checkpoint).trigger(availableNow=True).start()
 
 
 def read_continuous(spark: SparkSession, agg_path: str) -> DataFrame:

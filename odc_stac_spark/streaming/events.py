@@ -5,8 +5,9 @@ The reference is stream-shaped but not streaming: ``parse_items`` /
 evolving state (_mdtools.py:705-723, :482-617). Here that becomes real
 Structured Streaming:
 
-- ``stream_events``: file-source stream over an events directory —
-  at scale this is the same code over Kafka/Kinesis (swap ``format``).
+- ``stream_events``: the fixture's events table as a file-source stream
+  with the batch path's schema and timestamp normalization — at scale
+  this is the same code over Kafka/Kinesis (swap ``format``).
 - ``stream_tumbling_counts``: the SAME window expressions as the batch
   query ``t_tumbling_window`` (queries/temporal.py) under a watermark —
   batch/stream parity on one expression set.
@@ -23,6 +24,7 @@ asserted in tests/test_streaming.py).
 
 from __future__ import annotations
 
+import os
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -31,28 +33,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
 
-EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", StringType()),
-        StructField("props", StringType()),
-    ]
-)
+from ..sources.tables import normalize_timestamps, table_schema
 
 
-def stream_events(spark: SparkSession, input_dir: str, schema=EVENTS_SCHEMA) -> DataFrame:
-    """File-source stream: picks up parquet files dropped into input_dir."""
-    return spark.readStream.schema(schema).parquet(input_dir)
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table of ``sf_dir`` as a file-source stream whose rows
+    equal ``load_table``'s: the same schema (``table_schema``) and the same
+    ``ts`` normalization (``normalize_timestamps``). A Spark-written table
+    streams as its directory of part files; a single-file table streams
+    from ``sf_dir`` filtered to its name, as the file source reads only
+    directories (a file path fails: "'basePath' must be a directory")."""
+    src = os.path.join(sf_dir, "events.parquet")
+    schema = table_schema(spark, src)[0]
+    reader = spark.readStream.schema(schema)
+    if os.path.isdir(src):
+        stream = reader.parquet(src)
+    else:
+        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    return normalize_timestamps(stream, schema)
 
 
 def stream_tumbling_counts(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
@@ -104,7 +108,7 @@ def stream_click_attribution(
             F.col("user_id").alias("p_user"),
             F.col("event_id").alias("purchase_id"),
             F.col("ts").alias("purchase_ts"),
-            F.col("value").cast("double").alias("amount"),
+            F.col("value").alias("amount"),
         )
         .withWatermark("purchase_ts", watermark)
     )

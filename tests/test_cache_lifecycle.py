@@ -3,10 +3,14 @@
 Contract: caches registered by a query live until the next registry
 entry, and every entry releases them — a re-entry of the SAME query
 too, so a best-of-N loop times the query's own persisted stages on
-every run instead of re-reading run 1's blocks.
+every run instead of re-reading run 1's blocks. Work directories from
+``scoped_tempdir`` share the contract.
 """
 
 from __future__ import annotations
+
+import os
+import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -76,3 +80,16 @@ def test_release_caches_drains_and_resets(spark, _clean_registry):
     df2.count()
     assert df2.is_cached
     Q.release_caches()
+
+
+def test_stream_queries_leave_no_directory(spark, sf_dir, tmp_path, monkeypatch):
+    """The streaming queries' work directories (the rollup's sink and
+    checkpoint, the bot-detection parquet sink) live until the next
+    registry entry: after release_caches the temp dir is empty."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    registry = Q.load_all()
+    for name in ("t_stream_tumbling", "t_stream_continuous_agg", "t_stream_bot_detection"):
+        assert registry[name].spark_fn(spark, sf_dir).count() > 0
+    assert os.listdir(tmp_path), "the bot-detection sink is live until the next entry"
+    Q.release_caches()
+    assert os.listdir(tmp_path) == []

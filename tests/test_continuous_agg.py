@@ -5,6 +5,7 @@ import os
 
 import pyspark.sql.functions as F
 
+from odc_stac_spark.queries.temporal import _await_stream
 from odc_stac_spark.sources.tables import load_table
 from odc_stac_spark.streaming.continuous import (
     _rollup,
@@ -52,8 +53,7 @@ def test_stream_equals_batch(spark, tmp_path):
         .parquet(in_dir)
     )
     agg = str(tmp_path / "agg")
-    q = continuous_aggregate(spark, stream, agg, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    _await_stream(continuous_aggregate(spark, stream, agg, str(tmp_path / "ckpt")), 120)
 
     got = _norm(read_continuous(spark, agg).collect())
     want = _norm(_rollup(ev).collect())
@@ -78,7 +78,7 @@ def test_serving_with_unmaterialized_tail(spark, tmp_path):
         .parquet(in_dir)
     )
     agg = str(tmp_path / "agg")
-    continuous_aggregate(spark, stream, agg, str(tmp_path / "ckpt")).awaitTermination(120)
+    _await_stream(continuous_aggregate(spark, stream, agg, str(tmp_path / "ckpt")), 120)
 
     got = _norm(serve_with_tail(spark, agg, tail).collect())
     want = _norm(_rollup(ev).collect())
@@ -125,7 +125,7 @@ def test_daily_rollup_composes_from_partials(spark, tmp_path):
         .parquet(in_dir)
     )
     agg = str(tmp_path / "agg")
-    continuous_aggregate(spark, stream, agg, str(tmp_path / "ckpt")).awaitTermination(120)
+    _await_stream(continuous_aggregate(spark, stream, agg, str(tmp_path / "ckpt")), 120)
 
     got = sorted(
         (r.day, r.event_type, r.n, round(r.value_sum, 6))

@@ -10,6 +10,7 @@ import shutil
 import pyspark.sql.functions as F
 import pytest
 
+from odc_stac_spark.queries.temporal import _await_stream
 from odc_stac_spark.sources.tables import load_table
 from odc_stac_spark.streaming.dedup import (
     build_minhash_index,
@@ -73,7 +74,7 @@ def test_stream_equals_batch(spark, corpus, tmp_path):
     q = stream_dedup_minhash(
         spark, stream, idx_stream, out_dir, str(tmp_path / "ckpt")
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
 
     got = {
         (r.doc_id, r.dup_of, r.jaccard)

@@ -14,6 +14,7 @@ import pytest
 
 import pyspark.sql.functions as F
 
+from odc_stac_spark.queries.temporal import _await_stream, _stream_to_table
 from odc_stac_spark.sources.tables import load_table
 from odc_stac_spark.streaming import (
     infer_collections_stateful,
@@ -26,18 +27,6 @@ from odc_stac_spark.streaming import (
 from odc_stac_spark.streaming.events import ASSET_STREAM_SCHEMA
 
 
-def _run_stream_to_memory(q_df, name, mode="update"):
-    q = (
-        q_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
-
-
 def test_stream_tumbling_matches_batch(spark, sf_dir, tmp_path):
     # stage the real events table as a stream input dir in two chunks
     ev = load_table(spark, sf_dir, "events")
@@ -47,10 +36,8 @@ def test_stream_tumbling_matches_batch(spark, sf_dir, tmp_path):
 
     stream = spark.readStream.schema(ev.schema).parquet(in_dir)
     agg = stream_tumbling_counts(stream)
-    _run_stream_to_memory(agg, "tumbling_counts", mode="append")
-
     got = (
-        spark.sql("SELECT * FROM tumbling_counts")
+        _stream_to_table(spark, "tumbling_counts", agg, "append")
         .groupBy("window_start", "event_type")
         .agg(F.sum("n_events").alias("n_events"))
     )
@@ -71,19 +58,40 @@ def test_stream_tumbling_matches_batch(spark, sf_dir, tmp_path):
 def test_events_stream_instants_ignore_session_time_zone(spark, sf_dir):
     """The registry's events stream normalizes ``ts`` through the batch
     path's helper, so a non-UTC session reads the batch path's instants."""
-    from odc_stac_spark.queries.temporal import _stage_events_stream
-
     us = F.unix_micros("ts").alias("us")
     want = sorted(r.us for r in load_table(spark, sf_dir, "events").select(us).collect())
     tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
     try:
-        stream = _stage_events_stream(spark, sf_dir, "events_tz_").select(us)
-        _run_stream_to_memory(stream, "events_tz", mode="append")
-        got = sorted(r.us for r in spark.table("events_tz").collect())
+        stream = stream_events(spark, sf_dir).select(us)
+        got = _stream_to_table(spark, "events_tz", stream, "append")
+        got = sorted(r.us for r in got.collect())
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
     assert got == want
+
+
+@pytest.mark.parametrize("layout", ["file", "file_beside_dir_table", "spark_dir"])
+def test_stream_events_rows_equal_load_table(spark, sf_dir, tmp_path, layout):
+    """stream_events streams exactly load_table's rows from each events
+    layout: the fixture's single file, that file in a directory that also
+    holds a Spark-written directory table, and a Spark-written multi-part
+    directory."""
+    d = str(tmp_path)
+    if layout == "file":
+        d = sf_dir
+    elif layout == "file_beside_dir_table":
+        shutil.copyfile(os.path.join(sf_dir, "events.parquet"), os.path.join(d, "events.parquet"))
+        load_table(spark, sf_dir, "orders").write.parquet(os.path.join(d, "orders.parquet"))
+    else:
+        src = os.path.join(d, "events.parquet")
+        load_table(spark, sf_dir, "events").repartition(3).write.parquet(src)
+        assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 3
+    want = load_table(spark, d, "events")
+    got = _stream_to_table(spark, "events_layout", stream_events(spark, d), "append")
+    assert got.count() == want.count() == load_table(spark, sf_dir, "events").count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_stream_dedup_drops_watermark_window_duplicates(spark, sf_dir, tmp_path):
@@ -96,8 +104,7 @@ def test_stream_dedup_drops_watermark_window_duplicates(spark, sf_dir, tmp_path)
 
     stream = spark.readStream.schema(ev.schema).parquet(in_dir)
     out = stream_dedup(stream)
-    _run_stream_to_memory(out, "deduped", mode="append")
-    got = spark.sql("SELECT event_id FROM deduped")
+    got = _stream_to_table(spark, "deduped", out, "append").select("event_id")
     assert got.count() == 500
     assert got.distinct().count() == 500
 
@@ -111,10 +118,9 @@ def test_stream_click_attribution_matches_batch_interval_join(spark, sf_dir, tmp
 
     stream = spark.readStream.schema(ev.schema).parquet(in_dir)
     out = stream_click_attribution(stream)
-    _run_stream_to_memory(out, "attributed", mode="append")
     got = {
         (r.click_id, r.purchase_id)
-        for r in spark.sql("SELECT click_id, purchase_id FROM attributed").collect()
+        for r in _stream_to_table(spark, "attributed", out, "append").collect()
     }
 
     c = ev.where("event_type = 'click'").select(
@@ -146,10 +152,9 @@ def test_stream_session_windows_match_batch(spark, sf_dir, tmp_path):
 
     stream = spark.readStream.schema(ev.schema).parquet(in_dir)
     out = stream_session_windows(stream)
-    _run_stream_to_memory(out, "sessions", mode="append")
     got = {
         (r.session_start, r.session_end, r.user_id): r.n_events
-        for r in spark.sql("SELECT * FROM sessions").collect()
+        for r in _stream_to_table(spark, "sessions", out, "append").collect()
     }
 
     want_df = (
@@ -195,7 +200,7 @@ def test_stateful_schema_inference_evolves(spark, tmp_path):
         "maxFilesPerTrigger", "1"
     ).parquet(str(in_dir))
     out = infer_collections_stateful(stream)
-    _run_stream_to_memory(out, "schema_updates", mode="update")
+    _stream_to_table(spark, "schema_updates", out, "update")
 
     rows = spark.sql(
         "SELECT * FROM schema_updates ORDER BY collection, n_assets"
@@ -268,7 +273,7 @@ def test_stream_stac_items_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = spark.read.parquet(str(out))
     from odc_stac_spark.sources.stac_items import stac_json_to_items
 
@@ -329,7 +334,7 @@ def test_stream_load_tiles_incremental_equals_batch(spark, tmp_path):
         q = stream_load_tiles(
             spark, str(in_dir), out, ckpt, geobox=gbox, chunks=(64, 64), groupby="time"
         )
-        q.awaitTermination(240)
+        _await_stream(q, 240)
 
     # batch 1: two scenes arrive
     (in_dir / "b1.ndjson").write_text("\n".join(json.dumps(d) for d in docs[:2]))
@@ -402,7 +407,7 @@ def test_compact_cube_merges_late_scene(spark, tmp_path):
         q = stream_load_tiles(
             spark, str(in_dir), out, ckpt, geobox=gbox, chunks=(64, 64), groupby="time"
         )
-        q.awaitTermination(240)
+        _await_stream(q, 240)
 
     (in_dir / "b1.ndjson").write_text(json.dumps(docs[0]))
     run()
@@ -462,14 +467,14 @@ def test_stream_load_tiles_pins_grid_across_restarts(spark, tmp_path):
     q = stream_load_tiles(
         spark, str(in_dir), out, ckpt, geobox=gbox, chunks=(64, 64), groupby="time"
     )
-    q.awaitTermination(240)
+    _await_stream(q, 240)
     assert os.path.exists(os.path.join(out, "_grid.json"))
 
     # same grid: restart is fine
     q = stream_load_tiles(
         spark, str(in_dir), out, ckpt, geobox=gbox, chunks=(64, 64), groupby="time"
     )
-    q.awaitTermination(240)
+    _await_stream(q, 240)
 
     # different chunking: refused before the stream starts
     with _pytest.raises(ValueError, match="different grid"):
@@ -551,7 +556,7 @@ def test_stream_load_tiles_cross_crs_equals_batch(spark, tmp_path):
             spark, str(in_dir), out, ckpt, geobox=gbox, chunks=(64, 64),
             groupby="time", cfg=cfg,
         )
-        q.awaitTermination(240)
+        _await_stream(q, 240)
 
     (in_dir / "b1.ndjson").write_text("\n".join(json.dumps(d) for d in docs[:2]))
     run_available_now()
