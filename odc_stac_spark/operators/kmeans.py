@@ -47,11 +47,28 @@ from pyspark.sql.types import StructType
 from ..session import literal_df
 
 
-def _norm_sql(a: str) -> str:
+def dot_sql(a: str, b: str) -> str:
+    """Dot product of two array expressions as SQL text: the sequential
+    float64 left fold of the oracles' ``list_dot_product(a, b)``. Every
+    cosine of the similarity family is this fold; ``aggregate`` and
+    ``zip_with`` lambdas are interpreted, not whole-stage-codegen'd, but
+    one SQL text is one parser call however many columns use it."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (s, x) -> s + x)"
+
+
+def norm_sql(a: str) -> str:
     """L2 norm of an array expression as SQL text: the sequential float64
-    fold of the oracles' ``sqrt(list_dot_product(v, v))``, so a centroid
-    norm computed once has the bits of one computed per row."""
+    fold of the oracles' ``sqrt(list_dot_product(v, v))``, so a norm
+    computed once (a centroid's, or one hoisted out of a pair join) has
+    the bits of one computed per row."""
     return f"sqrt(aggregate({a}, 0D, (s, x) -> s + x * x))"
+
+
+def cos_sql(a: str, b: str, na: str = "", nb: str = "") -> str:
+    """Cosine of two array expressions as SQL text,
+    ``dot / (norm(a) * norm(b))`` — the oracles' operation order. ``na``
+    and ``nb`` name norms computed earlier with :func:`norm_sql`."""
+    return f"{dot_sql(a, b)} / ({na or norm_sql(a)} * {nb or norm_sql(b)})"
 
 
 def centroid_array(cent: DataFrame) -> DataFrame:
@@ -64,7 +81,7 @@ def centroid_array(cent: DataFrame) -> DataFrame:
     as plan literals folded into every build. The centroid norm ``cnrm``
     is computed here once per centroid instead of once per (row,
     centroid) pair; it is the same fold, so the same bits."""
-    c = f"named_struct('cent_id', cent_id, 'cemb', cemb, 'cnrm', {_norm_sql('cemb')})"
+    c = f"named_struct('cent_id', cent_id, 'cemb', cemb, 'cnrm', {norm_sql('cemb')})"
     return cent.selectExpr(f"array_sort(collect_list({c})) AS carr")
 
 
@@ -86,11 +103,9 @@ def assign_to_centroids(
     whatever the centroid values, so Lloyd iterations reuse codegen.
     ``sim`` is the exact ``dot / (row_norm * cnrm)`` the oracles compute:
     negation is exact."""
-    dot = "aggregate(zip_with(emb, c.cemb, (x, y) -> x * y), 0D, (s, x) -> s + x)"
-    cos = f"{dot} / ({_norm_sql('emb')} * c.cnrm)"
     ranked = (
         f"array_sort(transform(carr, c -> named_struct("
-        f"'negsim', -({cos}), 'cent_id', c.cent_id)))"
+        f"'negsim', -({cos_sql('emb', 'c.cemb', nb='c.cnrm')}), 'cent_id', c.cent_id)))"
     )
     cols = ["vec_id", "emb", "best.cent_id AS cent_id"] + (["-best.negsim AS sim"] if keep_sim else [])
     return (

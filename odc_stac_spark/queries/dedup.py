@@ -347,6 +347,15 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_verified_pairs(sharr)
 
 
+def jaccard_sql(a: str, b: str) -> str:
+    """Exact Jaccard of two shingle-array expressions as SQL text:
+    shingles are distinct per doc, so |a ∩ b| / |a ∪ b| is
+    ``array_intersect`` over the two rows — the verify stage of every
+    MinHash-LSH dedup (batch, incremental and streaming)."""
+    shared = f"size(array_intersect({a}, {b}))"
+    return f"{shared} * 1.0D / (size({a}) + size({b}) - {shared})"
+
+
 def _lsh_verified_pairs(sharr: DataFrame) -> DataFrame:
     """(doc_id, shingles) → verified near-dup pairs (doc_a, doc_b,
     jaccard >= JACCARD_THRESHOLD) via MinHash signatures → LSH band
@@ -387,9 +396,8 @@ def _lsh_verified_pairs(sharr: DataFrame) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # exact-Jaccard verify straight off the persisted shingle ARRAYS:
-    # shingles are distinct per doc, so |intersection| / |union| is
-    # array_intersect on the two rows. The candidate set is tiny relative
+    # exact-Jaccard verify straight off the persisted shingle ARRAYS
+    # (jaccard_sql). The candidate set is tiny relative
     # to the corpus, so both joins broadcast the candidate side (AQE) and
     # the full shingle table is never exploded or shuffled — at 100 TB
     # the old explode-join re-shuffled EVERY doc's shingles by value to
@@ -397,8 +405,7 @@ def _lsh_verified_pairs(sharr: DataFrame) -> DataFrame:
     # candidate count instead.
     A = sharr.selectExpr("doc_id AS doc_a", "shingles AS sh_a")
     B = sharr.selectExpr("doc_id AS doc_b", "shingles AS sh_b")
-    shared = "size(array_intersect(sh_a, sh_b))"
-    jac = f"{shared} * 1.0D / (size(sh_a) + size(sh_b) - {shared})"
+    jac = jaccard_sql("sh_a", "sh_b")
     return (
         cand.join(A, "doc_a")
         .join(B, "doc_b")
@@ -677,13 +684,12 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_new", "doc_old")
         .distinct()
     )
-    A = sharr.select(F.col("doc_id").alias("doc_new"), F.col("shingles").alias("sh_a"))
-    B = sharr.select(F.col("doc_id").alias("doc_old"), F.col("shingles").alias("sh_b"))
-    ver = cand.join(A, "doc_new").join(B, "doc_old")
-    shared = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = shared * 1.0 / (F.size("sh_a") + F.size("sh_b") - shared)
+    A = sharr.selectExpr("doc_id AS doc_new", "shingles AS sh_a")
+    B = sharr.selectExpr("doc_id AS doc_old", "shingles AS sh_b")
     verdict = (
-        ver.where(jac >= JACCARD_THRESHOLD)
+        cand.join(A, "doc_new")
+        .join(B, "doc_old")
+        .where(f"{jaccard_sql('sh_a', 'sh_b')} >= {sql_literal(JACCARD_THRESHOLD)}")
         .groupBy("doc_new")
         .agg(F.min("doc_old").alias("dup_of"))
     )

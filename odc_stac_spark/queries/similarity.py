@@ -1,8 +1,10 @@
 """Similarity search over embedding columns (``array<float>``).
 
 - brute-force cosine top-k: the correctness baseline. Queries are tiny →
-  broadcast; the scan side streams once. Dot products run JVM-side via
-  ``zip_with``/``aggregate`` in whole-stage codegen (no Python).
+  broadcast; the scan side streams once. Every cosine is one SQL text
+  (``operators/kmeans.cos_sql``): a JVM-side ``zip_with``/``aggregate``
+  fold — interpreted lambdas, not whole-stage codegen, but no Python and
+  one parser call per column. Every per-key top-k is :func:`_top_k`.
 - IVF-style ANN (see :func:`ann_ivf_topk`): coarse-quantize every vector to
   its nearest of K centroids (one broadcast join), probe only the
   ``NPROBE`` closest clusters per query. At 100 TB this turns a full scan
@@ -27,7 +29,9 @@ from ..operators.kmeans import (
     assign_to_centroids,
     centroid_array,
     centroids_df,
+    cos_sql,
     kmeans_fit,
+    norm_sql,
 )
 from ..session import sql_literal
 from ..sources.tables import load_table
@@ -45,12 +49,18 @@ def _vecd(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+def _top_k(df: DataFrame, key: str, score: str, id_col: str, k: int) -> DataFrame:
+    """``df`` plus ``rn``, keeping the top ``k`` rows per ``key`` by
+    (``score`` DESC, ``id_col`` ASC) — the oracles' ROW_NUMBER order, so
+    tied scores keep the lower id and a key with fewer than ``k`` rows
+    keeps them all.
 
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+    The rank window with an ``rn <= k`` filter is the whole operator:
+    Spark 4's InferWindowGroupLimit plants a partial WindowGroupLimit
+    below the window's exchange, so the shuffle carries at most
+    partitions × keys × k rows, with no Python stage."""
+    w = f"row_number() OVER (PARTITION BY {key} ORDER BY {score} DESC, {id_col} ASC) AS rn"
+    return df.selectExpr("*", w).where(f"rn <= {int(k)}")
 
 
 @register(
@@ -78,37 +88,26 @@ def _norm(a):
 )
 def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    e = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("eemb"))
-    cos = _dot(F.col("qemb"), F.col("eemb")) / (_norm(F.col("qemb")) * _norm(F.col("eemb")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
+    q = emb.where(f"vec_id < {N_QUERIES}").selectExpr("vec_id AS query_id", "emb AS qemb")
+    e = emb.selectExpr("vec_id AS neighbor_id", "emb AS eemb")
     scored = (
         F.broadcast(q)
         .crossJoin(e)
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos_raw"))
+        .where("neighbor_id != query_id")
+        .selectExpr("query_id", "neighbor_id", f"{cos_sql('qemb', 'eemb')} AS cos_raw")
     )
-    # top-k via the plain rank window: Spark 4's InferWindowGroupLimit
-    # plants a PARTIAL WindowGroupLimit below the exchange, so the
-    # shuffle carries ≤ partitions × queries × k rows — the same bound
-    # the old two-stage mapInPandas pre-top-k enforced, now pure JVM
-    # (r16: the Python stage cost a worker round-trip per run and was
-    # REDUNDANT under WindowGroupLimit; removing it drops the
-    # MapInPandas node from the plan with identical results)
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cos"), "rn")
+    return _top_k(scored, "query_id", "cos_raw", "neighbor_id", TOP_K).selectExpr(
+        "query_id", "neighbor_id", "round(cos_raw, 6) AS cos", "rn"
     )
 
 
 NEARDUP_NPROBE = 4  # multi-assignment width for near-dup blocking
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, emb double[]) with compute-sized partitioning: the
+def _emb(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """(vec_id, *cols, emb double[]) — ``cols`` are further embeddings
+    columns carried as they are, e.g. ``label`` — with compute-sized
+    partitioning: the
     embeddings fixture is one row group, so the scan is ONE partition and
     every interpreted-HOF scoring pass (cosine/L2 folds, LSH signatures)
     downstream would serialize on one core — the pre-r13 window-based
@@ -125,9 +124,9 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raw vectors either way
     return (
         load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
+        .select("vec_id", *cols, "embedding")
         .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", _vecd(F.col("embedding")).alias("emb"))
+        .select("vec_id", *cols, _vecd(F.col("embedding")).alias("emb"))
     )
 
 
@@ -135,6 +134,48 @@ def _first_cents(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     """The fixed coarse quantizer: the first ``k`` vectors by id as
     ``(cent_id, cemb)`` centroids — the oracles' ``cent`` CTE."""
     return emb.where(f"vec_id < {int(k)}").selectExpr("vec_id AS cent_id", "emb AS cemb")
+
+
+def _cells(emb: DataFrame, k: int) -> DataFrame:
+    """(vec_id, emb, cent_id, nrm), persisted: every vector of ``emb``
+    once per each of its NEARDUP_NPROBE nearest of the first ``k``
+    vectors (:func:`_first_cents`), the blocking of the near-dup family.
+
+    ``nrm`` is the vector's norm, computed once per assignment row and
+    carried through the cent_id self-join of :func:`_cell_pairs`:
+    recomputing it per PAIR tripled the per-pair fold work, and the
+    unpersisted multi-assign subtree ran once per join side (together:
+    28.5 → 1.6 s warm at sf0.1)."""
+    assigned = assign_to_centroids(emb, _first_cents(emb, k), NEARDUP_NPROBE)
+    return scoped_persist(assigned.selectExpr("*", f"{norm_sql('emb')} AS nrm"))
+
+
+def _cell_pairs(cells: DataFrame, a: str, b: str, cond: str) -> DataFrame:
+    """(a, b, cos) for every two rows of :func:`_cells` that share a cell
+    and meet ``cond``: ``a`` and ``b`` name the two sides' vec_id. A pair
+    sharing several cells comes out once per shared cell. ``na * nb``
+    keeps the oracles' multiplication order, so cosines are
+    bit-identical to per-pair norms."""
+    x = cells.selectExpr("cent_id", f"vec_id AS {a}", "emb AS ea", "nrm AS na")
+    y = cells.selectExpr("cent_id", f"vec_id AS {b}", "emb AS eb", "nrm AS nb")
+    return (
+        x.join(y, ["cent_id"])
+        .where(cond)
+        .selectExpr(a, b, f"{cos_sql('ea', 'eb', 'na', 'nb')} AS cos")
+    )
+
+
+def _neardup_pairs(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """(vec_a, vec_b, cos): pairs sharing one of their NEARDUP_NPROBE
+    nearest of ``k`` cells with cosine >= NEARDUP_COS."""
+    pairs = _cell_pairs(_cells(_emb(spark, sf_dir), k), "vec_a", "vec_b", "vec_a < vec_b")
+    # a pair can share several cells; cos is deterministic so the
+    # duplicate rows are identical — dedup after the cheap filter
+    return (
+        pairs.where(f"cos >= {sql_literal(NEARDUP_COS)}")
+        .selectExpr("vec_a", "vec_b", "round(cos, 6) AS cos")
+        .distinct()
+    )
 
 
 @register(
@@ -174,40 +215,7 @@ def _first_cents(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     tags=("similarity", "dedup"),
 )
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    # norms are computed ONCE per assignment row and carried through the
-    # self-join — recomputing _norm per PAIR tripled the per-pair fold
-    # work, and the unpersisted multi-assign window subtree ran once per
-    # join side (together: 28.5 → 1.6 s warm at sf0.1). na*nb keeps the
-    # exact multiplication order of the previous inline expression, so
-    # rounded cosines are bit-identical.
-    assigned = assign_to_centroids(emb, _first_cents(emb), NEARDUP_NPROBE).withColumn(
-        "nrm", _norm(F.col("emb"))
-    )
-    assigned = scoped_persist(assigned)
-    a = assigned.select(
-        "cent_id",
-        F.col("vec_id").alias("vec_a"),
-        F.col("emb").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = assigned.select(
-        "cent_id",
-        F.col("vec_id").alias("vec_b"),
-        F.col("emb").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    return (
-        a.join(b, ["cent_id"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", cos.alias("cos_raw"))
-        .where(F.col("cos_raw") >= NEARDUP_COS)
-        # a pair can share several cells; cos is deterministic so the
-        # duplicate rows are identical — dedup after the cheap filter
-        .select("vec_a", "vec_b", F.round("cos_raw", 6).alias("cos"))
-        .distinct()
-    )
+    return _neardup_pairs(spark, sf_dir, IVF_K)
 
 
 # production blocking rule (quantified by the r13 10×-scale probe: fixed
@@ -271,33 +279,7 @@ def embedding_neardup_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded driver scalar (row count only — parquet-footer cheap); the
     # raw table is counted so the compute repartition isn't triggered
     n = load_table(spark, sf_dir, "embeddings").count()
-    k = _neardup_k(n)
-    emb = _emb(spark, sf_dir)
-    assigned = assign_to_centroids(emb, _first_cents(emb, k), NEARDUP_NPROBE).withColumn(
-        "nrm", _norm(F.col("emb"))
-    )
-    assigned = scoped_persist(assigned)
-    a = assigned.select(
-        "cent_id",
-        F.col("vec_id").alias("vec_a"),
-        F.col("emb").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = assigned.select(
-        "cent_id",
-        F.col("vec_id").alias("vec_b"),
-        F.col("emb").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    return (
-        a.join(b, ["cent_id"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", cos.alias("cos_raw"))
-        .where(F.col("cos_raw") >= NEARDUP_COS)
-        .select("vec_a", "vec_b", F.round("cos_raw", 6).alias("cos"))
-        .distinct()
-    )
+    return _neardup_pairs(spark, sf_dir, _neardup_k(n))
 
 
 SEMDEDUP_COS = 0.45  # duplicate threshold (synthetic max-cos ≈ 0.51)
@@ -358,39 +340,24 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sim", "cent_sim_raw"
     )
     assigned = scoped_persist(assigned)
-    v = assigned.select(
-        "cent_id",
-        F.col("vec_id").alias("v_id"),
-        F.col("emb").alias("v_emb"),
-        F.col("cent_sim_raw").alias("v_cs"),
-    )
-    u = assigned.select(
-        "cent_id",
-        F.col("vec_id").alias("u_id"),
-        F.col("emb").alias("u_emb"),
-        F.col("cent_sim_raw").alias("u_cs"),
-    )
-    cos = _dot(F.col("u_emb"), F.col("v_emb")) / (_norm(F.col("u_emb")) * _norm(F.col("v_emb")))
+    v = assigned.selectExpr("cent_id", "vec_id AS v_id", "emb AS v_emb", "cent_sim_raw AS v_cs")
+    u = assigned.selectExpr("cent_id", "vec_id AS u_id", "emb AS u_emb", "cent_sim_raw AS u_cs")
     # v is dropped iff some same-cluster duplicate u sits CLOSER to the
     # centroid boundary (u less centroid-similar wins — SemDeDup keeps the
     # most diverse member of each duplicate group)
     dropped = (
         v.join(u, ["cent_id"])
-        .where(F.col("u_id") != F.col("v_id"))
-        .where(cos >= SEMDEDUP_COS)
-        .where(
-            (F.col("u_cs") < F.col("v_cs"))
-            | ((F.col("u_cs") == F.col("v_cs")) & (F.col("u_id") < F.col("v_id")))
-        )
-        .select(F.col("v_id").alias("vec_id"))
+        .where("u_id != v_id")
+        .where(f"{cos_sql('u_emb', 'v_emb')} >= {sql_literal(SEMDEDUP_COS)}")
+        .where("u_cs < v_cs OR (u_cs = v_cs AND u_id < v_id)")
+        .selectExpr("v_id AS vec_id", "true AS is_dropped")
         .distinct()
-        .withColumn("is_dropped", F.lit(True))
     )
-    return assigned.join(dropped, ["vec_id"], "left").select(
+    return assigned.join(dropped, ["vec_id"], "left").selectExpr(
         "vec_id",
         "cent_id",
-        F.round("cent_sim_raw", 6).alias("cent_sim"),
-        F.coalesce(~F.col("is_dropped"), F.lit(True)).alias("kept"),
+        "round(cent_sim_raw, 6) AS cent_sim",
+        "coalesce(NOT is_dropped, true) AS kept",
     )
 
 
@@ -519,36 +486,36 @@ def _ivf_kmeans_oracle(n_iter: int = 3) -> str:
     return "WITH " + ",\n    ".join(ctes) + ",\n    " + _ivf_serve_sql(f"cent{n_iter}")
 
 
-def _ivf_serve_topk(assigned: DataFrame, cent: DataFrame, q: DataFrame) -> DataFrame:
+def _ivf_probes(emb: DataFrame, cent: DataFrame) -> DataFrame:
+    """(query_id, qemb, cent_id): each query vector (vec_id < N_QUERIES)
+    once per each of its IVF_NPROBE nearest centroids.
+
+    The probe is :func:`assign_to_centroids` — the oracles' (sim DESC,
+    cent_id ASC) probe order, map-side, with no exchange. The one order
+    difference is NaN: a zero-norm centroid scores NaN, which ranks FIRST
+    in the oracles' DESC window (Spark and DuckDB order NaN greatest) but
+    last in assign_to_centroids' ascending array_sort of −sim. The corpus
+    side has carried the same difference since the single assigner; the
+    fixtures hold no zero-norm vector (0 of 500 at sf0.001, 0 of 500 at
+    sf0.01, 0 of 2000 at sf0.1)."""
+    q = emb.where(f"vec_id < {N_QUERIES}")
+    return assign_to_centroids(q, cent, IVF_NPROBE).selectExpr(
+        "vec_id AS query_id", "emb AS qemb", "cent_id"
+    )
+
+
+def _ivf_serve_topk(assigned: DataFrame, cent: DataFrame, emb: DataFrame) -> DataFrame:
     """Probe-and-rank stage shared by the from-scratch and from-index IVF
-    paths: per query pick the IVF_NPROBE nearest centroids, exact top-k
-    within the probed cells only."""
-    qsim = _dot(F.col("qemb"), F.col("cemb")) / (_norm(F.col("qemb")) * _norm(F.col("cemb")))
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("qsim"), F.asc("cent_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "qemb", "cent_id", qsim.alias("qsim"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= IVF_NPROBE)
-        .select("query_id", "qemb", "cent_id")
-    )
-    # search only probed clusters
-    cos = _dot(F.col("qemb"), F.col("emb")) / (_norm(F.col("qemb")) * _norm(F.col("emb")))
-    w_top = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
+    paths: per query (:func:`_ivf_probes` of ``emb``) exact top-k within
+    the probed cells of ``assigned`` only."""
     scored = (
-        F.broadcast(probes)
+        F.broadcast(_ivf_probes(emb, cent))
         .join(assigned, "cent_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_raw")
-        )
+        .where("vec_id != query_id")
+        .selectExpr("query_id", "vec_id AS neighbor_id", f"{cos_sql('qemb', 'emb')} AS cos_raw")
     )
-    # rank window only (r16): WindowGroupLimit bounds the exchange
-    # map-side — see knn_bruteforce_cosine
-    return (
-        scored.withColumn("rn", F.row_number().over(w_top))
-        .where(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cos"), "rn")
+    return _top_k(scored, "query_id", "cos_raw", "neighbor_id", TOP_K).selectExpr(
+        "query_id", "neighbor_id", "round(cos_raw, 6) AS cos", "rn"
     )
 
 
@@ -565,10 +532,7 @@ def _ivf_serve_topk(assigned: DataFrame, cent: DataFrame, q: DataFrame) -> DataF
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     cent = _first_cents(emb)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    return _ivf_serve_topk(assign_to_centroids(emb, cent), cent, q)
+    return _ivf_serve_topk(assign_to_centroids(emb, cent), cent, emb)
 
 
 @register(
@@ -600,10 +564,7 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit = emb.where(F.col("vec_id") % KM_FIT_STRIDE == 0)
     cent, _trace = kmeans_fit(fit, IVF_K, n_iter=3)
     cdf = centroids_df(spark, cent)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    return _ivf_serve_topk(assign_to_centroids(emb, cdf), cdf, q)
+    return _ivf_serve_topk(assign_to_centroids(emb, cdf), cdf, emb)
 
 
 LSH_TABLES, LSH_BITS, LSH_DIM = 4, 6, 64
@@ -732,23 +693,10 @@ def _lsh_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, emb, embi): float vectors plus the fixed-point copy used
     for the bucket-bit sign decision (see LSH_FIXED_SCALE) — exact bigint
     dot products, engine-independent."""
-    # compute-sized partitioning: the signature arithmetic would
-    # otherwise run in the scan's single partition (_emb). r17: the
-    # repartition moved BELOW the projection — expressions below the
-    # exchange execute in the 1-task scan stage (measured 1.4-2.0 s
-    # serialized there); the shuffle moves the raw vectors either way
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "vec_id",
-            _vecd(F.col("embedding")).alias("emb"),
-            F.transform(
-                _vecd(F.col("embedding")),
-                lambda x: F.round(x * LSH_FIXED_SCALE).cast("bigint"),
-            ).alias("embi"),
-        )
+    # compute-sized partitioning (_emb): the signature arithmetic runs
+    # above the exchange, not in the scan's single partition
+    return _emb(spark, sf_dir).selectExpr(
+        "vec_id", "emb", f"transform(emb, x -> CAST(round(x * {LSH_FIXED_SCALE}) AS BIGINT)) AS embi"
     )
 
 
@@ -781,25 +729,17 @@ def _lsh_pairs(sigs: DataFrame, vecs: DataFrame) -> DataFrame:
         .distinct()
     )
     # norms once per vector, not per candidate pair (same hoist as
-    # embedding_neardup_pairs; na*nb keeps the original multiplication
-    # order so rounded cosines are bit-identical)
-    vecs = vecs.withColumn("nrm", _norm(F.col("emb")))
-    x = vecs.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("emb").alias("xa"),
-        F.col("nrm").alias("na"),
-    )
-    y = vecs.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("emb").alias("xb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = _dot(F.col("xa"), F.col("xb")) / (F.col("na") * F.col("nb"))
+    # _cells; na*nb keeps the original multiplication order so rounded
+    # cosines are bit-identical)
+    vecs = vecs.selectExpr("vec_id", "emb", f"{norm_sql('emb')} AS nrm")
+    x = vecs.selectExpr("vec_id AS vec_a", "emb AS xa", "nrm AS na")
+    y = vecs.selectExpr("vec_id AS vec_b", "emb AS xb", "nrm AS nb")
     return (
         cand.join(x, "vec_a")
         .join(y, "vec_b")
-        .where(cos >= LSH_COS_MIN)
-        .select("vec_a", "vec_b", F.round(cos, 6).alias("cos"))
+        .selectExpr("vec_a", "vec_b", f"{cos_sql('xa', 'xb', 'na', 'nb')} AS cos")
+        .where(f"cos >= {sql_literal(LSH_COS_MIN)}")
+        .selectExpr("vec_a", "vec_b", "round(cos, 6) AS cos")
     )
 
 
@@ -901,11 +841,7 @@ def ann_ivf_topk_from_index(spark: SparkSession, index_path: str) -> DataFrame:
     stores every vector once)."""
     idx = spark.read.parquet(index_path)  # vec_id, emb, cent_id
     vecs = idx.select("vec_id", "emb")
-    cent = _first_cents(vecs)
-    q = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    return _ivf_serve_topk(idx, cent, q)
+    return _ivf_serve_topk(idx, _first_cents(vecs), vecs)
 
 
 def ann_lsh_pairs_from_index(spark: SparkSession, path: str, table: str) -> DataFrame:
@@ -1213,42 +1149,20 @@ HARDNEG_K = 5  # hardest negatives retained per query
     tags=("similarity", "llm"),
 )
 def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)  # see _emb
-        .select("vec_id", "label", _vecd(F.col("embedding")).alias("emb"))
+    emb = _emb(spark, sf_dir, "label")
+    q = emb.where(f"vec_id < {N_QUERIES}").selectExpr(
+        "vec_id AS query_id", "label AS query_label", "emb AS qemb"
     )
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("emb").alias("qemb"),
-    )
-    e = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("emb").alias("eemb"),
-    )
-    cos = _dot(F.col("qemb"), F.col("eemb")) / (_norm(F.col("qemb")) * _norm(F.col("eemb")))
+    e = emb.selectExpr("vec_id AS neighbor_id", "label AS neighbor_label", "emb AS eemb")
+    pair = ["query_id", "query_label", "neighbor_id", "neighbor_label"]
     scored = (
         F.broadcast(q)
         .crossJoin(e)
-        .where(F.col("neighbor_label") != F.col("query_label"))
-        .select(
-            "query_id", "query_label", "neighbor_id", "neighbor_label",
-            cos.alias("cos_raw"),
-        )
+        .where("neighbor_label != query_label")
+        .selectExpr(*pair, f"{cos_sql('qemb', 'eemb')} AS cos_raw")
     )
-    # rank window only (r16): WindowGroupLimit bounds the exchange
-    # map-side — see knn_bruteforce_cosine
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= HARDNEG_K)
-        .select(
-            "query_id", "query_label", "neighbor_id", "neighbor_label",
-            F.round("cos_raw", 6).alias("cos"), "rn",
-        )
+    return _top_k(scored, "query_id", "cos_raw", "neighbor_id", HARDNEG_K).selectExpr(
+        *pair, "round(cos_raw, 6) AS cos", "rn"
     )
 
 
@@ -1308,48 +1222,31 @@ MRL_SHORTLIST = 20
 )
 def ann_matryoshka_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scoped_persist(_emb(spark, sf_dir))
-    pre = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.slice("emb", 1, MRL_DIM).alias("epre")
-    )
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.slice("emb", 1, MRL_DIM).alias("qpre")
-    )
-    cos16 = _dot(F.col("qpre"), F.col("epre")) / (_norm(F.col("qpre")) * _norm(F.col("epre")))
+    pre = emb.selectExpr("vec_id AS neighbor_id", f"slice(emb, 1, {MRL_DIM}) AS epre")
+    qs = emb.where(f"vec_id < {N_QUERIES}")
+    q = qs.selectExpr("vec_id AS query_id", f"slice(emb, 1, {MRL_DIM}) AS qpre")
     coarse = (
         F.broadcast(q)
         .crossJoin(pre)
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos16.alias("cos16"))
+        .where("neighbor_id != query_id")
+        .selectExpr("query_id", "neighbor_id", f"{cos_sql('qpre', 'epre')} AS cos16")
     )
-    # rank window only (r16): WindowGroupLimit bounds the exchange
-    # map-side — see knn_bruteforce_cosine
-    cw = Window.partitionBy("query_id").orderBy(F.desc("cos16"), F.asc("neighbor_id"))
-    short = (
-        coarse.withColumn("crn", F.row_number().over(cw))
-        .where(F.col("crn") <= MRL_SHORTLIST)
-        .drop("crn")
-    )
+    short = _top_k(coarse, "query_id", "cos16", "neighbor_id", MRL_SHORTLIST).drop("rn")
     # re-rank: fetch FULL vectors for shortlist rows only (the shortlist is
     # queries x MRL_SHORTLIST rows -> broadcast side of both fetch joins)
-    qfull = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    efull = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("eemb"))
-    fullcos = _dot(F.col("qemb"), F.col("eemb")) / (_norm(F.col("qemb")) * _norm(F.col("eemb")))
-    rw = Window.partitionBy("query_id").orderBy(F.desc("cos_full"), F.asc("neighbor_id"))
-    return (
+    qfull = qs.selectExpr("vec_id AS query_id", "emb AS qemb")
+    efull = emb.selectExpr("vec_id AS neighbor_id", "emb AS eemb")
+    full = (
         efull.join(F.broadcast(short), "neighbor_id")
         .join(F.broadcast(qfull), "query_id")
-        .select("query_id", "neighbor_id", "cos16", fullcos.alias("cos_full"))
-        .withColumn("rn", F.row_number().over(rw))
-        .where(F.col("rn") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos16", 6).alias("cos_coarse"),
-            F.round("cos_full", 6).alias("cos"),
-            "rn",
-        )
+        .selectExpr("query_id", "neighbor_id", "cos16", f"{cos_sql('qemb', 'eemb')} AS cos_full")
+    )
+    return _top_k(full, "query_id", "cos_full", "neighbor_id", TOP_K).selectExpr(
+        "query_id",
+        "neighbor_id",
+        "round(cos16, 6) AS cos_coarse",
+        "round(cos_full, 6) AS cos",
+        "rn",
     )
 
 
@@ -1364,6 +1261,17 @@ def ann_matryoshka_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # codes are 4x smaller than float32 (16x vs float64), so the scan reads
 # a quarter of the bytes and SIMD int8 dot products apply.
 SQ8_SCALE_DEN = 127.0
+
+
+def _sq8(df: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, sq8): ``emb``'s SQ8 codes — scale s = max|x| / 127,
+    code = round(x / s) as a long — carried as doubles for the cosine
+    fold (codes are at most 127 in magnitude, so the cast is exact). s
+    is a column of its own first, so the code lambda reads it instead of
+    refolding the vector per element."""
+    return df.selectExpr(
+        *keep, "emb", f"array_max(transform(emb, x -> abs(x))) / {sql_literal(SQ8_SCALE_DEN)} AS s"
+    ).selectExpr(*keep, "transform(emb, x -> CAST(CAST(round(x / s) AS BIGINT) AS DOUBLE)) AS sq8")
 
 
 @register(
@@ -1398,37 +1306,17 @@ SQ8_SCALE_DEN = 127.0
     tags=("similarity",),
 )
 def ann_int8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    scale = F.array_max(F.transform(F.col("emb"), lambda x: F.abs(x))) / F.lit(SQ8_SCALE_DEN)
-    # transform's lambda needs the scale column in scope: compute it first
-    quant = (
-        emb.withColumn("s", scale)
-        .select(
-            "vec_id",
-            F.transform(F.col("emb"), lambda x: F.round(x / F.col("s")).cast("long")).alias(
-                "qi"
-            ),
-        )
-    )
-    qd = F.transform(F.col("qi"), lambda x: x.cast("double"))
-    q = quant.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), qd.alias("qq")
-    )
-    e = quant.select(F.col("vec_id").alias("neighbor_id"), qd.alias("eq"))
-    qcos = _dot(F.col("qq"), F.col("eq")) / (_norm(F.col("qq")) * _norm(F.col("eq")))
+    quant = _sq8(_emb(spark, sf_dir), "vec_id")
+    q = quant.where(f"vec_id < {N_QUERIES}").selectExpr("vec_id AS query_id", "sq8 AS qq")
+    e = quant.selectExpr("vec_id AS neighbor_id", "sq8 AS eq")
     scored = (
         F.broadcast(q)
         .crossJoin(e)
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", qcos.alias("qcos_raw"))
+        .where("neighbor_id != query_id")
+        .selectExpr("query_id", "neighbor_id", f"{cos_sql('qq', 'eq')} AS qcos_raw")
     )
-    # rank window only (r16): WindowGroupLimit bounds the exchange
-    # map-side — see knn_bruteforce_cosine
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("qcos_raw", 6).alias("qcos"), "rn")
+    return _top_k(scored, "query_id", "qcos_raw", "neighbor_id", TOP_K).selectExpr(
+        "query_id", "neighbor_id", "round(qcos_raw, 6) AS qcos", "rn"
     )
 
 
@@ -1460,13 +1348,8 @@ def ann_int8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "llm"),
 )
 def emb_class_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = scoped_persist(
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)  # see _emb
-        .select("vec_id", "label", _vecd(F.col("embedding")).alias("v"))
-    )
-    dims = emb.select("label", F.posexplode("v").alias("idx", "x"))
+    emb = scoped_persist(_emb(spark, sf_dir, "label"))
+    dims = emb.select("label", F.posexplode("emb").alias("idx", "x"))
     cent = (
         dims.groupBy("label", "idx")
         .agg(F.avg("x").alias("avgx"))
@@ -1477,7 +1360,7 @@ def emb_class_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c")
         )
     )
-    cos = _dot(F.col("v"), F.col("c")) / (_norm(F.col("v")) * _norm(F.col("c")))
+    cos = F.expr(cos_sql("emb", "c"))
     return (
         emb.join(F.broadcast(cent), "label")
         .groupBy("label")
@@ -1536,50 +1419,17 @@ def emb_class_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scoped_persist(_emb(spark, sf_dir))
     cent = _first_cents(emb)
-    assigned = assign_to_centroids(emb, cent)  # (vec_id, emb, cent_id)
-    scale = F.array_max(F.transform(F.col("emb"), lambda x: F.abs(x))) / F.lit(
-        SQ8_SCALE_DEN
-    )
-    codes = (
-        assigned.withColumn("s", scale)
-        .select(
-            "vec_id",
-            "cent_id",
-            F.transform(F.col("emb"), lambda x: F.round(x / F.col("s")).cast("long")).alias(
-                "qi"
-            ),
-        )
-    )
-    qd = F.transform(F.col("qi"), lambda x: x.cast("double"))
-    qfull = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    qsim = _dot(F.col("qemb"), F.col("cemb")) / (_norm(F.col("qemb")) * _norm(F.col("cemb")))
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("qsim"), F.asc("cent_id"))
-    probes = (
-        qfull.crossJoin(F.broadcast(cent))
-        .select("query_id", "cent_id", qsim.alias("qsim"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= IVF_NPROBE)
-        .select("query_id", "cent_id")
-    )
-    qq = codes.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), qd.alias("qq")
-    )
-    qcos = _dot(F.col("qq"), F.col("nq")) / (_norm(F.col("qq")) * _norm(F.col("nq")))
-    w_top = Window.partitionBy("query_id").orderBy(F.desc("qcos_raw"), F.asc("neighbor_id"))
+    codes = _sq8(assign_to_centroids(emb, cent), "vec_id", "cent_id")
+    probes = _ivf_probes(emb, cent).select("query_id", "cent_id")
+    qq = codes.where(f"vec_id < {N_QUERIES}").selectExpr("vec_id AS query_id", "sq8 AS qq")
     scored = (
         F.broadcast(probes.join(qq, "query_id"))
-        .join(codes.select("cent_id", F.col("vec_id").alias("neighbor_id"), qd.alias("nq")), "cent_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", qcos.alias("qcos_raw"))
+        .join(codes.selectExpr("cent_id", "vec_id AS neighbor_id", "sq8 AS nq"), "cent_id")
+        .where("neighbor_id != query_id")
+        .selectExpr("query_id", "neighbor_id", f"{cos_sql('qq', 'nq')} AS qcos_raw")
     )
-    # rank window only (r16): WindowGroupLimit bounds the exchange
-    # map-side — see knn_bruteforce_cosine
-    return (
-        scored.withColumn("rn", F.row_number().over(w_top))
-        .where(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("qcos_raw", 6).alias("qcos"), "rn")
+    return _top_k(scored, "query_id", "qcos_raw", "neighbor_id", TOP_K).selectExpr(
+        "query_id", "neighbor_id", "round(qcos_raw, 6) AS qcos", "rn"
     )
 
 
@@ -1661,10 +1511,10 @@ def emb_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _vecd(F.col("embedding")).alias("v")
     )
-    nrm = _norm(F.col("v"))
-    vsum = F.aggregate(F.col("v"), F.lit(0.0), lambda a, x: a + x)
-    base = emb.select(
-        nrm.alias("nrm"), F.size("v").alias("dim"), F.isnan(vsum).alias("has_nan")
+    base = emb.selectExpr(
+        f"{norm_sql('v')} AS nrm",
+        "size(v) AS dim",
+        "isnan(aggregate(v, 0D, (a, x) -> a + x)) AS has_nan",
     )
     return base.agg(
         F.count(F.lit(1)).alias("n_vectors"),
@@ -1742,31 +1592,18 @@ KNN_PROBE_STRIDE = 10  # label-consistency probes = vec_id % 10 == 0 sample
     tags=("similarity", "quality", "llm"),
 )
 def emb_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = scoped_persist(
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)  # see _emb
-        .select("vec_id", "label", _vecd(F.col("embedding")).alias("v"))
+    emb = scoped_persist(_emb(spark, sf_dir, "label"))
+    q = emb.where(f"vec_id % {KNN_PROBE_STRIDE} = 0").selectExpr(
+        "vec_id AS qid", "label AS qlabel", "emb AS qv"
     )
-    q = emb.where(F.col("vec_id") % KNN_PROBE_STRIDE == 0).select(
-        F.col("vec_id").alias("qid"), F.col("label").alias("qlabel"), F.col("v").alias("qv")
-    )
-    n = emb.select(
-        F.col("vec_id").alias("nid"), F.col("label").alias("nlabel"), F.col("v").alias("nv")
-    )
-    cos = _dot(F.col("qv"), F.col("nv")) / (_norm(F.col("qv")) * _norm(F.col("nv")))
+    n = emb.selectExpr("vec_id AS nid", "label AS nlabel", "emb AS nv")
     scored = (
         F.broadcast(q)
         .crossJoin(n)
-        .where(F.col("nid") != F.col("qid"))
-        .select("qid", "qlabel", "nlabel", cos.alias("cos_raw"), "nid")
+        .where("nid != qid")
+        .selectExpr("qid", "qlabel", "nlabel", f"{cos_sql('qv', 'nv')} AS cos_raw", "nid")
     )
-    # rank window only (r16): WindowGroupLimit bounds the exchange
-    # map-side — see knn_bruteforce_cosine (rn <= 1 instead of == 1 so
-    # InferWindowGroupLimit recognises the limit; identical rows for
-    # row_number, which is always >= 1)
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_raw"), F.asc("nid"))
-    top1 = scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 1)
+    top1 = _top_k(scored, "qid", "cos_raw", "nid", 1)
     match = (F.col("nlabel") == F.col("qlabel")).cast("long")
     return top1.groupBy(F.col("qlabel").alias("label")).agg(
         F.count(F.lit(1)).alias("n_probes"),
@@ -2248,50 +2085,16 @@ def _mutual_knn_components(spark, sf_dir, tau=None) -> DataFrame:
     from .llm_pipeline import cc_star_contraction
 
     n = load_table(spark, sf_dir, "embeddings").count()
-    k = _neardup_k(n)
     emb = _emb(spark, sf_dir)
-    nz = emb.where(_norm(F.col("emb")) > 0)
-    assigned = scoped_persist(
-        assign_to_centroids(nz, _first_cents(nz, k), NEARDUP_NPROBE).withColumn(
-            "nrm", _norm(F.col("emb"))
-        )
-    )
-    a = assigned.select(
-        "cent_id",
-        F.col("vec_id").alias("u"),
-        F.col("emb").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = assigned.select(
-        "cent_id",
-        F.col("vec_id").alias("v"),
-        F.col("emb").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    keep = ~F.isnan(F.col("cos"))
-    if tau is not None:
-        keep = keep & (F.col("cos") >= F.lit(tau))
+    nz = emb.where(f"{norm_sql('emb')} > 0")
+    keep = "NOT isnan(cos)" + ("" if tau is None else f" AND cos >= {sql_literal(tau)}")
     prs = scoped_persist(
-        a.join(b, ["cent_id"])
-        .where(F.col("u") < F.col("v"))
-        .select("u", "v", cos.alias("cos"))
-        .where(keep)
-        .distinct()
+        _cell_pairs(_cells(nz, _neardup_k(n)), "u", "v", "u < v").where(keep).distinct()
     )
-    sym = prs.select(F.col("u").alias("s"), F.col("v").alias("d"), "cos").unionAll(
-        prs.select(F.col("v").alias("s"), F.col("u").alias("d"), "cos")
+    sym = prs.selectExpr("u AS s", "v AS d", "cos").unionAll(
+        prs.selectExpr("v AS s", "u AS d", "cos")
     )
-    w = Window.partitionBy("s").orderBy(F.desc("cos"), F.asc("d"))
-    # rank window only (r16): WindowGroupLimit bounds the exchange
-    # map-side — see knn_bruteforce_cosine
-    knn = (
-        sym
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= MKNN_K)
-        .select("s", "d")
-    )
-    knn = scoped_persist(knn)
+    knn = scoped_persist(_top_k(sym, "s", "cos", "d", MKNN_K).select("s", "d"))
     rev = knn.select(F.col("d").alias("s"), F.col("s").alias("d"))
     mutual = knn.join(rev, ["s", "d"]).where(F.col("s") < F.col("d"))
     edges = mutual.select(F.col("s").alias("src"), F.col("d").alias("dst")).unionAll(
@@ -2457,40 +2260,24 @@ EMB_INCREMENTAL_NEW_MOD = 20  # vec_id % 20 == 0 -> the 5% "new batch"
 )
 def emb_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "embeddings").count()
-    k = _neardup_k(n)
     emb = _emb(spark, sf_dir)
-    assigned = scoped_persist(
-        assign_to_centroids(emb, _first_cents(emb, k), NEARDUP_NPROBE).withColumn(
-            "nrm", _norm(F.col("emb"))
-        )
+    m = EMB_INCREMENTAL_NEW_MOD
+    pairs = _cell_pairs(
+        _cells(emb, _neardup_k(n)),
+        "vec_new",
+        "vec_old",
+        f"vec_new % {m} = 0 AND vec_old != vec_new AND (vec_old % {m} != 0 OR vec_old < vec_new)",
     )
-    is_new = F.col("vec_id") % EMB_INCREMENTAL_NEW_MOD == 0
-    new = assigned.where(is_new).select(
-        "cent_id",
-        F.col("vec_id").alias("vec_new"),
-        F.col("emb").alias("en"),
-        F.col("nrm").alias("nn"),
-    )
-    old = assigned.select(
-        "cent_id",
-        F.col("vec_id").alias("vec_old"),
-        F.col("emb").alias("eo"),
-        F.col("nrm").alias("no"),
-        (F.col("vec_id") % EMB_INCREMENTAL_NEW_MOD == 0).alias("old_is_new"),
-    )
-    cos = _dot(F.col("en"), F.col("eo")) / (F.col("nn") * F.col("no"))
     verdict = (
-        new.join(old, ["cent_id"])
-        .where(F.col("vec_old") != F.col("vec_new"))
-        .where(~F.col("old_is_new") | (F.col("vec_old") < F.col("vec_new")))
         # zero-norm guard (ADVICE r15): 0/0 = NaN orders GREATEST in both
         # Spark and DuckDB, so an unguarded `cos >= threshold` would flag
         # a zero-norm delta vector as dup_of every cell-mate — mirror the
         # _mutual_knn_components NaN exclusion (oracle: NOT isnan(...))
-        .where(~F.isnan(cos) & (cos >= NEARDUP_COS))
+        pairs.where(f"NOT isnan(cos) AND cos >= {sql_literal(NEARDUP_COS)}")
         .groupBy("vec_new")
         .agg(F.min("vec_old").alias("dup_of"))
     )
+    is_new = F.col("vec_id") % m == 0
     d = emb.select("vec_id").where(is_new)
     return d.join(verdict, d.vec_id == verdict.vec_new, "left").select(
         "vec_id", "dup_of", F.col("dup_of").isNull().cast("int").alias("keep")

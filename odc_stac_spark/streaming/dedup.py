@@ -31,7 +31,6 @@ duplicating (same retry-idempotence pattern as the tile sink).
 from __future__ import annotations
 
 import os
-from typing import Optional
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -39,9 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 from ..queries.dedup import (
     JACCARD_THRESHOLD,
     _minhash_sig,
+    jaccard_sql,
     minhash_bands,
     shingle_arrays,
 )
+from ..session import sql_literal
 
 
 def build_minhash_index(spark: SparkSession, docs: DataFrame, path: str) -> None:
@@ -90,14 +91,12 @@ def match_against_index(
         .select("doc_id", "dup_of")
         .distinct()
     )
-    shared = F.size(F.array_intersect(F.col("shingles"), F.col("old_shingles")))
-    union = F.size("shingles") + F.size("old_shingles") - shared
-    jac = shared / union
+    jac = jaccard_sql("shingles", "old_shingles")
     return (
         cand.join(sharr, "doc_id")
         .join(idx_shingles, "dup_of")
-        .where(jac >= JACCARD_THRESHOLD)
-        .select("doc_id", "dup_of", F.round(jac, 4).alias("jaccard"))
+        .where(f"{jac} >= {sql_literal(JACCARD_THRESHOLD)}")
+        .selectExpr("doc_id", "dup_of", f"round({jac}, 4) AS jaccard")
     )
 
 
@@ -107,10 +106,9 @@ def stream_dedup_minhash(
     index_path: str,
     out_path: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
-    threshold: Optional[float] = None,  # noqa: ARG001 (reserved)
 ):
-    """Continuously dedup a document stream against (and into) the index.
+    """Dedup a document stream against (and into) the index, processing
+    what is available now.
 
     Per micro-batch: match → write matches to ``out_path/batch=<id>``
     (idempotent overwrite on replay) → append the batch's band rows and
@@ -134,9 +132,9 @@ def stream_dedup_minhash(
         )
         batch_df.unpersist()
 
-    writer = docs_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
+    return (
+        docs_stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -3,8 +3,8 @@
 Building a DataFrame in PySpark costs one py4j CALL command per JVM
 method the Python side invokes, so a plan assembled from Column objects
 pays thousands of round trips before Spark runs anything. The STAC
-metadata plane, the catalog planner, the IVF family's centroid
-assignment and the MinHash-LSH chain are written as SQL text to keep
+metadata plane, the catalog planner, the similarity family's cosine
+scoring and top-k ranking and the MinHash-LSH chain are written as SQL text to keep
 that cost small; these budgets pin it. Each budget is the count the
 current code makes, on a fixed 6-item catalog or for a registry query at
 the ``sf_dir`` fixture, and may only go down.
@@ -35,17 +35,26 @@ BUDGETS = {
 #: py4j CALL commands per warm registry build (the call through the
 #: registry wrapper, which also releases the previous call's caches)
 QUERY_BUDGETS = {
-    "ann_ivf_topk": 534,
-    "embedding_neardup_pairs": 331,
-    "dedup_semantic_clusters": 451,
+    "ann_ivf_topk": 109,
+    "embedding_neardup_pairs": 101,
+    "dedup_semantic_clusters": 103,
     "emb_ivf_cell_balance": 169,
-    "ann_ivf_int8_topk": 673,
+    "ann_ivf_int8_topk": 141,
     "ann_ivfpq_topk": 219,
-    "ann_recall_report": 940,
-    "embedding_neardup_adaptive": 339,
+    "ann_recall_report": 254,
+    "embedding_neardup_adaptive": 109,
     "dedup_minhash_lsh": 262,
     "dedup_pipeline_e2e": 527,
     "q5_local_supplier_volume": 241,
+    "knn_bruteforce_cosine": 75,
+    "ann_hard_negatives": 85,
+    "ann_matryoshka_rerank": 108,
+    "ann_int8_quantized_topk": 84,
+    "emb_knn_label_consistency": 152,
+    "emb_mutual_knn_cc": 365,
+    "emb_incremental_neardup": 184,
+    "ann_lsh_hyperplane": 203,
+    "dedup_incremental_lsh": 356,
 }
 
 PROJ = "https://stac-extensions.github.io/projection/v1.1.0/schema.json"

@@ -254,7 +254,7 @@ def test_embedding_neardup_is_blocked_not_allpairs(spark, sf_dir):
 def test_embedding_neardup_recall_vs_bruteforce(spark, sf_dir):
     """At test scale the IVF-blocked near-dup set should recover the
     full brute-force pair set (multi-assignment recall lever)."""
-    from odc_stac_spark.queries.similarity import NEARDUP_COS, _dot, _norm, _vecd
+    from odc_stac_spark.queries.similarity import NEARDUP_COS, _vecd
     from odc_stac_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -262,7 +262,13 @@ def test_embedding_neardup_recall_vs_bruteforce(spark, sf_dir):
     )
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("ea"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("eb"))
-    cos = _dot(F.col("ea"), F.col("eb")) / (_norm(F.col("ea")) * _norm(F.col("eb")))
+    # reference cosine as a Column fold, independent of the query code
+    def sq(v):
+        return F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
+
+    ea, eb = F.col("ea"), F.col("eb")
+    dot = F.aggregate(F.zip_with(ea, eb, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
+    cos = dot / (F.sqrt(sq(ea)) * F.sqrt(sq(eb)))
     brute = set(
         (r.vec_a, r.vec_b)
         for r in a.join(b, F.col("vec_a") < F.col("vec_b"))
@@ -396,14 +402,16 @@ def test_hard_negatives_topk_is_bounded_and_label_filter_mapside(spark, sf_dir):
     top-k (WindowGroupLimit/rank filter inside the scan stage) bounds
     the single ranking exchange to batches x queries x k rows, and the
     label-mismatch filter runs BEFORE any exchange — the scored cross
-    product must never shuffle in full."""
-    plan = _executed_plan(REGISTRY["ann_hard_negatives"].spark_fn(spark, sf_dir))
-    # exactly one row exchange for the final ranking (broadcasts aside)
-    n_exchanges = len(re.findall(r"Exchange (?:hashpartitioning|SinglePartition|rangepartitioning)", plan))
-    assert n_exchanges == 1, plan
-    # the label filter is in the pre-exchange (map) side of the plan
-    pre_exchange = plan.split("Exchange", 1)[1]
-    assert "NOT (neighbor_label" in plan or "neighbor_label" in pre_exchange
+    product must never shuffle in full. knn_bruteforce_cosine, the shape
+    it copies, is held to the same bound with its self-match filter."""
+    for name, col in (("ann_hard_negatives", "neighbor_label"), ("knn_bruteforce_cosine", "neighbor_id")):
+        plan = _executed_plan(REGISTRY[name].spark_fn(spark, sf_dir))
+        # exactly one row exchange for the final ranking (broadcasts aside)
+        n_exchanges = len(re.findall(r"Exchange (?:hashpartitioning|SinglePartition|rangepartitioning)", plan))
+        assert n_exchanges == 1, (name, plan)
+        # the filter is in the pre-exchange (map) side of the plan
+        pre_exchange = plan.split("Exchange", 1)[1]
+        assert f"NOT ({col}" in plan or col in pre_exchange, (name, plan)
 
 
 def test_media_generators_partition_by_cores(spark, sf_dir):

@@ -17,6 +17,16 @@ from odc_stac_spark.queries.similarity import (
 )
 
 
+def _sq(v):
+    return F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
+
+
+def _cos(a, b):
+    """Reference cosine as a Column fold, independent of the query code."""
+    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
+    return dot / (F.sqrt(_sq(a)) * F.sqrt(_sq(b)))
+
+
 def test_semdedup_invariants(spark, sf_dir):
     rows = dedup_semantic_clusters(spark, sf_dir).collect()
     by_id = {r.vec_id: r for r in rows}
@@ -33,7 +43,7 @@ def test_semdedup_invariants(spark, sf_dir):
     # duplicate-adjacent) set, the member with the globally minimal
     # centroid similarity is never dropped — verify on a brute-force
     # recomputation of the same-cluster cosine graph
-    from odc_stac_spark.queries.similarity import _dot, _norm, _vecd
+    from odc_stac_spark.queries.similarity import _vecd
     from odc_stac_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -41,7 +51,7 @@ def test_semdedup_invariants(spark, sf_dir):
     )
     a = emb.select(F.col("vec_id").alias("va"), F.col("emb").alias("ea"))
     b = emb.select(F.col("vec_id").alias("vb"), F.col("emb").alias("eb"))
-    cos = _dot(F.col("ea"), F.col("eb")) / (_norm(F.col("ea")) * _norm(F.col("eb")))
+    cos = _cos(F.col("ea"), F.col("eb"))
     pairs = (
         a.crossJoin(b)
         .where(F.col("va") < F.col("vb"))

@@ -70,7 +70,8 @@ PICKS = [
         "knn_bruteforce_cosine",
         "Broadcast queries × scan: the only row exchange is the broadcast "
         "of the 10 query vectors; dot products are JVM higher-order "
-        "aggregates inside the scan stage, and (r16) a PARTIAL "
+        "aggregates (one SQL text, cos_sql) inside the scan stage, and "
+        "(r16) a PARTIAL "
         "WindowGroupLimit below the exchange BOUNDS the ranking window's "
         "input to partitions × queries × k rows instead of the scored "
         "cross product — pure JVM, the former mapInPandas pre-top-k "
@@ -192,8 +193,9 @@ PICKS = [
         "window over cent_id that CAPS every cell at its 4096 "
         "lowest-vec_id members (bounded fold buffers — ADVICE r12) and "
         "one ≤k-group aggregate whose sorted sequential fold makes "
-        "centroids bit-reproducible; the serve tail is broadcast-probes "
-        "+ a WindowGroupLimit-bounded rank window (one exchange, r16).",
+        "centroids bit-reproducible; the serve tail probes with the same "
+        "map-side assignment (no probe window), then broadcast-probes + "
+        "a WindowGroupLimit-bounded rank window (one exchange, r16).",
     ),
     (
         "embedding_neardup_adaptive",
